@@ -32,7 +32,11 @@ from calaveras_uniteus_etl_spark.operators.cleaning import (
     stamp_audit_columns,
 )
 from calaveras_uniteus_etl_spark.operators.phi import hash_phi_fields
-from calaveras_uniteus_etl_spark.operators.upsert import merge_upsert, upsert_stats
+from calaveras_uniteus_etl_spark.operators.upsert import (
+    dedupe_keep_last,
+    merge_upsert,
+    upsert_stats,
+)
 from calaveras_uniteus_etl_spark.schema import TABLE_SCHEMAS, cast_map
 from calaveras_uniteus_etl_spark.sources.delimited import read_delimited
 from calaveras_uniteus_etl_spark.sources.discovery import (
@@ -146,9 +150,9 @@ def ingest_file(
         wh.write(table, merged)
         task.rows_inserted, task.rows_updated = stats.inserted, stats.updated
     else:
-        batch = stamped.drop("_line_no")
-        if keys:
-            batch = batch.dropDuplicates(keys)
+        # keep-last per key on the first load too (SURVEY §7.3)
+        batch = dedupe_keep_last(stamped, keys, "_line_no") if keys else stamped
+        batch = batch.drop("_line_no")
         mode = "append" if wh.exists(table) and not config.upsert else "overwrite"
         wh.write(table, batch, mode=mode)
         task.rows_inserted = batch.count()

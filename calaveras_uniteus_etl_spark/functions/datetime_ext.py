@@ -89,17 +89,3 @@ def julian_day_diff(later: Column | str, earlier: Column | str) -> Column:
     us_a = F.unix_micros(a.cast("timestamp"))
     us_b = F.unix_micros(b.cast("timestamp"))
     return (us_a - us_b) / F.lit(SECONDS_PER_DAY * 1_000_000)
-
-
-def age_years_at(dob: Column | str, as_of: str) -> Column:
-    """Whole years between ``dob`` and an injectable ``as_of`` date.
-
-    The reference computes ages with ``julianday('now')`` (e.g.
-    /root/reference/core/reports/handlers.py:246-252); ``'now'`` is made
-    injectable so engine and oracle agree (SURVEY.md §7.2 determinism).
-    """
-    c = F.col(dob) if isinstance(dob, str) else dob
-    return F.floor(
-        (F.lit(as_of).cast("timestamp").cast("double") - c.cast("double"))
-        / F.lit(SECONDS_PER_DAY * 365.25)
-    )

@@ -1,4 +1,4 @@
-"""Join-based upsert / undo / latest-file load semantics.
+"""Join-based upsert and load undo.
 
 The reference upserts by pulling the full existing-PK list into memory
 and running a per-row UPDATE loop (/root/reference/core/database.py:
@@ -113,19 +113,4 @@ def undo_load(
     c = F.col(loaded_at_col)
     return table_df.filter(
         c.isNull() | (c < F.lit(window_start)) | (c > F.lit(window_end))
-    )
-
-
-def latest_per_group(
-    df: DataFrame, group_cols: list[str], order_col: str, tiebreak_cols: list[str]
-) -> DataFrame:
-    """Keep the newest row per group (reference latest-file-only filter,
-    core/etl_service.py:1293-1306) — window argmax, fully distributed."""
-    w = Window.partitionBy(*group_cols).orderBy(
-        F.desc(order_col), *[F.desc(c) for c in tiebreak_cols]
-    )
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
     )

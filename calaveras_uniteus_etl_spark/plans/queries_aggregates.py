@@ -1233,8 +1233,7 @@ def f23_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 # integer bit-math (10 bits of each key), identical in Spark
 # (shiftright/&) and DuckDB (>>/&); the query emits per-bucket
 # occupancy of the top-8 zkey bits — the file-assignment histogram a
-# writer would use. warehouse.compact() is where the engine would sort
-# by this key before writing.
+# writer would use to sort rows by this key before writing.
 # ---------------------------------------------------------------------------
 
 

@@ -12,6 +12,8 @@ fixture tests (tests/test_reports.py).
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -39,22 +41,18 @@ def summary_counts(
     people: DataFrame, cases: DataFrame, referrals: DataFrame, ar: DataFrame,
     f: ReportFilters = ReportFilters(),
 ) -> DataFrame:
-    # crossJoins here are 1-row × 1-row (each side is a single global
-    # aggregate) — constant cost at any data volume, not a cartesian
-    # blow-up risk.
+    """The four counts from one aggregate over a union of the inputs,
+    each row tagged with its side, so all four scans share one stage."""
+    sides = {
+        "total_people": people,
+        "total_cases": apply_report_filters(cases, "cases", f),
+        "total_referrals": apply_report_filters(referrals, "referrals", f),
+        "total_assistance_requests": ar,
+    }
+    tagged = [df.select(F.lit(name).alias("side")) for name, df in sides.items()]
     return (
-        people.agg(F.count("*").alias("total_people"))
-        .crossJoin(
-            apply_report_filters(cases, "cases", f).agg(
-                F.count("*").alias("total_cases")
-            )
-        )
-        .crossJoin(
-            apply_report_filters(referrals, "referrals", f).agg(
-                F.count("*").alias("total_referrals")
-            )
-        )
-        .crossJoin(ar.agg(F.count("*").alias("total_assistance_requests")))
+        reduce(DataFrame.unionAll, tagged)
+        .agg(*[F.count(F.when(F.col("side") == n, 1)).alias(n) for n in sides])
     )
 
 

@@ -255,11 +255,6 @@ TABLE_SCHEMAS: dict[str, StructType] = {
 }
 
 
-def spark_type_name(t: DataType) -> str:
-    """Simple-string type used by the cast step (cleaning.cast_columns)."""
-    return t.simpleString()
-
-
 def cast_map(table: str) -> dict[str, str]:
     """column → type-string map for a declared table (audit cols excluded:
     they are stamped, not ingested)."""

@@ -18,14 +18,51 @@ from __future__ import annotations
 
 import os
 import shutil
+import threading
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
 from calaveras_uniteus_etl_spark.schema import TABLE_SCHEMAS
 
+# (applicationId, table path, file listing) -> resolved DataFrame. Only
+# misses mutate it, under the lock, so any thread may read it.
+_READ_MEMO: dict[tuple[str, str, tuple], DataFrame] = {}
+_READ_MEMO_LOCK = threading.Lock()
+
+
+def _is_table_file(name: str) -> bool:
+    return name.endswith(".parquet") or name == "_SUCCESS"
+
+
+def _listing(root: str) -> tuple[tuple[str, int, int], ...]:
+    """Sorted (relative path, size, mtime_ns) of every file under root."""
+    while True:
+        try:
+            out = []
+            for d, _, names in os.walk(root):
+                for n in names:
+                    st = os.stat(os.path.join(d, n))
+                    rel = os.path.join(d[len(root) + 1:], n)
+                    out.append((rel, st.st_size, st.st_mtime_ns))
+            return tuple(sorted(out))
+        except FileNotFoundError:  # a swap moved the table mid-walk
+            continue
+
 
 class Warehouse:
+    """Table store over ``root``; one parquet directory per table.
+
+    ``read`` resolves each table version once: it walks the table
+    directory and memoizes the lazy DataFrame by (applicationId, table
+    path, sorted (relative path, size, mtime_ns) of every file under
+    it). A hit skips Spark's file listing and schema inference; no rows
+    are cached. Every overwrite, append or restore writes part files
+    under new names, so the key changes: the next read misses, resolves
+    the new files and drops the path's older entry and any dead
+    session's entries.
+    """
+
     def __init__(self, spark: SparkSession, root: str, snapshot_retention: int = 0):
         """``snapshot_retention`` > 0 turns every overwrite's displaced
         directory into a retained table version (time travel): the
@@ -44,9 +81,7 @@ class Warehouse:
 
     def exists(self, table: str) -> bool:
         p = self.path(table)
-        return os.path.isdir(p) and any(
-            f.endswith(".parquet") or f == "_SUCCESS" for f in os.listdir(p)
-        )
+        return os.path.isdir(p) and any(_is_table_file(f) for f in os.listdir(p))
 
     # column renames shipped after warehouses existed: old name -> new.
     # read() aliases on the fly so pre-rename tables keep working; the
@@ -56,15 +91,26 @@ class Warehouse:
     }
 
     def read(self, table: str) -> DataFrame:
-        if self.exists(table):
-            df = self.spark.read.parquet(self.path(table))
-            for old, new in self._LEGACY_RENAMES.get(table, {}).items():
-                if old in df.columns and new not in df.columns:
-                    df = df.withColumnRenamed(old, new)
-            return df
-        if table in TABLE_SCHEMAS:
-            return self.spark.createDataFrame([], TABLE_SCHEMAS[table])
-        raise FileNotFoundError(f"table {table!r} not found in warehouse")
+        path = os.path.abspath(self.path(table))
+        files = _listing(path)
+        if not any(os.sep not in f and _is_table_file(f) for f, _, _ in files):
+            if table in TABLE_SCHEMAS:
+                return self.spark.createDataFrame([], TABLE_SCHEMAS[table])
+            raise FileNotFoundError(f"table {table!r} not found in warehouse")
+        app_id = self.spark.sparkContext.applicationId
+        key = (app_id, path, files)
+        hit = _READ_MEMO.get(key)
+        if hit is not None:
+            return hit
+        df = self.spark.read.parquet(path)
+        for old, new in self._LEGACY_RENAMES.get(table, {}).items():
+            if old in df.columns and new not in df.columns:
+                df = df.withColumnRenamed(old, new)
+        with _READ_MEMO_LOCK:
+            for k in [k for k in _READ_MEMO if k[0] != app_id or k[1] == path]:
+                del _READ_MEMO[k]
+            _READ_MEMO[key] = df
+        return df
 
     def write(
         self,
@@ -146,108 +192,3 @@ class Warehouse:
         """Make a historical version current (the pre-restore state is
         itself retained as a new version, so a restore is undoable)."""
         self.write(table, self.read_version(table, version))
-
-    def register_views(self, tables: list[str] | None = None) -> None:
-        """Expose warehouse tables as temp views for spark.sql."""
-        for t in tables or [t for t in TABLE_SCHEMAS if self.exists(t)]:
-            self.read(t).createOrReplaceTempView(t)
-
-    def table_stats(self) -> dict[str, int]:
-        """COUNT(*) per existing table (reference core/database.py:723-769)."""
-        return {t: self.read(t).count() for t in TABLE_SCHEMAS if self.exists(t)}
-
-    def compact(
-        self,
-        table: str,
-        target_file_bytes: int = 128 << 20,
-        partition_by: list[str] | None = None,
-    ) -> dict[str, int]:
-        """OPTIMIZE-style small-file compaction (bin packing).
-
-        Incremental appends accumulate small files; at scale a table of
-        million-row parquet shards degrades every scan (task-per-file
-        scheduling, no row-group locality). This is a FULL rewrite of
-        the table into ``ceil(bytes / target)`` files via the
-        atomic-swap write path; ``partition_by`` re-establishes the
-        directory layout (rows cluster per partition, so a skewed
-        partition can exceed the target — the bin-pack target is
-        table-global, not per-partition). A lakehouse format's
-        partition-scoped OPTIMIZE is the upgrade path when only a few
-        partitions are fragmented. Returns before/after file counts.
-        """
-        import math
-
-        p = self.path(table)
-        files_before = sum(
-            1
-            for root, _, names in os.walk(p)
-            for f in names
-            if f.endswith(".parquet")
-        )
-        size = sum(
-            os.path.getsize(os.path.join(root, f))
-            for root, _, names in os.walk(p)
-            for f in names
-            if f.endswith(".parquet")
-        )
-        n = max(1, math.ceil(size / target_file_bytes))
-        df = self.read(table)
-        cols = partition_by or []
-        compacted = df.repartition(n, *cols) if cols else df.repartition(n)
-        self.write(table, compacted, partition_by=partition_by)
-        files_after = sum(
-            1
-            for root, _, names in os.walk(self.path(table))
-            for f in names
-            if f.endswith(".parquet")
-        )
-        return {"files_before": files_before, "files_after": files_after, "bytes": size}
-
-    def write_bucketed(
-        self,
-        table: str,
-        df: DataFrame,
-        bucket_cols: list[str],
-        n_buckets: int = 32,
-        sort_cols: list[str] | None = None,
-    ) -> None:
-        """Persist as a bucketed catalog table (co-located join path).
-
-        Two tables bucketed the same way on their join key sort-merge
-        join WITHOUT either side shuffling — at 100 TB that removes the
-        dominant cost of every fact-to-fact join on a stable key. Plain
-        ``df.write.parquet`` cannot carry bucket metadata, so this path
-        goes through ``saveAsTable`` (session catalog); the bucket
-        spec's hash is Spark-internal, which is fine here — bucketing
-        is a physical layout contract between Spark jobs, not a
-        cross-engine semantic.
-        """
-        writer = df.write.mode("overwrite").bucketBy(n_buckets, *bucket_cols)
-        if sort_cols:
-            writer = writer.sortBy(*sort_cols)
-        writer.option("path", self.path(f"bucketed_{table}")).saveAsTable(table)
-
-    def write_sorted(
-        self,
-        table: str,
-        df: DataFrame,
-        range_cols: list[str],
-        n_files: int | None = None,
-    ) -> None:
-        """Range-clustered rewrite for row-group min/max pruning.
-
-        ``repartitionByRange`` gives every output file a disjoint slice
-        of the sort key and ``sortWithinPartitions`` orders rows inside
-        each file, so parquet footer min/max statistics become
-        selective: a point or range predicate on the key skips whole
-        files and row groups at planning/scan time. This is the
-        single-column complement to the Morton layout m3 computes —
-        use it for the one dominant filter column (usually event time);
-        use z-order when two columns share the scans. The write goes
-        through the atomic-swap path like every overwrite.
-        """
-        n = n_files or df.sparkSession.sparkContext.defaultParallelism
-        clustered = df.repartitionByRange(n, *range_cols).sortWithinPartitions(
-            *range_cols
-        )
-        self.write(table, clustered)

@@ -1,49 +1,11 @@
-"""Bucketed co-located join: the no-shuffle fact-to-fact join path.
+"""Partitioned table layout: static and dynamic partition pruning.
 
-Writes two tables bucketed on the shared join key and asserts the join
-plan contains NO shuffle exchange on either side — the physical
-property that makes repeated large joins affordable at scale.
+A month-partitioned warehouse write must let a month filter prune
+directories at scan time, and a year-partitioned fact joined to a
+filtered dimension must get a runtime dynamic-pruning subquery.
 """
 
 from __future__ import annotations
-
-from calaveras_uniteus_etl_spark.warehouse import Warehouse
-
-
-def test_cobucketed_join_has_no_exchange(spark, tmp_path):
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    orders = spark.range(0, 1000).selectExpr(
-        "id AS o_key", "cast(id % 7 as double) AS o_val"
-    )
-    items = spark.range(0, 3000).selectExpr(
-        "id % 1000 AS l_key", "cast(id as double) AS l_val"
-    )
-    wh.write_bucketed("b_orders", orders, ["o_key"], n_buckets=8)
-    wh.write_bucketed("b_items", items, ["l_key"], n_buckets=8)
-
-    # hint to sort-merge: at test row counts Catalyst would broadcast,
-    # which bypasses bucketing entirely; at fact-table scale SMJ is the
-    # strategy the bucketing exists for
-    joined = (
-        spark.table("b_orders")
-        .hint("merge")
-        .join(
-            spark.table("b_items").hint("merge"),
-            spark.table("b_orders").o_key == spark.table("b_items").l_key,
-        )
-    )
-    plan = joined._jdf.queryExecution().executedPlan().toString()
-    assert "SortMergeJoin" in plan
-    assert "Exchange" not in plan, plan
-    assert joined.count() == 3000
-
-    # sanity: the same SMJ over non-bucketed parquet DOES shuffle
-    p1, p2 = str(tmp_path / "p1"), str(tmp_path / "p2")
-    orders.write.parquet(p1)
-    items.write.parquet(p2)
-    a, b = spark.read.parquet(p1).hint("merge"), spark.read.parquet(p2).hint("merge")
-    plain = a.join(b, a.o_key == b.l_key)
-    assert "Exchange" in plain._jdf.queryExecution().executedPlan().toString()
 
 
 def test_partitioned_write_prunes_partitions(spark, tmp_path):
@@ -75,59 +37,12 @@ def test_partitioned_write_prunes_partitions(spark, tmp_path):
     assert len(months) == 3  # Jan, Feb, Mar (2160 h = 90 days)
 
 
-def test_write_sorted_clusters_ranges_disjointly(spark, tmp_path):
-    """write_sorted must produce files whose min/max ranges of the sort
-    key are pairwise disjoint — the property parquet footer pruning
-    needs. Verified against the actual file footers via pyarrow, and
-    the plan must show RangePartitioning (not hash/round-robin)."""
-    import pyarrow.parquet as pq
-
-    from calaveras_uniteus_etl_spark.warehouse import Warehouse
-
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    df = spark.range(0, 100_000).selectExpr(
-        "id", "cast(id % 977 as long) AS k", "uuid() AS payload"
-    )
-    plan = (
-        df.repartitionByRange(8, "id")._jdf.queryExecution()
-        .executedPlan().toString()
-    )
-    assert "rangepartitioning" in plan.lower(), plan
-
-    wh.write_sorted("events_sorted", df, ["id"], n_files=8)
-
-    import os
-
-    ranges = []
-    root = wh.path("events_sorted")
-    for f in sorted(os.listdir(root)):
-        if not f.endswith(".parquet"):
-            continue
-        md = pq.read_metadata(os.path.join(root, f))
-        mins, maxs = [], []
-        for rg in range(md.num_row_groups):
-            col = md.row_group(rg).column(0)  # id is the first column
-            mins.append(col.statistics.min)
-            maxs.append(col.statistics.max)
-        ranges.append((min(mins), max(maxs)))
-    assert len(ranges) == 8
-    ranges.sort()
-    for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
-        assert hi1 < lo2, (ranges,)  # pairwise disjoint key slices
-
-    # and a point filter prunes at scan: only 1 of 8 files can match
-    hit = (
-        spark.read.parquet(root).filter("id = 12345").count()
-    )
-    assert hit == 1
-
-
 def test_partitioned_fact_join_triggers_dpp(spark, tmp_path):
     """Dynamic partition pruning: joining a year-partitioned fact with
     a selectively filtered dimension must inject a dynamicpruning
     subquery on the partition column, so only matching partitions are
     scanned at runtime — the other half of the layout story beside
-    bucketing (static pruning is m9's zone maps; DPP is the runtime
+    static pruning (m9's zone maps and the test above; DPP is the runtime
     variant Catalyst plans when the predicate arrives via a join)."""
     fact_dir = str(tmp_path / "fact_by_year")
     spark.range(0, 2000).selectExpr(

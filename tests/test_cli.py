@@ -193,7 +193,8 @@ def test_cli_timeline_unknown_table_is_clean_error(spark, warehouse, capsys):
 
 def test_warehouse_reads_legacy_housing_column(spark, tmp_path):
     """Pre-rename warehouses stored housing_status; read() must alias
-    it to housing_current_status so handlers keep working."""
+    it to housing_current_status so handlers keep working, also when
+    the read hits the memo."""
     from calaveras_uniteus_etl_spark.warehouse import Warehouse
 
     wh = Warehouse(spark, str(tmp_path / "legacy_wh"))
@@ -203,6 +204,7 @@ def test_warehouse_reads_legacy_housing_column(spark, tmp_path):
     )
     old.write.parquet(wh.path("assistance_requests"))
     got = wh.read("assistance_requests")
+    assert wh.read("assistance_requests") is got
     assert "housing_current_status" in got.columns
     assert "housing_status" not in got.columns
     assert got.first()["housing_current_status"] == "housed"

@@ -140,6 +140,19 @@ def test_within_batch_duplicate_keeps_last(tmp_path, spark, input_dir):
     assert len(rows) == 1 and rows[0]["first_name"] == "Final"
 
 
+def test_first_load_duplicate_keeps_last(tmp_path, spark, input_dir):
+    """A table's first load keeps the last line of a duplicated key,
+    like the merge path does."""
+    (input_dir / "people_20240101.txt").write_text(
+        "person_id|first_name\np1|First\np2|x\np1|Last\n"
+    )
+    cfg = _cfg(tmp_path)
+    report = ingest(spark, cfg)
+    assert report.tasks[0].rows_inserted == 2
+    rows = Warehouse(spark, cfg.warehouse_dir).read("people").collect()
+    assert {r["person_id"]: r["first_name"] for r in rows} == {"p1": "Last", "p2": "x"}
+
+
 def test_phi_hashing_applied(tmp_path, spark, input_dir):
     (input_dir / "people_20240101.txt").write_text(PEOPLE_V1)
     cfg = _cfg(tmp_path, phi_enabled=True)

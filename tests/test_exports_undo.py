@@ -169,27 +169,6 @@ def test_adhoc_gate(spark, small_df):
             run_select_only(spark, bad)
 
 
-def test_compact_bin_packs_small_files(spark, tmp_path):
-    """OPTIMIZE-style compaction: many small appended files collapse to
-    the bin-packed count with rows and content identical."""
-    from pyspark.sql import functions as F
-
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    base = spark.range(2000).select(
-        F.col("id").alias("event_id"), (F.col("id") % 7).alias("k")
-    )
-    # simulate incremental ingest: 8 appends x 8 files = 64 small files
-    for i in range(8):
-        wh.write("compactme", base.filter(F.col("event_id") % 8 == i).repartition(8),
-                 mode="append")
-    stats = wh.compact("compactme", target_file_bytes=1 << 30)
-    assert stats["files_before"] >= 32
-    assert stats["files_after"] == 1  # everything fits one 1 GiB bin
-    out = wh.read("compactme")
-    assert out.count() == 2000
-    assert out.agg(F.sum("event_id")).collect()[0][0] == sum(range(2000))
-
-
 # ---------------------------------------------------------------------------
 # merge_upsert schema evolution (C2 + lakehouse mergeSchema semantics)
 # ---------------------------------------------------------------------------
