@@ -7,7 +7,7 @@ ETL + SQL-analytics platform) on Apache Spark:
 - ingest: delimited-file sources with encoding fallback, filename
   routing, dedup-by-hash bookkeeping (``sources/``)
 - transforms: cleaning, PHI hashing, type casting (``operators/``)
-- loads: join-based upsert/merge, undo, audit stamping (``operators/upsert``)
+- loads: window-based upsert/merge, undo, audit stamping (``operators/upsert``)
 - analytics: the full report-query surface as composable DataFrame
   plans plus Spark SQL (``plans/``, ``reports/``)
 - extensions: large-scale training-data pipeline operators — dedup

@@ -155,11 +155,5 @@ class ETLConfig:
     input_dir: str = "data/input"
     warehouse_dir: str = "data/warehouse"
     phi: PHIConfig = field(default_factory=PHIConfig)
-    upsert: bool = True
     latest_file_only: bool = False
     skip_processed: bool = True
-    # C6: collect the cleaning report (two extra counting actions per
-    # file) and append data_quality_issues rows. The reference always
-    # logs these (core/database.py:540-565); configurable here so bulk
-    # backfills can opt out of the counting passes.
-    quality_log: bool = True

@@ -8,13 +8,17 @@ The Spark re-expression of the reference's ETL job lifecycle
   pipeline is a lazy DataFrame chain and Spark tasks supply all
   parallelism (driver loop over files stays trivially cheap — it only
   *declares* work)
-- the reference's per-row UPDATE upsert becomes the join-based merge
-  (operators/upsert.py)
+- the reference's per-row UPDATE upsert becomes one ranked-window
+  merge (operators/upsert.py)
 - job/metadata/data-quality bookkeeping are ordinary appended tables
 
 Per-file pipeline: read (A1) → schema-validate (§1.4, critical → FAIL
-the file) → clean B1-B5 → cast to declared types → PHI hash → upsert
-or append (C1/C2) → metadata + data-quality rows (C5/C6).
+the file) → clean B1-B5 → cast to declared types → PHI hash → merge by
+primary key, the first load included (C2), or append a keyless table
+(C1). The cleaning report and the inserted/updated counts are
+observations that fill during that write, so a file runs no Spark job
+beyond its header read and the write. Per job: schema-error,
+data-quality and metadata rows (C5/C6), one append each.
 """
 
 from __future__ import annotations
@@ -22,7 +26,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 
 from calaveras_uniteus_etl_spark.config import ETLConfig, PRIMARY_KEYS, REQUIRED_FIELDS
@@ -32,11 +36,7 @@ from calaveras_uniteus_etl_spark.operators.cleaning import (
     stamp_audit_columns,
 )
 from calaveras_uniteus_etl_spark.operators.phi import hash_phi_fields
-from calaveras_uniteus_etl_spark.operators.upsert import (
-    dedupe_keep_last,
-    merge_upsert,
-    upsert_stats,
-)
+from calaveras_uniteus_etl_spark.operators.upsert import merge_upsert, upsert_stats
 from calaveras_uniteus_etl_spark.schema import TABLE_SCHEMAS, cast_map
 from calaveras_uniteus_etl_spark.sources.delimited import read_delimited
 from calaveras_uniteus_etl_spark.sources.discovery import (
@@ -99,7 +99,8 @@ def ingest_file(
     config: ETLConfig,
     loaded_at: datetime | None = None,
 ) -> FileProcessingTask:
-    """Run one file through the full pipeline; mutates task status."""
+    """Run one file through the full pipeline; mutates task status and
+    leaves its schema issues or cleaning report in ``task.details``."""
     table = task.table_name
     raw = read_delimited(spark, task.path, with_line_number=True)
 
@@ -107,10 +108,10 @@ def ingest_file(
     if not result.ok:
         task.status = TaskStatus.FAILED
         task.error = "; ".join(i.suggestion for i in result.critical)
-        _append_schema_errors(spark, wh, task, result)
+        task.details["schema_issues"] = result.issues
         return task
 
-    cleaned, quality = clean(raw, collect_report=config.quality_log)
+    cleaned, quality = clean(raw)
     # required-field enforcement (rows lacking the PK are quality issues)
     required = REQUIRED_FIELDS.get(table, PRIMARY_KEYS.get(table, []))
     for col in required:
@@ -139,54 +140,52 @@ def ingest_file(
     )
 
     keys = PRIMARY_KEYS.get(table)
-    if config.upsert and keys and wh.exists(table):
-        existing = wh.read(table)
-        stats = upsert_stats(existing, stamped, keys)
-        # _line_no orders within-batch duplicates (keep-last, SURVEY §7.3);
-        # merge_upsert projects back to the table's declared columns
-        merged = merge_upsert(existing, stamped, keys, order_col="_line_no")
-        # safe even though the plan reads the table being replaced: the
-        # warehouse writes to a tmp dir and swaps only after success
-        wh.write(table, merged)
-        task.rows_inserted, task.rows_updated = stats.inserted, stats.updated
+    counts = Observation()
+    if keys:
+        # _line_no orders within-batch duplicates (keep-last, SURVEY §7.3).
+        # Safe though the plan reads the table it replaces: the warehouse
+        # writes to a tmp dir and swaps only after success.
+        out = merge_upsert(
+            wh.read(table), stamped, keys, order_col="_line_no", observation=counts
+        )
     else:
-        # keep-last per key on the first load too (SURVEY §7.3)
-        batch = dedupe_keep_last(stamped, keys, "_line_no") if keys else stamped
-        batch = batch.drop("_line_no")
-        mode = "append" if wh.exists(table) and not config.upsert else "overwrite"
-        wh.write(table, batch, mode=mode)
-        task.rows_inserted = batch.count()
-    if config.quality_log:
-        _append_quality_issues(spark, wh, task, quality)
+        out = stamped.drop("_line_no").observe(counts, F.count(F.lit(1)).alias("inserted"))
+    wh.write(table, out, mode="overwrite" if keys else "append")
+    # the write filled both observations; reading them runs no job
+    stats = upsert_stats(counts)
+    task.rows_inserted, task.rows_updated = stats.inserted, stats.updated
+    task.details["quality"] = quality
     task.status = TaskStatus.COMPLETED
     return task
 
 
-def _append_quality_issues(spark, wh, task, quality) -> None:
-    """C6: persist the cleaning report as data_quality_issues rows
-    (reference core/database.py:540-565 logs dropped-row and null-rate
-    issues per load; summarized by quality_summary())."""
+def _append_rows(spark, wh, table: str, rows: list) -> None:
+    if rows:
+        wh.write(table, spark.createDataFrame(rows, TABLE_SCHEMAS[table]), mode="append")
+
+
+def _append_quality_issues(spark, wh, report: IngestReport) -> None:
+    """C6: persist each loaded file's cleaning report as
+    data_quality_issues rows (reference core/database.py:540-565 logs
+    dropped-row and null-rate issues per load; summarized by
+    quality_summary())."""
     now = datetime.now(tz=timezone.utc).replace(tzinfo=None)
     rows = []
-    if quality.dropped_all_null_rows:
-        rows.append(
-            (task.table_name, task.file_name, "all_null_row", None,
-             quality.dropped_all_null_rows,
-             f"dropped {quality.dropped_all_null_rows} fully-null rows", now)
-        )
-    rows += [
-        (task.table_name, task.file_name, "null_values", col, n,
-         f"{n} null values in {col}", now)
-        for col, n in sorted(quality.null_counts.items())
-        if n
-    ]
-    if not rows:
-        return
-    df = spark.createDataFrame(rows, TABLE_SCHEMAS["data_quality_issues"])
-    wh.write(
-        "data_quality_issues", df,
-        mode="append" if wh.exists("data_quality_issues") else "overwrite",
-    )
+    for task in report.completed:
+        quality = task.details["quality"]
+        if quality.dropped_all_null_rows:
+            rows.append(
+                (task.table_name, task.file_name, "all_null_row", None,
+                 quality.dropped_all_null_rows,
+                 f"dropped {quality.dropped_all_null_rows} fully-null rows", now)
+            )
+        rows += [
+            (task.table_name, task.file_name, "null_values", col, n,
+             f"{n} null values in {col}", now)
+            for col, n in sorted(quality.null_counts.items())
+            if n
+        ]
+    _append_rows(spark, wh, "data_quality_issues", rows)
 
 
 def quality_summary(wh) -> "DataFrame":
@@ -219,15 +218,15 @@ def quality_summary(wh) -> "DataFrame":
     )
 
 
-def _append_schema_errors(spark, wh, task, result) -> None:
+def _append_schema_errors(spark, wh, report: IngestReport) -> None:
     now = datetime.now(tz=timezone.utc).replace(tzinfo=None)
     rows = [
-        (task.file_name, i.table_name, i.error_type, i.column_name, i.severity,
+        (t.file_name, i.table_name, i.error_type, i.column_name, i.severity,
          i.suggestion, now)
-        for i in result.issues
+        for t in report.tasks
+        for i in t.details.get("schema_issues", ())
     ]
-    df = spark.createDataFrame(rows, TABLE_SCHEMAS["schema_errors"])
-    wh.write("schema_errors", df, mode="append" if wh.exists("schema_errors") else "overwrite")
+    _append_rows(spark, wh, "schema_errors", rows)
 
 
 def _append_metadata(spark, wh, report: IngestReport, started_at, completed_at) -> None:
@@ -248,10 +247,7 @@ def _append_metadata(spark, wh, report: IngestReport, started_at, completed_at) 
         )
         for t in report.tasks
     ]
-    if not rows:
-        return
-    df = spark.createDataFrame(rows, TABLE_SCHEMAS["etl_metadata"])
-    wh.write("etl_metadata", df, mode="append" if wh.exists("etl_metadata") else "overwrite")
+    _append_rows(spark, wh, "etl_metadata", rows)
 
 
 def ingest(
@@ -293,7 +289,10 @@ def ingest(
         except Exception as exc:  # file-scoped failure, job continues
             task.status = TaskStatus.FAILED
             task.error = str(exc)[:500]
-    _append_metadata(
-        spark, wh, report, started_at, datetime.now(tz=timezone.utc).replace(tzinfo=None)
-    )
+    completed_at = datetime.now(tz=timezone.utc).replace(tzinfo=None)
+    # metadata last: it marks the files processed, so a crash before it
+    # reloads them on the next run
+    _append_schema_errors(spark, wh, report)
+    _append_quality_issues(spark, wh, report)
+    _append_metadata(spark, wh, report, started_at, completed_at)
     return report

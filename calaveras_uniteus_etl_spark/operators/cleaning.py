@@ -2,22 +2,20 @@
 core/etl_service.py:659-762).
 
 All row-level, all expressed as built-in column expressions (JVM-side,
-codegen-friendly). Each step reports a data-quality issue count the way
-the reference logs them; counting is done with aggregates, never
-driver-side loops.
+codegen-friendly). The dropped-row and null counts the reference logs
+per file come from one ``Observation`` that fills while the cleaned
+frame's first action runs, so cleaning runs no Spark action of its own.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+import operator
+from dataclasses import dataclass
+from functools import reduce
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
-
-# Null sentinels the reference treats as missing on read
-# (core/etl_service.py:647) plus the literal-'nan' repair (:704-718).
-NULL_SENTINELS = ("", "NULL", "null", "None", "nan")
 
 # Mojibake repairs (core/etl_service.py:704-718): UTF-8 read as cp1252.
 MOJIBAKE_MAP = (
@@ -28,49 +26,50 @@ MOJIBAKE_MAP = (
 )
 
 
-@dataclass
-class CleaningReport:
-    """Counts mirroring the reference's data_quality_issues rows."""
+# observed B1 count; the other observed metrics are the null counts of
+# the data columns, whose names never start with "_"
+_ALL_NULL = "_all_null_rows"
 
-    dropped_all_null_rows: int = 0
-    null_counts: dict[str, int] = field(default_factory=dict)
-    total_rows: int = 0
+
+@dataclass(frozen=True)
+class CleaningReport:
+    """Counts mirroring the reference's data_quality_issues rows. Read
+    them only after the cleaned frame's first action ran: until then
+    ``Observation.get`` blocks."""
+
+    observation: Observation
+
+    @property
+    def dropped_all_null_rows(self) -> int:
+        return self.observation.get[_ALL_NULL]
+
+    @property
+    def null_counts(self) -> dict[str, int]:
+        """Nulls per data column among the rows B1 kept."""
+        return {c: n for c, n in self.observation.get.items() if c != _ALL_NULL}
 
 
 def _string_cols(df: DataFrame) -> list[str]:
     return [f.name for f in df.schema.fields if isinstance(f.dataType, StringType)]
 
 
-# --- B1: drop rows where every column is null ------------------------------
+def _data_cols(df: DataFrame) -> list[str]:
+    # not the "_"-prefixed columns the pipeline adds (``_line_no``)
+    return [c for c in df.columns if not c.startswith("_")]
+
+
+# --- B1: drop rows where every data column is null --------------------------
+
+
+def _all_null(df: DataFrame) -> Column:
+    return reduce(operator.and_, [F.col(c).isNull() for c in _data_cols(df)])
 
 
 def drop_all_null_rows(df: DataFrame) -> DataFrame:
-    return df.na.drop(how="all")
+    return df.filter(~_all_null(df))
 
 
-# --- B2: per-column null profiling (single aggregate pass) -----------------
-
-
-def profile_nulls(df: DataFrame) -> dict[str, int]:
-    row = df.agg(
-        *[F.sum(F.col(c).isNull().cast("long")).alias(c) for c in df.columns]
-    ).collect()[0]
-    return {c: int(row[c] or 0) for c in df.columns}
-
-
-# --- B3: whitespace trim on all string columns -----------------------------
-
-
-def trim_strings(df: DataFrame) -> DataFrame:
-    return df.select(
-        *[
-            F.trim(F.col(c)).alias(c) if c in set(_string_cols(df)) else F.col(c)
-            for c in df.columns
-        ]
-    )
-
-
-# --- B4: mojibake repair + literal-sentinel → NULL --------------------------
+# --- B3/B4: whitespace trim, mojibake repair, literal-sentinel → NULL ------
 
 
 def repair_mojibake_expr(c: Column) -> Column:
@@ -90,7 +89,7 @@ def repair_text(df: DataFrame) -> DataFrame:
     cols = set(_string_cols(df))
     return df.select(
         *[
-            normalize_sentinels_expr(repair_mojibake_expr(F.col(c))).alias(c)
+            normalize_sentinels_expr(repair_mojibake_expr(F.trim(F.col(c)))).alias(c)
             if c in cols
             else F.col(c)
             for c in df.columns
@@ -123,19 +122,16 @@ def stamp_audit_columns(df: DataFrame, loaded_at=None) -> DataFrame:
 # --- full pipeline -----------------------------------------------------------
 
 
-def clean(df: DataFrame, collect_report: bool = False) -> tuple[DataFrame, CleaningReport]:
-    """B1→B4 pipeline as one lazy chain.
-
-    ``collect_report=True`` adds two counting actions (the reference
-    logs these per file); leave False in hot paths to stay one-pass.
-    """
-    report = CleaningReport()
-    if collect_report:
-        report.total_rows = df.count()
-    dropped = drop_all_null_rows(df)
-    if collect_report:
-        kept = dropped.count()
-        report.dropped_all_null_rows = report.total_rows - kept
-        report.null_counts = profile_nulls(dropped)
-    out = repair_text(trim_strings(dropped))
-    return out, report
+def clean(df: DataFrame) -> tuple[DataFrame, CleaningReport]:
+    """B1→B4 pipeline as one lazy chain, plus its report: the B1 count
+    and the B2 per-column null profile, observed on the input as the
+    cleaned frame's first action reads it (no action of its own)."""
+    all_null = _all_null(df)
+    observation = Observation()
+    observed = df.observe(
+        observation,
+        F.count_if(all_null).alias(_ALL_NULL),
+        *[F.count_if(F.col(c).isNull() & ~all_null).alias(c) for c in _data_cols(df)],
+    )
+    out = repair_text(drop_all_null_rows(observed))
+    return out, CleaningReport(observation)

@@ -1,12 +1,12 @@
-"""Join-based upsert and load undo.
+"""Merge upsert and load undo.
 
 The reference upserts by pulling the full existing-PK list into memory
 and running a per-row UPDATE loop (/root/reference/core/database.py:
 366-465) — O(n) driver round-trips that cannot survive 100 TB. The
 semantics (last-write-wins by primary key, all non-PK columns
-overwritten) are kept; the physical plan becomes a distributed
-anti-join + union, which Catalyst executes as one shuffle (or broadcast
-when the batch is small — the common case for incremental loads).
+overwritten) are kept; the physical plan becomes one ranked window over
+``existing ∪ batch``: each side is read once and shuffled once, on the
+key.
 
 Canonical within-batch semantics (SURVEY.md §7.3): duplicate PKs inside
 one incoming batch keep the LAST row (matching the reference's
@@ -17,9 +17,11 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+_SIDE, _RANK, _FIRST = "__side", "__rank", "__first_side"
 
 
 @dataclass(frozen=True)
@@ -28,38 +30,26 @@ class UpsertStats:
     updated: int
 
 
-def dedupe_keep_last(
-    incoming: DataFrame, keys: list[str], order_col: str | None = None
-) -> DataFrame:
-    """Within-batch dedupe, keep-last per PK.
-
-    ``order_col`` gives the intra-batch ordering (e.g. a line number
-    from the source file). Without one, ties are broken arbitrarily but
-    deterministically is impossible — callers that care pass the column.
-    """
-    if order_col is None:
-        return incoming.dropDuplicates(keys)
-    w = Window.partitionBy(*keys).orderBy(F.desc(order_col))
-    return (
-        incoming.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-
-
 def merge_upsert(
     existing: DataFrame,
     incoming: DataFrame,
     keys: list[str],
     order_col: str | None = None,
     evolve_schema: bool = False,
+    observation: Observation | None = None,
 ) -> DataFrame:
-    """Last-write-wins merge: rows of ``existing`` not matched by key,
-    plus all (deduped) ``incoming`` rows.
+    """Last-write-wins merge: per key, the last ``incoming`` row by
+    ``order_col`` (an arbitrary one without it), else the ``existing`` row.
 
     Equivalent to ``MERGE INTO ... WHEN MATCHED UPDATE SET * WHEN NOT
     MATCHED INSERT *`` on a lakehouse table, expressed as pure
-    DataFrame ops so it works on plain parquet.
+    DataFrame ops so it works on plain parquet. Rows are tagged with
+    their side (table 0, batch 1); ``row_number`` over the key by (side
+    desc, ``order_col`` desc) keeps the batch's last line, and
+    ``min(side)`` over the key tells an update from an insert. The
+    first load merges into an empty ``existing``. ``observation`` fills
+    with the ``inserted`` and ``updated`` counts during the merged
+    frame's first action (read them with ``upsert_stats``).
 
     ``evolve_schema=True`` is the lakehouse mergeSchema behavior: a
     column new to the batch is APPENDED to the table schema (existing
@@ -69,32 +59,46 @@ def merge_upsert(
     carry-forward). Default stays strict: the batch must cover the
     table's columns, extras are rejected rather than silently dropped.
     """
-    batch = dedupe_keep_last(incoming, keys, order_col)
-    if order_col is not None:
-        # the intra-batch ordering column is merge bookkeeping, never
-        # part of the table schema
-        batch = batch.drop(order_col)
-    untouched = existing.join(batch, on=keys, how="left_anti")
-    if evolve_schema:
-        return untouched.unionByName(batch, allowMissingColumns=True)
-    extra = [c for c in batch.columns if c not in existing.columns]
-    if extra:
+    order = [order_col] if order_col else []
+    extra = [c for c in incoming.columns if c not in existing.columns + order]
+    if extra and not evolve_schema:
         raise ValueError(
             f"merge_upsert: batch carries columns {extra} absent from the "
             "table; pass evolve_schema=True to append them (silently "
             "dropping data would be a correctness hazard)"
         )
-    return untouched.unionByName(batch.select(*existing.columns))
+    batch = incoming if evolve_schema else incoming.select(*existing.columns, *order)
+    tagged = existing.withColumn(_SIDE, F.lit(0)).unionByName(
+        batch.withColumn(_SIDE, F.lit(1)), allowMissingColumns=True
+    )
+    w = Window.partitionBy(*keys).orderBy(F.desc(_SIDE), *[F.desc(c) for c in order])
+    whole_key = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    merged = tagged.select(
+        "*",
+        F.row_number().over(w).alias(_RANK),
+        F.min(_SIDE).over(whole_key).alias(_FIRST),
+    ).filter(F.col(_RANK) == 1)
+    if observation is not None:
+        from_batch = F.col(_SIDE) == 1
+        merged = merged.observe(
+            observation,
+            F.count_if(from_batch & (F.col(_FIRST) == 1)).alias("inserted"),
+            F.count_if(from_batch & (F.col(_FIRST) == 0)).alias("updated"),
+        )
+    return merged.drop(_SIDE, _RANK, _FIRST, *order)
 
 
-def upsert_stats(existing: DataFrame, incoming: DataFrame, keys: list[str]) -> UpsertStats:
+def upsert_stats(observation: Observation) -> UpsertStats:
     """Inserted/updated counts matching the reference's bookkeeping
-    (core/database.py:450-465): updated = incoming ∩ existing by key,
-    inserted = the rest (counted after within-batch dedupe)."""
-    batch = incoming.dropDuplicates(keys)
-    updated = batch.join(existing, on=keys, how="left_semi").count()
-    inserted = batch.count() - updated
-    return UpsertStats(inserted=inserted, updated=updated)
+    (core/database.py:450-465): updated = batch keys already in the
+    table, inserted = the rest, both after within-batch dedupe.
+
+    Reads the ``observation`` a ``merge_upsert`` (or an append, which
+    observes ``inserted`` only) filled during its write; runs no Spark
+    job. Call it only after that write returned.
+    """
+    m = observation.get
+    return UpsertStats(inserted=m["inserted"], updated=m.get("updated", 0))
 
 
 def undo_load(

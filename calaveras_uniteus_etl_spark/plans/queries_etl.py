@@ -18,10 +18,10 @@ from calaveras_uniteus_etl_spark.plans.catalog import register
 from calaveras_uniteus_etl_spark.plans.tables import table
 
 # ---------------------------------------------------------------------------
-# C2 — upsert by primary key as a join-based merge
+# C2 — upsert by primary key as a window-based merge
 #      (reference: core/database.py:366-465 — full-PK-pull + per-row UPDATE,
-#       re-expressed as anti-join ∪ incoming; SURVEY §7.3 semantics:
-#       dedupe-within-batch keep-last, then last-write-wins merge)
+#       re-expressed as one ranked window over existing ∪ incoming; SURVEY
+#       §7.3 semantics: within-batch keep-last, then last-write-wins merge)
 # ---------------------------------------------------------------------------
 
 _C2_ORACLE = """
@@ -52,7 +52,7 @@ FROM merged GROUP BY o_orderstatus
 @register(
     "c2_upsert_merge",
     oracle=_C2_ORACLE,
-    doc="Join-based last-write-wins merge (anti-join + union) replacing "
+    doc="Last-write-wins merge (one ranked window over existing ∪ incoming) replacing "
     "the reference's per-row UPDATE loop — the one physical strategy "
     "deliberately NOT imitated at scale.",
 )

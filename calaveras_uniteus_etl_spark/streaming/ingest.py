@@ -14,7 +14,7 @@ stops — the scheduler-friendly shape: the reference's polling
 the same checkpoint.
 
 Writes go through ``foreachBatch`` so each micro-batch can run the
-join-based merge upsert into the warehouse table — the same C2
+window-based merge upsert into the warehouse table — the same C2
 semantics as the batch path (operators/upsert.py), reusing identical
 cleaning/casting code. At scale: micro-batch size is governed by
 ``maxFilesPerTrigger``; the merge's shuffle is on the primary key.
@@ -32,7 +32,7 @@ from calaveras_uniteus_etl_spark.operators.cleaning import (
     clean,
     stamp_audit_columns,
 )
-from calaveras_uniteus_etl_spark.operators.upsert import dedupe_keep_last, merge_upsert
+from calaveras_uniteus_etl_spark.operators.upsert import merge_upsert
 from calaveras_uniteus_etl_spark.schema import TABLE_SCHEMAS, cast_map
 from calaveras_uniteus_etl_spark.sources.delimited import NULL_VALUES
 from calaveras_uniteus_etl_spark.warehouse import Warehouse
@@ -94,11 +94,8 @@ def stream_ingest(
         cleaned, _ = clean(df)
         typed = stamp_audit_columns(cast_columns(cleaned, types))
         if keys:
-            typed = dedupe_keep_last(typed, keys)
-            if warehouse.exists(table):
-                merged = merge_upsert(warehouse.read(table), typed, keys)
-            else:
-                merged = typed
+            # read() of a missing table is the empty declared-schema frame
+            merged = merge_upsert(warehouse.read(table), typed, keys)
             warehouse.write(table, merged, mode="overwrite")
         else:
             warehouse.write(table, typed, mode="append")

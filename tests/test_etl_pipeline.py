@@ -6,6 +6,7 @@ FIXTURES.md + tests/unit/test_database.py:257-297 insert/update counts)."""
 from __future__ import annotations
 
 import os
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -262,9 +263,55 @@ def test_quality_issues_logged_and_summarized(tmp_path, spark, input_dir):
     assert s[("table_name", "people")] == s[("total", None)]
 
 
-def test_quality_log_opt_out(tmp_path, spark, input_dir):
-    (input_dir / "people_20240101.txt").write_text(PEOPLE_V1)
-    cfg = _cfg(tmp_path, quality_log=False)
+def test_all_null_line_dropped_and_logged(tmp_path, spark, input_dir):
+    """B1: a line whose every field is empty is dropped and logged as one
+    all_null_row issue (the added _line_no column is not data), and it
+    adds nothing to the null_values counts."""
+    (input_dir / "people_20240101.txt").write_text(
+        "person_id|first_name|people_created_at\n"
+        "p1|John|2024-01-01 10:00:00\n"
+        "||\n"
+        "p2|Jane|NULL\n"
+    )
+    cfg = _cfg(tmp_path)
+    report = ingest(spark, cfg)
+    assert report.tasks[0].rows_inserted == 2
+    issues = Warehouse(spark, cfg.warehouse_dir).read("data_quality_issues").collect()
+    logged = {(r.issue_type, r.column_name): r.issue_count for r in issues}
+    assert logged == {("all_null_row", None): 1, ("null_values", "people_created_at"): 1}
+
+
+def _spark_jobs(spark, fn):
+    """Number of Spark jobs ``fn()`` runs, counted in a job group."""
+    sc = spark.sparkContext
+    group = f"job-budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job budget")
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_ingest_job_budget(tmp_path, spark, input_dir):
+    """Loading one file runs at most 4 Spark jobs more than an ingest
+    that loads nothing (both run the skip check and the metadata
+    append): the header read, the merge's shuffle and write, and the
+    quality append. A counting pass over the file breaks the budget.
+    Checked for a first load and for a reload with one update and one
+    insert."""
+    cfg = _cfg(tmp_path)
+    (input_dir / "cases_20240101.txt").write_text(CASES_V1)
     ingest(spark, cfg)
-    wh = Warehouse(spark, cfg.warehouse_dir)
-    assert not wh.exists("data_quality_issues")
+    for name, body, counts in (
+        ("people_20240101.txt", PEOPLE_V1, (3, 0)),
+        ("people_20240201.txt", PEOPLE_V2, (1, 1)),
+    ):
+        idle = _spark_jobs(spark, lambda: ingest(spark, cfg))
+        (input_dir / name).write_text(body)
+        reports = []
+        one_file = _spark_jobs(spark, lambda: reports.append(ingest(spark, cfg)))
+        [t] = reports[0].completed
+        assert (t.rows_inserted, t.rows_updated) == counts
+        assert one_file - idle <= 4, (name, idle, one_file)

@@ -12,13 +12,10 @@ import hashlib
 import pytest
 from hypothesis import given, settings, strategies as st, HealthCheck
 
+from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
-from calaveras_uniteus_etl_spark.operators.upsert import (
-    dedupe_keep_last,
-    merge_upsert,
-    upsert_stats,
-)
+from calaveras_uniteus_etl_spark.operators.upsert import merge_upsert, upsert_stats
 
 _SETTINGS = dict(
     max_examples=15,
@@ -67,10 +64,14 @@ def test_merge_upsert_matches_python_model(spark, existing, incoming):
 @settings(**_SETTINGS)
 @given(rows=st.lists(st.tuples(_keys, _vals), min_size=1, max_size=15))
 def test_dedupe_keep_last_is_last_occurrence(spark, rows):
+    """A batch merged into an empty table (a first load) keeps each
+    key's last line."""
+    empty = spark.createDataFrame([], "k int, v string")
     df = spark.createDataFrame(
         [(i, k, v) for i, (k, v) in enumerate(rows)], "_ord long, k int, v string"
     )
-    out = {r["k"]: r["v"] for r in dedupe_keep_last(df, ["k"], "_ord").collect()}
+    merged = merge_upsert(empty, df, ["k"], order_col="_ord")
+    out = {r["k"]: r["v"] for r in merged.collect()}
     model = {}
     for k, v in rows:
         model[k] = v
@@ -83,14 +84,19 @@ def test_dedupe_keep_last_is_last_occurrence(spark, rows):
     incoming=st.lists(_keys, max_size=10),
 )
 def test_upsert_stats_partition(spark, existing, incoming):
-    """inserted + updated == distinct incoming keys; updated == overlap."""
+    """inserted + updated == distinct incoming keys; updated == overlap.
+    The counts come from the merge's own observation, filled by one
+    write (an empty ``existing`` is the first load)."""
     ex_df = spark.createDataFrame(
         [(k, "old") for k in existing] or [(None, None)], "k int, v string"
     ).filter(F.col("k").isNotNull())
     in_df = spark.createDataFrame(
         [(k, "new") for k in incoming] or [(None, None)], "k int, v string"
     ).filter(F.col("k").isNotNull())
-    stats = upsert_stats(ex_df, in_df, ["k"])
+    observation = Observation()
+    merged = merge_upsert(ex_df, in_df, ["k"], observation=observation)
+    merged.write.format("noop").mode("overwrite").save()
+    stats = upsert_stats(observation)
     distinct_in = set(incoming)
     assert stats.updated == len(distinct_in & existing)
     assert stats.inserted == len(distinct_in - existing)
