@@ -4,40 +4,40 @@ The Spark re-expression of the reference's ETL job lifecycle
 (/root/reference/core/etl_service.py:985-1392, traced in SURVEY.md
 §3.1). Differences are architectural, not semantic:
 
-- the reference fans files into a 4-thread pool; here each file's
-  pipeline is a lazy DataFrame chain and Spark tasks supply all
-  parallelism (driver loop over files stays trivially cheap — it only
-  *declares* work)
+- like the reference, a job loads its files from a pool of up to 4
+  driver threads, one table per thread: Spark analyses every DataFrame
+  step eagerly on the driver, so a file's plan costs real driver time,
+  and files of different tables overlap it. Files of one table load in
+  (file date, file name) order, so the newest delivery wins
 - the reference's per-row UPDATE upsert becomes one ranked-window
   merge (operators/upsert.py)
 - job/metadata/data-quality bookkeeping are ordinary appended tables
 
 Per-file pipeline: read (A1) → schema-validate (§1.4, critical → FAIL
-the file) → clean B1-B5 → cast to declared types → PHI hash → merge by
-primary key, the first load included (C2), or append a keyless table
-(C1). The cleaning report and the inserted/updated counts are
-observations that fill during that write, so a file runs no Spark job
-beyond its header read and the write. Per job: schema-error,
-data-quality and metadata rows (C5/C6), one append each.
+the file) → clean B1-B4 → one projection onto the declared row (cast,
+PHI hash, audit stamp; rows missing a required field dropped) → merge
+by primary key, the first load included (C2), or append a keyless
+table (C1). The header comes from the driver-side encoding probe, and
+the cleaning report and the inserted/updated counts are observations
+that fill during the write, so the write is a file's only Spark work.
+Per job, after every file: schema-error, data-quality and metadata
+rows (C5/C6), one append each.
 """
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
 
 from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
-from calaveras_uniteus_etl_spark.config import ETLConfig, PRIMARY_KEYS, REQUIRED_FIELDS
-from calaveras_uniteus_etl_spark.operators.cleaning import (
-    clean,
-    cast_columns,
-    stamp_audit_columns,
-)
-from calaveras_uniteus_etl_spark.operators.phi import hash_phi_fields
+from calaveras_uniteus_etl_spark.config import ETLConfig, PRIMARY_KEYS
+from calaveras_uniteus_etl_spark.operators.cleaning import clean, project_declared
 from calaveras_uniteus_etl_spark.operators.upsert import merge_upsert, upsert_stats
-from calaveras_uniteus_etl_spark.schema import TABLE_SCHEMAS, cast_map
+from calaveras_uniteus_etl_spark.schema import TABLE_SCHEMAS
 from calaveras_uniteus_etl_spark.sources.delimited import read_delimited
 from calaveras_uniteus_etl_spark.sources.discovery import (
     FileProcessingTask,
@@ -47,6 +47,9 @@ from calaveras_uniteus_etl_spark.sources.discovery import (
 )
 from calaveras_uniteus_etl_spark.sources.schema_validator import validate_schema
 from calaveras_uniteus_etl_spark.warehouse import Warehouse
+
+# driver threads loading one table each, the reference ETL's pool size
+INGEST_WORKERS = 4
 
 
 @dataclass
@@ -112,31 +115,11 @@ def ingest_file(
         return task
 
     cleaned, quality = clean(raw)
-    # required-field enforcement (rows lacking the PK are quality issues)
-    required = REQUIRED_FIELDS.get(table, PRIMARY_KEYS.get(table, []))
-    for col in required:
-        if col in cleaned.columns:
-            cleaned = cleaned.filter(F.col(col).isNotNull())
-
-    typed = cast_columns(cleaned, cast_map(table))
-    hashed = hash_phi_fields(typed, table, config.phi)
-    # align to declared schema: missing declared cols become NULL
-    declared = [
-        f
-        for f in TABLE_SCHEMAS[table].fields
-        if f.name not in ("etl_loaded_at", "etl_updated_at")
-    ]
-    aligned = hashed.select(
-        *[
-            F.col(f.name).cast(f.dataType)
-            if f.name in hashed.columns
-            else F.lit(None).cast(f.dataType).alias(f.name)
-            for f in declared
-        ],
-        F.col("_line_no"),
-    )
-    stamped = stamp_audit_columns(
-        aligned, loaded_at or datetime.now(tz=timezone.utc).replace(tzinfo=None)
+    declared = project_declared(
+        cleaned,
+        table,
+        config.phi,
+        loaded_at or datetime.now(tz=timezone.utc).replace(tzinfo=None),
     )
 
     keys = PRIMARY_KEYS.get(table)
@@ -146,10 +129,10 @@ def ingest_file(
         # Safe though the plan reads the table it replaces: the warehouse
         # writes to a tmp dir and swaps only after success.
         out = merge_upsert(
-            wh.read(table), stamped, keys, order_col="_line_no", observation=counts
+            wh.read(table), declared, keys, order_col="_line_no", observation=counts
         )
     else:
-        out = stamped.drop("_line_no").observe(counts, F.count(F.lit(1)).alias("inserted"))
+        out = declared.drop("_line_no").observe(counts, F.count(F.lit(1)).alias("inserted"))
     wh.write(table, out, mode="overwrite" if keys else "append")
     # the write filled both observations; reading them runs no job
     stats = upsert_stats(counts)
@@ -157,6 +140,17 @@ def ingest_file(
     task.details["quality"] = quality
     task.status = TaskStatus.COMPLETED
     return task
+
+
+def _load_table(spark, wh, tasks, config, loaded_at) -> None:
+    """Load one table's files in order; a failure fails only its file."""
+    for task in tasks:
+        try:
+            # through the module global, so a wrapped ingest_file sees every file
+            ingest_file(spark, wh, task, config, loaded_at=loaded_at)
+        except Exception as exc:  # file-scoped failure, job continues
+            task.status = TaskStatus.FAILED
+            task.error = str(exc)[:500]
 
 
 def _append_rows(spark, wh, table: str, rows: list) -> None:
@@ -281,14 +275,22 @@ def ingest(
         tasks = latest_only(tasks)
 
     report = IngestReport(job_id=job_id, tasks=tasks)
-    for task in tasks:
-        if task.status == TaskStatus.SKIPPED:
-            continue
-        try:
-            ingest_file(spark, wh, task, config, loaded_at=started_at)
-        except Exception as exc:  # file-scoped failure, job continues
-            task.status = TaskStatus.FAILED
-            task.error = str(exc)[:500]
+    by_table: dict[str, list[FileProcessingTask]] = {}
+    for task in sorted(tasks, key=lambda t: (t.file_date, t.file_name)):
+        if task.status != TaskStatus.SKIPPED:
+            by_table.setdefault(task.table_name, []).append(task)
+    if by_table:
+        with ThreadPoolExecutor(min(INGEST_WORKERS, len(by_table))) as pool:
+            # each worker starts from this thread's job group, description and tags
+            futures = [
+                pool.submit(
+                    inheritable_thread_target(spark)(_load_table),
+                    spark, wh, table_tasks, config, started_at,
+                )
+                for table_tasks in by_table.values()
+            ]
+            for f in futures:
+                f.result()
     completed_at = datetime.now(tz=timezone.utc).replace(tzinfo=None)
     # metadata last: it marks the files processed, so a crash before it
     # reloads them on the next run

@@ -2,7 +2,10 @@
 core/etl_service.py:659-762).
 
 All row-level, all expressed as built-in column expressions (JVM-side,
-codegen-friendly). The dropped-row and null counts the reference logs
+codegen-friendly): ``clean`` repairs the file's strings, and
+``project_declared`` casts, PHI-hashes and stamps them into the
+declared row in one select, so each file's plan stays a few nodes deep
+however many columns it has. The dropped-row and null counts the reference logs
 per file come from one ``Observation`` that fills while the cleaned
 frame's first action runs, so cleaning runs no Spark action of its own.
 """
@@ -11,11 +14,16 @@ from __future__ import annotations
 
 import operator
 from dataclasses import dataclass
+from datetime import datetime
 from functools import reduce
 
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
+
+from calaveras_uniteus_etl_spark.config import PHIConfig, PRIMARY_KEYS, REQUIRED_FIELDS
+from calaveras_uniteus_etl_spark.functions.hashing import salted_sha256
+from calaveras_uniteus_etl_spark.schema import AUDIT_COLUMNS, TABLE_SCHEMAS
 
 # Mojibake repairs (core/etl_service.py:704-718): UTF-8 read as cp1252.
 MOJIBAKE_MAP = (
@@ -45,8 +53,10 @@ class CleaningReport:
 
     @property
     def null_counts(self) -> dict[str, int]:
-        """Nulls per data column among the rows B1 kept."""
-        return {c: n for c, n in self.observation.get.items() if c != _ALL_NULL}
+        """Nulls per data column among the rows B1 kept: a dropped row
+        is null in every column, so it is subtracted from each."""
+        m = self.observation.get
+        return {c: n - m[_ALL_NULL] for c, n in m.items() if c != _ALL_NULL}
 
 
 def _string_cols(df: DataFrame) -> list[str]:
@@ -81,8 +91,8 @@ def repair_mojibake_expr(c: Column) -> Column:
 
 def normalize_sentinels_expr(c: Column) -> Column:
     """Empty string / 'nan'-family literals → NULL."""
-    t = F.trim(c)
-    return F.when(t.isNull() | (t == "") | F.lower(t).isin("nan", "null", "none"), F.lit(None).cast("string")).otherwise(c)
+    # NULL when c is NULL too: the condition is then NULL, not true
+    return F.when(~F.lower(F.trim(c)).isin("", "nan", "null", "none"), c)
 
 
 def repair_text(df: DataFrame) -> DataFrame:
@@ -97,26 +107,42 @@ def repair_text(df: DataFrame) -> DataFrame:
     )
 
 
-# --- B6: schema-cast with try_cast (type "detection" made explicit) --------
+# --- B5-B7: one projection onto the declared schema -------------------------
 
 
-def cast_columns(df: DataFrame, types: dict[str, str]) -> DataFrame:
-    """Cast string-ingested columns to declared types; unparseable
-    values become NULL (Spark try_cast) rather than SQLite's 0."""
-    return df.select(
-        *[
-            F.col(c).try_cast(types[c]).alias(c) if c in types else F.col(c)
-            for c in df.columns
-        ]
-    )
+def project_declared(
+    df: DataFrame, table: str, phi: PHIConfig, loaded_at: datetime | None = None
+) -> DataFrame:
+    """The declared row of ``table`` in one select, plus one filter.
 
-
-# --- B7: audit-column stamping ----------------------------------------------
-
-
-def stamp_audit_columns(df: DataFrame, loaded_at=None) -> DataFrame:
-    ts = F.lit(loaded_at).cast("timestamp") if loaded_at else F.current_timestamp()
-    return df.withColumn("etl_loaded_at", ts).withColumn("etl_updated_at", ts)
+    Each declared column is try_cast from the file's string (an
+    unparseable value becomes NULL rather than SQLite's 0), then
+    PHI-hashed when ``phi`` lists it; a declared column the file lacks
+    is NULL, and the audit pair is stamped with ``loaded_at`` (now when
+    None). An order column (``_line_no``) passes through. Rows missing
+    a required field the file carries are dropped.
+    """
+    present = set(df.columns)
+    hashed = set(phi.fields.get(table, ())) if phi.enabled else set()
+    stamp = F.lit(loaded_at).cast("timestamp") if loaded_at else F.current_timestamp()
+    audit = {name for name, _ in AUDIT_COLUMNS}
+    cols = []
+    for f in TABLE_SCHEMAS[table].fields:
+        if f.name in audit:
+            c = stamp
+        elif f.name not in present:
+            c = F.lit(None).cast(f.dataType)
+        else:
+            c = F.col(f.name).try_cast(f.dataType)
+            if f.name in hashed:
+                c = salted_sha256(c, phi.salt)
+        cols.append(c.alias(f.name))
+    required = [
+        c for c in REQUIRED_FIELDS.get(table, PRIMARY_KEYS.get(table, [])) if c in present
+    ]
+    if required:
+        df = df.filter(reduce(operator.and_, [F.col(c).isNotNull() for c in required]))
+    return df.select(*cols, *[c for c in df.columns if c == "_line_no"])
 
 
 # --- full pipeline -----------------------------------------------------------

@@ -254,13 +254,3 @@ TABLE_SCHEMAS: dict[str, StructType] = {
     "sftp_cache": SFTP_CACHE,
 }
 
-
-def cast_map(table: str) -> dict[str, str]:
-    """column → type-string map for a declared table (audit cols excluded:
-    they are stamped, not ingested)."""
-    schema = TABLE_SCHEMAS[table]
-    return {
-        f.name: f.dataType.simpleString()
-        for f in schema.fields
-        if f.name not in ("etl_loaded_at", "etl_updated_at")
-    }

@@ -15,8 +15,9 @@ the same checkpoint.
 
 Writes go through ``foreachBatch`` so each micro-batch can run the
 window-based merge upsert into the warehouse table — the same C2
-semantics as the batch path (operators/upsert.py), reusing identical
-cleaning/casting code. At scale: micro-batch size is governed by
+semantics as the batch path (operators/upsert.py), through the batch
+path's own cleaning and declared projection, so PHI is hashed and rows
+without a required key are dropped here too. At scale: micro-batch size is governed by
 ``maxFilesPerTrigger``; the merge's shuffle is on the primary key.
 """
 
@@ -26,14 +27,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StringType, StructField, StructType
 
-from calaveras_uniteus_etl_spark.config import PRIMARY_KEYS
-from calaveras_uniteus_etl_spark.operators.cleaning import (
-    cast_columns,
-    clean,
-    stamp_audit_columns,
-)
+from calaveras_uniteus_etl_spark.config import PRIMARY_KEYS, PHIConfig
+from calaveras_uniteus_etl_spark.operators.cleaning import clean, project_declared
 from calaveras_uniteus_etl_spark.operators.upsert import merge_upsert
-from calaveras_uniteus_etl_spark.schema import TABLE_SCHEMAS, cast_map
+from calaveras_uniteus_etl_spark.schema import TABLE_SCHEMAS
 from calaveras_uniteus_etl_spark.sources.delimited import NULL_VALUES
 from calaveras_uniteus_etl_spark.warehouse import Warehouse
 
@@ -54,6 +51,7 @@ def stream_ingest(
     checkpoint_dir: str,
     sep: str = "|",
     max_files_per_trigger: int | None = None,
+    phi: PHIConfig = PHIConfig(),
 ) -> StreamingQuery:
     """Drain ``input_dir`` into warehouse ``table`` exactly once.
 
@@ -76,7 +74,6 @@ def stream_ingest(
     raw = reader.load(input_dir)
 
     keys = PRIMARY_KEYS.get(table, [])
-    types = cast_map(table)
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
         from pyspark.sql import functions as F
@@ -92,7 +89,7 @@ def stream_ingest(
             ]
         )
         cleaned, _ = clean(df)
-        typed = stamp_audit_columns(cast_columns(cleaned, types))
+        typed = project_declared(cleaned, table, phi)
         if keys:
             # read() of a missing table is the empty declared-schema frame
             merged = merge_upsert(warehouse.read(table), typed, keys)

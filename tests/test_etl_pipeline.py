@@ -77,6 +77,41 @@ def test_null_sentinels_and_quotes(tmp_path, spark):
     assert rows[1]["b"] is None and rows[1]["c"] is None
 
 
+# header edge cases: quoted names (one with the separator), latin-1,
+# UTF-8 BOM, case-insensitive duplicates, empty names, a blank first
+# line, CRLF line ends
+HEADER_CASES = {
+    "fixture.txt": PEOPLE_V1.encode("utf-8"),
+    "quoted.txt": b'"person_id"|"a|b"|"c""d"\n1|2|3\n',
+    "latin1.txt": "caf\xe9|na\xefve\nx|\xe9t\xe9\n".encode("latin-1"),
+    "bom.txt": "\ufeffperson_id|first_name\np1|Jos\xe9\n".encode("utf-8"),
+    "duplicate.txt": b"a|A|b|a\n1|2|3|4\n",
+    "empty_name.txt": b'a||b|""\n1|2|3|4\n',
+    "blank_first.txt": b"\n a |b\r\n1|2\r\n",
+}
+
+
+def test_header_matches_spark_inference(tmp_path, spark):
+    """read_delimited names the columns from its own head probe exactly
+    as Spark's CSV header inference does, and reads the same rows."""
+    for name, data in HEADER_CASES.items():
+        p = tmp_path / name
+        p.write_bytes(data)
+        charset = "iso-8859-1" if detect_encoding(str(p)) == "latin-1" else "utf-8"
+        spark_df = (
+            spark.read.option("header", True).option("sep", "|").option("quote", '"')
+            .option("escape", '"').option("encoding", charset).option("nullValue", "")
+            .csv(str(p))
+        )
+        ours = read_delimited(spark, str(p), with_line_number=True)
+        assert ours.columns == spark_df.columns + ["_line_no"], name
+        want = [
+            tuple(None if v in ("NULL", "null", "None") else v for v in r)
+            for r in spark_df.collect()
+        ]
+        assert [tuple(r)[:-1] for r in ours.collect()] == want, name
+
+
 def test_ingest_end_to_end(tmp_path, spark, input_dir):
     (input_dir / "SAMPLE_people_20240101.txt").write_text(PEOPLE_V1)
     (input_dir / "cases_20240101.txt").write_text(CASES_V1)
@@ -152,6 +187,62 @@ def test_first_load_duplicate_keeps_last(tmp_path, spark, input_dir):
     assert report.tasks[0].rows_inserted == 2
     rows = Warehouse(spark, cfg.warehouse_dir).read("people").collect()
     assert {r["person_id"]: r["first_name"] for r in rows} == {"p1": "Last", "p2": "x"}
+
+
+def test_same_table_files_load_in_date_order(tmp_path, spark, input_dir):
+    """Files of one table load oldest first by the date in their name,
+    whatever their prefix, so the newest delivery wins."""
+    (input_dir / "CHHSCA_people_20240201.txt").write_text(
+        "person_id|first_name\np1|Newer\n"
+    )
+    (input_dir / "SAMPLE_people_20240101.txt").write_text(
+        "person_id|first_name\np1|Older\n"
+    )
+    cfg = _cfg(tmp_path)
+    report = ingest(spark, cfg)
+    counts = {t.file_name: (t.rows_inserted, t.rows_updated) for t in report.tasks}
+    assert counts == {
+        "SAMPLE_people_20240101.txt": (1, 0),
+        "CHHSCA_people_20240201.txt": (0, 1),
+    }
+    [row] = Warehouse(spark, cfg.warehouse_dir).read("people").collect()
+    assert row["first_name"] == "Newer"
+
+
+def test_concurrent_ingest_equals_one_file_per_job(tmp_path, spark):
+    """One ingest job that loads three tables at once leaves the same
+    tables, file statuses and counts as loading the same files one job
+    at a time, oldest first: two people files (the second updates p2),
+    a cases file and a referrals file that fails its schema check."""
+    files = {
+        "people_20240101.txt": PEOPLE_V1,
+        "cases_20240101.txt": CASES_V1,
+        "referrals_20240101.txt": "referral_id|no_such_column\nr1|x\n",
+        "people_20240201.txt": PEOPLE_V2,
+    }
+    by_date = sorted(files, key=lambda n: n[-12:])
+    results = []
+    for run, jobs in (("together", [None]), ("apart", [{n} for n in by_date])):
+        (tmp_path / run / "input").mkdir(parents=True)
+        for name, body in files.items():
+            (tmp_path / run / "input" / name).write_text(body)
+        cfg = _cfg(tmp_path / run, phi_enabled=True)
+        tasks = [t for job in jobs for t in ingest(spark, cfg, selected_files=job).tasks]
+        wh = Warehouse(spark, cfg.warehouse_dir)
+        tables = {
+            table: sorted(
+                tuple(r) for r in wh.read(table).drop("etl_loaded_at", "etl_updated_at").collect()
+            )
+            for table in ("people", "cases", "referrals")
+        }
+        outcome = {t.file_name: (t.status, t.rows_inserted, t.rows_updated) for t in tasks}
+        results.append((tables, outcome))
+    (together, outcome), (apart, outcome_apart) = results
+    assert outcome == outcome_apart
+    assert outcome["people_20240201.txt"] == (TaskStatus.COMPLETED, 1, 1)
+    assert outcome["referrals_20240101.txt"][0] == TaskStatus.FAILED
+    assert together == apart
+    assert len(together["people"]) == 4 and len(together["cases"]) == 3
 
 
 def test_phi_hashing_applied(tmp_path, spark, input_dir):
@@ -295,12 +386,13 @@ def _spark_jobs(spark, fn):
 
 
 def test_ingest_job_budget(tmp_path, spark, input_dir):
-    """Loading one file runs at most 4 Spark jobs more than an ingest
-    that loads nothing (both run the skip check and the metadata
-    append): the header read, the merge's shuffle and write, and the
-    quality append. A counting pass over the file breaks the budget.
-    Checked for a first load and for a reload with one update and one
-    insert."""
+    """Loading one file runs 1 to 3 Spark jobs more than an ingest that
+    loads nothing (both run the skip check and the metadata append): the
+    merge's shuffle and write, and the quality append. The header comes
+    from the encoding probe, not from a job. A counting pass over the
+    file breaks the upper bound; a pool worker that drops the caller's
+    job group breaks the lower one. Checked for a first load and for a
+    reload with one update and one insert."""
     cfg = _cfg(tmp_path)
     (input_dir / "cases_20240101.txt").write_text(CASES_V1)
     ingest(spark, cfg)
@@ -314,4 +406,4 @@ def test_ingest_job_budget(tmp_path, spark, input_dir):
         one_file = _spark_jobs(spark, lambda: reports.append(ingest(spark, cfg)))
         [t] = reports[0].completed
         assert (t.rows_inserted, t.rows_updated) == counts
-        assert one_file - idle <= 4, (name, idle, one_file)
+        assert 1 <= one_file - idle <= 3, (name, idle, one_file)

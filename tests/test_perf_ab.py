@@ -1,0 +1,54 @@
+"""tools/perf_ab.py's per-metric summary: the pairs head won and the
+base's quartiles, and the claim rule they decide (at least 9 in 10
+pairs won, medians further apart than the base's interquartile range)."""
+
+from __future__ import annotations
+
+import sys
+from pathlib import Path
+
+sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
+
+from perf_ab import summarize  # noqa: E402
+
+LOWER = {"name": "build_s", "better": "lower", "bound": 0.25}
+HIGHER = {"name": "requests_per_s", "better": "higher", "bound": 0.25}
+BASE = [float(x) for x in range(10, 20)]  # median 14.5, quartiles 12.25-16.75
+
+
+def test_quartiles_and_wins():
+    r = summarize(LOWER, BASE, [0.6 * x for x in BASE])
+    assert (r["base_q1"], r["base_q3"]) == (12.25, 16.75)
+    assert (r["wins"], r["pairs"]) == (10, 10)
+    assert r["base"] == 14.5 and abs(r["ratio"] - 0.6) < 1e-12
+    assert r["claim"] and not r["worse"] and r["flag"] == "better past 0.25"
+
+
+def test_claim_needs_a_gap_past_the_base_iqr():
+    # every pair won, but the medians are 4.35 apart and the IQR is 4.5
+    r = summarize(LOWER, BASE, [0.7 * x for x in BASE])
+    assert r["wins"] == 10 and not r["claim"]
+
+
+def test_claim_needs_nine_in_ten_wins_ties_for_neither():
+    head = [0.5 * x for x in BASE]
+    head[0] = BASE[0]  # a tie
+    head[1] = BASE[1] + 1  # a loss
+    r = summarize(LOWER, BASE, head)
+    assert r["wins"] == 8 and not r["claim"]
+    head[1] = 0.5 * BASE[1]
+    assert summarize(LOWER, BASE, head)["claim"]
+
+
+def test_higher_is_better_and_worse_past_bound():
+    r = summarize(HIGHER, BASE, [0.7 * x for x in BASE])
+    assert r["wins"] == 0 and r["worse"] and not r["claim"]
+    assert r["flag"] == "WORSE past 0.25"
+    r = summarize(HIGHER, BASE, [x + 10 for x in BASE])
+    assert r["wins"] == 10 and r["claim"] and not r["worse"]
+
+
+def test_single_pair():
+    r = summarize(LOWER, [10.0], [9.0])
+    assert (r["base_q1"], r["base_q3"]) == (10.0, 10.0)
+    assert r["wins"] == 1 and r["claim"] and r["flag"] == ""

@@ -10,11 +10,13 @@ of the same checkpointed query.
 from __future__ import annotations
 
 import datetime as dt
+import hashlib
 
 import pytest
 
 from pyspark.sql import functions as F
 
+from calaveras_uniteus_etl_spark.config import PHIConfig
 from calaveras_uniteus_etl_spark.schema import TABLE_SCHEMAS
 from calaveras_uniteus_etl_spark.streaming import (
     session_window_agg,
@@ -36,6 +38,12 @@ def _write_people_file(path, rows: list[dict]) -> None:
             f.write("|".join(str(row.get(c, "")) for c in cols) + "\n")
 
 
+def _phi(value: str) -> str:
+    """The reference's PHI hash under the default salt."""
+    salt = PHIConfig().salt
+    return hashlib.sha256(f"{salt}{value}{salt}".encode()).hexdigest()
+
+
 def test_stream_ingest_exactly_once_with_upsert(spark, tmp_path):
     inp = tmp_path / "in"
     inp.mkdir()
@@ -51,10 +59,12 @@ def test_stream_ingest_exactly_once_with_upsert(spark, tmp_path):
     )
     _write_people_file(inp / "people_b.txt", [{"person_id": "p3", "first_name": "Cal"}])
 
+    # PHI is hashed as on the batch path, and a keyless row is dropped
+    _write_people_file(inp / "people_nokey.txt", [{"first_name": "Nobody"}])
     q = stream_ingest(spark, str(inp), wh, "people", ckpt)
     q.awaitTermination()
     got = {r["person_id"] for r in wh.read("people").collect()}
-    assert got == {"p1", "p2", "p3"}
+    assert got == {_phi("p1"), _phi("p2"), _phi("p3")}
 
     # second run: only the new file is consumed (the checkpointed file
     # log skips a+b), and the shared key p2 is updated, not duplicated
@@ -65,7 +75,10 @@ def test_stream_ingest_exactly_once_with_upsert(spark, tmp_path):
     q = stream_ingest(spark, str(inp), wh, "people", ckpt)
     q.awaitTermination()
     out = {r["person_id"]: r["first_name"] for r in wh.read("people").collect()}
-    assert out == {"p1": "Ann", "p2": "Bea", "p3": "Cal", "p4": None}
+    assert out == {
+        _phi(k): v and _phi(v)
+        for k, v in {"p1": "Ann", "p2": "Bea", "p3": "Cal", "p4": None}.items()
+    }
 
 
 def _events_df(spark, rows):

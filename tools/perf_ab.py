@@ -6,9 +6,12 @@ Exports ``<rev>`` and HEAD with ``git archive`` into a temp dir and
 runs ``perfbench/run.py`` for BENCHMARK.json's ``run_seconds`` on each
 for every seed, alternating which side goes first so host speed drift
 falls on both. Prints each end-to-end metric's per-seed values, medians
-and head/base ratio, and flags every move past its bound. Exits 1 when
-a run fails a correctness gate or a metric gets worse past its bound.
-Nothing is written inside the checkout.
+and head/base ratio, the pairs head won and the base's quartiles, and
+flags every move past its bound. A gain may be claimed (marked
+``claim``) when head won at least 9 in 10 pairs, ties counting for
+neither, and the medians differ by more than the base's interquartile
+range. Exits 1 when a run fails a correctness gate or a metric gets
+worse past its bound. Nothing is written inside the checkout.
 """
 
 from __future__ import annotations
@@ -42,6 +45,24 @@ def run(tree: str, workload: str, seed: int, seconds: float) -> dict | None:
     return result
 
 
+def summarize(metric: dict, base: list[float], head: list[float]) -> dict:
+    """Compare one end-to-end ``metric`` (a BENCHMARK.json entry) over
+    paired runs: ``base[i]`` and ``head[i]`` ran on the same seed."""
+    lower = metric["better"] == "lower"
+    b, h = statistics.median(base), statistics.median(head)
+    ratio = h / b
+    gain = 1 - ratio if lower else ratio - 1
+    q1, _, q3 = statistics.quantiles(base, n=4, method="inclusive") if len(base) > 1 else base * 3
+    wins = sum((y < x) if lower else (y > x) for x, y in zip(base, head))
+    return {
+        "name": metric["name"], "base": b, "head": h, "ratio": ratio,
+        "wins": wins, "pairs": len(base), "base_q1": q1, "base_q3": q3,
+        "claim": gain > 0 and 10 * wins >= 9 * len(base) and abs(h - b) > q3 - q1,
+        "worse": gain < -metric["bound"],
+        "flag": "" if abs(gain) <= metric["bound"] else ("better" if gain > 0 else "WORSE") + f" past {metric['bound']}",
+    }
+
+
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(prog="perf_ab")
     p.add_argument("--base", required=True)
@@ -72,15 +93,16 @@ def main(argv: list[str] | None = None) -> int:
         shutil.rmtree(tmp, ignore_errors=True)
 
     worse = False
-    print(f"{a.workload}, seeds {a.seeds}: median base, median head, head/base [per seed base/head]")
+    print(f"{a.workload}, seeds {a.seeds}: median base, median head, head/base, "
+          "pairs head won, base q1-q3 [per seed base/head]")
     for m in bench["end_to_end"]:
         b, h = ([r["metrics"][m["name"]]["value"] for r in results[s]] for s in ("base", "head"))
-        ratio = statistics.median(h) / statistics.median(b)
-        gain = 1 - ratio if m["better"] == "lower" else ratio - 1
-        flag = "" if abs(gain) <= m["bound"] else ("better" if gain > 0 else "WORSE") + f" past {m['bound']}"
-        worse |= gain < -m["bound"]
+        r = summarize(m, b, h)
+        worse |= r["worse"]
         seeds = " ".join(f"{x:.4g}/{y:.4g}" for x, y in zip(b, h))
-        print(f"{m['name']:16s} {statistics.median(b):9.4g} {statistics.median(h):9.4g} {ratio:6.3f} [{seeds}] {flag}")
+        print(f"{m['name']:16s} {r['base']:9.4g} {r['head']:9.4g} {r['ratio']:6.3f} "
+              f"{r['wins']:2d}/{r['pairs']} {r['base_q1']:.4g}-{r['base_q3']:.4g} [{seeds}] "
+              f"{r['flag']}{' claim' if r['claim'] else ''}")
     return 1 if worse else 0
 
 
