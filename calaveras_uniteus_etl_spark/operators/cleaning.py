@@ -53,10 +53,8 @@ class CleaningReport:
 
     @property
     def null_counts(self) -> dict[str, int]:
-        """Nulls per data column among the rows B1 kept: a dropped row
-        is null in every column, so it is subtracted from each."""
-        m = self.observation.get
-        return {c: n - m[_ALL_NULL] for c, n in m.items() if c != _ALL_NULL}
+        """Nulls per data column among the rows B1 kept."""
+        return {c: n for c, n in self.observation.get.items() if c != _ALL_NULL}
 
 
 def _string_cols(df: DataFrame) -> list[str]:
@@ -91,8 +89,8 @@ def repair_mojibake_expr(c: Column) -> Column:
 
 def normalize_sentinels_expr(c: Column) -> Column:
     """Empty string / 'nan'-family literals → NULL."""
-    # NULL when c is NULL too: the condition is then NULL, not true
-    return F.when(~F.lower(F.trim(c)).isin("", "nan", "null", "none"), c)
+    t = F.trim(c)
+    return F.when(t.isNull() | (t == "") | F.lower(t).isin("nan", "null", "none"), F.lit(None).cast("string")).otherwise(c)
 
 
 def repair_text(df: DataFrame) -> DataFrame:

@@ -59,7 +59,7 @@ def detect_encoding(path: str) -> str:
     return _encoding_of(_head(path))
 
 
-def header_columns(text: str, sep: str = "|") -> list[str]:
+def _header_columns(text: str, sep: str = "|") -> list[str]:
     """Column names Spark's CSV reader gives the header of ``text``.
 
     The header is the first non-blank line (a leading UTF-8 BOM
@@ -68,7 +68,8 @@ def header_columns(text: str, sep: str = "|") -> list[str]:
     empty name becomes ``_c<i>``, and a name that repeats
     case-insensitively gets its index ``i`` appended.
     """
-    line = next((ln for ln in re.split(r"\r\n|\r|\n", text.removeprefix("\ufeff")) if ln.strip()), None)
+    lines = re.split(r"\r\n|\r|\n", text.removeprefix("\ufeff"))
+    line = next((ln for ln in lines if ln.strip()), None)
     if line is None:
         return []
     row = next(csv.reader([line], delimiter=sep, quotechar='"', doublequote=True))
@@ -97,7 +98,7 @@ def read_delimited(
     head = _head(path)
     enc = encoding or _encoding_of(head)
     charset = _SPARK_CHARSETS.get(enc, enc)
-    names = header_columns(head.decode(charset, errors="replace"), sep)
+    names = _header_columns(head.decode(charset, errors="replace"), sep)
     df = (
         spark.read.schema(StructType([StructField(n, StringType()) for n in names]))
         .option("header", True)

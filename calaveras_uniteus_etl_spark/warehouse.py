@@ -95,7 +95,8 @@ class Warehouse:
         files = _listing(path)
         if not any(os.sep not in f and _is_table_file(f) for f, _, _ in files):
             if table in TABLE_SCHEMAS:
-                return self.spark.createDataFrame([], TABLE_SCHEMAS[table])
+                # limit 0: the optimizer sees the frame is empty and prunes it
+                return self.spark.createDataFrame([], TABLE_SCHEMAS[table]).limit(0)
             raise FileNotFoundError(f"table {table!r} not found in warehouse")
         app_id = self.spark.sparkContext.applicationId
         key = (app_id, path, files)
