@@ -20,7 +20,7 @@ from __future__ import annotations
 import csv
 import re
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
@@ -81,6 +81,13 @@ def _header_columns(text: str, sep: str = "|") -> list[str]:
     ]
 
 
+def null_sentinels(c: str) -> Column:
+    """Column ``c`` with every null sentinel NULL (the CSV reader's
+    ``nullValue`` option covers only the empty string)."""
+    sentinels = [s for s in NULL_VALUES if s]
+    return F.when(F.col(c).isin(*sentinels), None).otherwise(F.col(c)).alias(c)
+
+
 def read_delimited(
     spark: SparkSession,
     path: str,
@@ -109,9 +116,7 @@ def read_delimited(
         .option("nullValue", "")
         .csv(path)
     )
-    # normalize the full sentinel set (the CSV option handles only one)
-    sentinels = [s for s in NULL_VALUES if s]
-    cols = [F.when(F.col(c).isin(*sentinels), None).otherwise(F.col(c)).alias(c) for c in names]
+    cols = [null_sentinels(c) for c in names]
     if with_line_number:
         cols.append(F.monotonically_increasing_id().alias("_line_no"))
     return df.select(*cols)

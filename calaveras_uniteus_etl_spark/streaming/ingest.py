@@ -17,8 +17,9 @@ Writes go through ``foreachBatch`` so each micro-batch can run the
 window-based merge upsert into the warehouse table — the same C2
 semantics as the batch path (operators/upsert.py), through the batch
 path's own cleaning and declared projection, so PHI is hashed and rows
-without a required key are dropped here too. At scale: micro-batch size is governed by
-``maxFilesPerTrigger``; the merge's shuffle is on the primary key.
+without a required key are dropped here too. At scale: micro-batch
+size is governed by ``maxFilesPerTrigger``; the merge's shuffle is on
+the primary key.
 """
 
 from __future__ import annotations
@@ -31,7 +32,7 @@ from calaveras_uniteus_etl_spark.config import PRIMARY_KEYS, PHIConfig
 from calaveras_uniteus_etl_spark.operators.cleaning import clean, project_declared
 from calaveras_uniteus_etl_spark.operators.upsert import merge_upsert
 from calaveras_uniteus_etl_spark.schema import TABLE_SCHEMAS
-from calaveras_uniteus_etl_spark.sources.delimited import NULL_VALUES
+from calaveras_uniteus_etl_spark.sources.delimited import null_sentinels
 from calaveras_uniteus_etl_spark.warehouse import Warehouse
 
 
@@ -58,7 +59,8 @@ def stream_ingest(
     Returns the started query; call ``awaitTermination()`` — with the
     AvailableNow trigger it stops by itself when the directory is
     drained. Re-running with the same checkpoint skips every file the
-    source log already recorded.
+    source log already recorded. ``phi`` should be the batch ingest's
+    ``ETLConfig.phi``, so both paths hash keys with the same salt.
     """
     reader = (
         spark.readStream.format("csv")
@@ -76,18 +78,7 @@ def stream_ingest(
     keys = PRIMARY_KEYS.get(table, [])
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        from pyspark.sql import functions as F
-
-        df = batch_df
-        # normalize the remaining null sentinels (CSV option covers one)
-        df = df.select(
-            *[
-                F.when(F.col(c).isin(*[s for s in NULL_VALUES if s]), None)
-                .otherwise(F.col(c))
-                .alias(c)
-                for c in df.columns
-            ]
-        )
+        df = batch_df.select(*[null_sentinels(c) for c in batch_df.columns])
         cleaned, _ = clean(df)
         typed = project_declared(cleaned, table, phi)
         if keys:
