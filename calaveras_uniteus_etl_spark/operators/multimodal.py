@@ -1,36 +1,24 @@
 """Multimodal (binary-payload) column plumbing.
 
 Treats image/audio/video as opaque ``binary`` columns with typed
-metadata, processed by Arrow-batched ``mapInPandas`` — the shape a
-100 TB media pipeline needs: payloads never pass through Python
-row-at-a-time, batches stream through the worker (no whole-partition
-materialization), and the output schema is a fixed contract so
-downstream plans stay columnar.
+metadata, processed by Arrow-batched ``mapInPandas``: batches stream
+through the worker (no whole-partition materialization), and the
+output schema is a fixed contract so downstream plans stay columnar.
 
-Decode is REAL for formats numpy + the standard library can handle —
-PNG incl. indexed-color (zlib inflate + unfilter), GIF (LZW +
-interlace), PCM WAV (RIFF) via functions/codecs.py, and baseline
-JPEG (Huffman + IDCT) via functions/jpeg.py, TIFF (strips or tiles;
-none/LZW/deflate/PackBits compression; palette; predictor 2),
-and uncompressed BMP — dispatched on magic bytes. MP4 and MP3 parse REAL container metadata (duration,
-dimensions, sample rate) via functions/containers.py; their sample
-decode, and arithmetic/12-bit JPEG, go through a Pillow import
-guard and raise ``NotImplementedError`` when it is absent. Payloads
-with no recognizable magic (the driver's synthetic testdata) fall
-back to the
-DETERMINISTIC FAKE decode — md5-derived pseudo-dimensions — which
-keeps every bit of the Spark-side plumbing (schema, batching,
-partitioning, UDF signature) oracle-checkable: the differential gate
-runs on opaque payloads, the real-codec path is pytest-covered with
-constructed PNG/WAV fixtures.
+The engine decodes no media format. A payload is opaque bytes: its
+``n_bytes`` and md5 ``digest`` are real, and its dimensions
+(``width``/``height``/``duration_s``/``sample_rate``) are a
+deterministic stand-in derived from the digest and the row's
+``media_type``, never read from the payload. Leading magic bytes
+(PNG, JPEG, RIFF, ...) change nothing. The DuckDB oracles of x11,
+x39, x40 and x61 mirror the same formulas, so the whole Spark-side
+path (schema, batching, partitioning, UDF signature) is checked end
+to end.
 """
 
 from __future__ import annotations
 
 import hashlib
-import struct
-import wave
-import zlib
 from collections.abc import Iterator
 
 import numpy as np
@@ -38,102 +26,11 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 
-from calaveras_uniteus_etl_spark.functions import codecs
-
-MEDIA_TYPES = ("image", "audio", "video")
-
 # Output contract of extract_features — fixed, engine-facing.
 FEATURE_SCHEMA = (
     "doc_id bigint, media_type string, n_bytes bigint, digest string, "
     "width int, height int, duration_s int, sample_rate int"
 )
-
-
-def decode_media(payload: bytes, media_type: str) -> dict:
-    """Real decode: PNG, GIF, PCM WAV, and baseline + progressive JPEG
-    natively (functions/codecs.py, functions/jpeg.py); arithmetic/
-    12-bit JPEG via Pillow when installed.
-
-    Raises ``NotImplementedError`` for formats with no available codec
-    (e.g. video containers without libav) rather than silently faking;
-    ``ValueError`` for payloads with no recognizable magic.
-    """
-    kind = codecs.sniff_media(payload)
-    if kind == "png":
-        return codecs.decode_png(payload)
-    if kind == "wav":
-        return codecs.decode_wav(payload)
-    if kind in ("jpeg", "tiff", "bmp"):
-        return codecs.decode_image_any(payload)  # native-first dispatch
-    if kind == "gif":
-        return codecs.decode_gif(payload)
-    if kind in ("mp4", "mp3"):
-        # container METADATA parses natively (functions/containers.py,
-        # used by _real_features below); pixel/sample access would
-        # need libav, which is not in this environment
-        raise NotImplementedError(
-            f"{kind} sample decode requires libav; container metadata "
-            "is available via extract_features"
-        )
-    raise ValueError(
-        f"unrecognized {media_type} payload (no known magic bytes); "
-        "extract_features falls back to the deterministic fake decode"
-    )
-
-
-def _real_features(payload: bytes, media_type: str) -> dict | None:
-    """Feature dict via the real codecs, or None when the payload has
-    no recognizable magic (synthetic testdata -> fake path)."""
-    kind = codecs.sniff_media(payload)
-    if kind is None:
-        return None
-    base = {
-        "n_bytes": len(payload),
-        "digest": hashlib.md5(payload).hexdigest(),
-        "width": None,
-        "height": None,
-        "duration_s": None,
-        "sample_rate": None,
-    }
-    if kind in ("mp4", "mp3"):
-        # real container metadata without sample decode — duration,
-        # dims, sample rate straight from moov / the MPEG frame header
-        from calaveras_uniteus_etl_spark.functions import containers
-
-        try:
-            meta = (
-                containers.parse_mp4_meta(payload)
-                if kind == "mp4"
-                else containers.parse_mp3_meta(payload)
-            )
-        except (ValueError, struct.error):
-            return base  # corrupt container: quarantine on NULL dims
-        base.update({k: meta.get(k) for k in base if k in meta})
-        return base
-    try:
-        decoded = decode_media(payload, media_type)
-    except NotImplementedError:
-        # Recognized format, no codec available (e.g. arithmetic
-        # JPEG without Pillow): identity features with NULL dimensions
-        # — never a fake decode of a real payload. Downstream
-        # quarantines on NULL dims.
-        return base
-    except (ValueError, OSError, EOFError, zlib.error, struct.error,
-            wave.Error):
-        # A truncated/corrupt payload (valid PNG/RIFF magic, bad body)
-        # must quarantine as a NULL-dims row, not kill the whole
-        # mapInPandas job — one bad file in a 100 TB batch cannot be a
-        # job-level failure. The catch is the codec error surface
-        # only: genuine engine bugs (TypeError, MemoryError, ...)
-        # still crash loudly.
-        return base
-    base.update(
-        {
-            k: decoded.get(k)
-            for k in ("width", "height", "duration_s", "sample_rate")
-        }
-    )
-    return base
 
 
 def _fake_features(payload: bytes, media_type: str) -> dict:
@@ -174,12 +71,10 @@ def _masked_i32(vals: np.ndarray, keep: np.ndarray) -> pd.arrays.IntegerArray:
 def _fake_feature_frame(
     doc_ids: np.ndarray, media_types: np.ndarray, payloads: list[bytes]
 ) -> pd.DataFrame:
-    """Vectorized fake decode for a whole batch of unrecognized
-    payloads: md5 per row (C-speed hashlib), every derived column
-    computed columnarly with numpy — identical formulas to
-    ``_fake_features``, without the per-row dict/DataFrame-of-dicts
-    construction that dominated the old kernel (guide §4.2: hand whole
-    batches to vectorized code)."""
+    """Vectorized fake decode for a whole batch of payloads: md5 per
+    row (C-speed hashlib), every derived column computed columnarly
+    with numpy — identical formulas to ``_fake_features``, with no
+    per-row dict construction."""
     n = len(payloads)
     digests = [hashlib.md5(p).hexdigest() for p in payloads]
     h1 = np.fromiter((int(d[:15], 16) for d in digests), dtype=np.int64, count=n)
@@ -209,38 +104,26 @@ def _fake_feature_frame(
 def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """mapInPandas kernel: one output row per media row, per batch.
 
-    Streams Arrow batches — peak memory is one batch, not one
-    partition, which is what keeps this viable when payloads are MBs.
-    Batches with no recognizable magic anywhere (the synthetic-corpus
-    common case) take a fully vectorized fake-decode path; batches
-    containing real payloads fall back to the per-row codec dispatch.
+    Streams Arrow batches, so peak memory is one batch, not one
+    partition. Every payload, whatever its leading bytes, goes through
+    the same vectorized digest-derived decode.
     """
     for pdf in batches:
-        payloads = [bytes(p) for p in pdf["payload"]]
-        if not any(codecs.sniff_media(p) for p in payloads):
-            yield _fake_feature_frame(
-                pdf["doc_id"].values, pdf["media_type"].values, payloads
-            )
-            continue
-        feats = [
-            _real_features(p, mt) or _fake_features(p, mt)
-            for p, mt in zip(payloads, pdf["media_type"])
-        ]
-        out = pd.DataFrame(feats)
-        out.insert(0, "media_type", pdf["media_type"].values)
-        out.insert(0, "doc_id", pdf["doc_id"].values)
-        yield out.astype(
-            {
-                "width": "Int32",
-                "height": "Int32",
-                "duration_s": "Int32",
-                "sample_rate": "Int32",
-            }
+        yield _fake_feature_frame(
+            pdf["doc_id"].values,
+            pdf["media_type"].values,
+            [bytes(p) for p in pdf["payload"]],
         )
 
 
 def extract_features(media: DataFrame) -> DataFrame:
     """Feature-extract a media DataFrame(doc_id, payload, media_type).
+
+    Opaque-payload contract: ``n_bytes`` and ``digest`` (md5 hex) come
+    from the payload bytes; ``width``/``height``/``duration_s``/
+    ``sample_rate`` are the digest-derived stand-in of
+    ``_fake_features`` for the row's ``media_type``, not a decode, and
+    are the same for a payload whatever its leading bytes.
 
     Arrow-batched; no shuffle — a narrow map over whatever partitioning
     the payload table already has (at scale: size partitions by bytes,

@@ -428,10 +428,6 @@ def _simhash_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
     return session_index(spark, sf_dir, "simhash_fp", build)
 
 
-def x3_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _simhash_fp(spark, sf_dir)
-
-
 @register(
     "x3_simhash_pairs",
     oracle=f"""

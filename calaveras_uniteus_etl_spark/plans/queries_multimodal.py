@@ -63,9 +63,10 @@ SELECT doc_id,
        CASE WHEN doc_id % 3 = 1 THEN CAST(8000 + ({_H2} % 8) * 4000 AS INT) END AS sample_rate
 FROM documents
 """,
-    doc="Multimodal feature extraction: binary payload column → Arrow-"
-    "batched mapInPandas decode (deterministic fake; real codecs stub "
-    "behind import-try) with fixed output schema.",
+    doc="Multimodal feature extraction: opaque binary payload column → "
+    "Arrow-batched mapInPandas; byte count and md5 digest, with "
+    "digest-derived stand-in dimensions (no format decode), in a fixed "
+    "output schema.",
 )
 def _features_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-indexed media featurization: the Arrow mapInPandas
@@ -85,10 +86,6 @@ def _features_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         "media_features",
         lambda: materialize(extract_features(_media(spark, sf_dir))),
     )
-
-
-def x11_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _features_index(spark, sf_dir)
 
 
 @register(

@@ -50,29 +50,39 @@ def test_vectorized_fake_frame_matches_per_row_decode():
     )
 
 
-def test_extract_batches_mixed_batch_falls_back_per_row():
-    """A batch containing one RECOGNIZED payload must route through the
-    per-row codec path for every row — never fake a real payload."""
+def test_extract_batches_magic_payloads_take_digest_path():
+    """Payloads are opaque: one starting with PNG, JPEG, RIFF-WAVE, GIF
+    or ``ftyp`` magic gets the same digest-derived features as plain
+    text, never a decode and never NULL dimensions."""
     from calaveras_uniteus_etl_spark.operators.multimodal import (
         _extract_batches,
+        _fake_features,
     )
 
-    # minimal valid-magic PNG header (truncated body -> NULL dims) next
-    # to a synthetic payload
-    png = b"\x89PNG\r\n\x1a\n" + b"\x00" * 16
+    payloads = [
+        b"\x89PNG\r\n\x1a\n" + b"\x00" * 16,
+        b"\xff\xd8\xff\xe0" + b"\x00" * 16,
+        b"RIFF\x24\x00\x00\x00WAVEfmt " + b"\x00" * 16,
+        b"GIF89a" + b"\x00" * 16,
+        b"\x00\x00\x00\x18ftypmp42" + b"\x00" * 16,
+        b"plain text",
+    ]
+    mts = ["image", "image", "audio", "image", "video", "video"]
     pdf = pd.DataFrame(
         {
-            "doc_id": np.array([1, 2], dtype=np.int64),
-            "payload": [png, b"plain text"],
-            "media_type": ["image", "image"],
+            "doc_id": np.arange(len(payloads), dtype=np.int64),
+            "payload": payloads,
+            "media_type": mts,
         }
     )
     (out,) = list(_extract_batches(iter([pdf])))
-    byid = out.set_index("doc_id")
-    # recognized-but-truncated payload: identity features, NULL dims
-    assert pd.isna(byid.loc[1, "width"])
-    # unrecognized payload: fake decode fills dims
-    assert not pd.isna(byid.loc[2, "width"])
+    cols = ["n_bytes", "digest", "width", "height", "duration_s", "sample_rate"]
+    for i, (p, mt) in enumerate(zip(payloads, mts)):
+        row = out.iloc[i]
+        assert row["doc_id"] == i and row["media_type"] == mt
+        want = _fake_features(p, mt)
+        got = {c: (None if pd.isna(row[c]) else row[c]) for c in cols}
+        assert got == {c: want[c] for c in cols}, (mt, p[:8])
 
 
 def test_x39_expression_resize_matches_kernel(spark):
