@@ -127,7 +127,7 @@ def ingest_file(
     if keys:
         # _line_no orders within-batch duplicates (keep-last, SURVEY §7.3).
         # Safe though the plan reads the table it replaces: the warehouse
-        # writes to a tmp dir and swaps only after success.
+        # writes a new version and never touches the one being read.
         out = merge_upsert(
             wh.read(table), declared, keys, order_col="_line_no", observation=counts
         )

@@ -222,6 +222,4 @@ class SFTPStage:
             synced_by,
         )
         df = spark.createDataFrame([row], TABLE_SCHEMAS["sftp_cache"])
-        wh.write(
-            "sftp_cache", df, mode="append" if wh.exists("sftp_cache") else "overwrite"
-        )
+        wh.write("sftp_cache", df, mode="append")

@@ -9,11 +9,11 @@ the stream only ever shuffles its own micro-batch on the rollup key,
 and the merge rewrites a key-grain table that stays aggregate-sized.
 
 Restart safety: foreachBatch is at-least-once — a crash after the
-warehouse swap succeeds but before the checkpoint commit log records
+warehouse commit succeeds but before the checkpoint commit log records
 the batch replays that batch_id on restart, and a naive merge would
 double-count it. The rollup therefore carries the last applied
 batch_id in-band (``_applied_batch``, a constant column written in
-the same atomic swap as the data it covers), and ``sink`` skips any
+the same atomic commit as the data it covers), and ``sink`` skips any
 batch whose id is <= the recorded one. batch_ids are assigned
 monotonically by the checkpoint, so skip-if-seen makes the merge
 idempotent across crash-replay and the maintained table exactly-once.
@@ -113,18 +113,18 @@ def apply_batch(
     """Merge one micro-batch into the rollup, idempotently per batch_id.
 
     Returns False (no-op) when ``batch_id`` was already applied BY THE
-    SAME RUN — the crash-replay case where the previous attempt's swap
-    landed but its checkpoint commit did not. Both the batch_id and
-    the run id travel in the same atomic swap as the merged data, so
-    the markers can never disagree with the table contents. A batch
-    from a DIFFERENT run id (fresh/recreated checkpoint) is never
-    skipped: batch_ids restart at 0 there, and skipping on the stale
-    marker would silently drop data. The same applies across the
-    version boundary in either direction — a run-id-aware caller on a
-    legacy table (no run marker), or a legacy caller (run_id=None) on
-    a run-id-written table (warns) — merge, never skip, on any marker
-    mismatch. Only a legacy caller on a legacy table still dedupes on
-    batch_id alone.
+    SAME RUN — the crash-replay case where the previous attempt's
+    warehouse commit landed but its checkpoint commit did not. Both the
+    batch_id and the run id travel in the same table version as the
+    merged data, so the markers can never disagree with the table
+    contents. A batch from a DIFFERENT run id (fresh/recreated
+    checkpoint) is never skipped: batch_ids restart at 0 there, and
+    skipping on the stale marker would silently drop data. The same
+    applies across the version boundary in either direction — a
+    run-id-aware caller on a legacy table (no run marker), or a legacy
+    caller (run_id=None) on a run-id-written table (warns) — merge,
+    never skip, on any marker mismatch. Only a legacy caller on a
+    legacy table still dedupes on batch_id alone.
     """
     partial = _partials(batch, key, value)
     if warehouse.exists(ROLLUP_TABLE):

@@ -1,17 +1,10 @@
-"""Parquet-backed warehouse: the engine's table store.
-
-Replaces the reference's SQLite data DB (/root/reference/core/
-database.py) with partition-friendly parquet directories, one per
-table, registered as temp views for Spark SQL. Writes are atomic at
-the directory level (write to ``<table>.tmp-<nonce>``, swap) so a
-failed job never corrupts the live table — the closest plain-parquet
-analog of the reference's transactional upsert.
-
-At 100 TB the same layout holds: fact tables gain a partition column
-(e.g. month of the primary timestamp) via ``partition_by``; the
-overwrite-merge upsert becomes a partition-scoped rewrite rather than
-a whole-table one when keys are time-clustered (or a Delta/Iceberg
-MERGE where a lakehouse format is available).
+"""Parquet-backed warehouse, the engine's table store in place of the
+reference's SQLite data DB (/root/reference/core/database.py). Every
+write fills a new version directory ``<root>/_versions/<table>/v<N>/``
+and commits it by one atomic replace of the ``<root>/<table>`` symlink;
+nothing writes to a version after that. A reader sees the old table or
+the new one, as under the reference's WAL mode, and a failed or crashed
+write leaves the old one live.
 """
 
 from __future__ import annotations
@@ -19,69 +12,63 @@ from __future__ import annotations
 import os
 import shutil
 import threading
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
 from calaveras_uniteus_etl_spark.schema import TABLE_SCHEMAS
 
-# (applicationId, table path, file listing) -> resolved DataFrame. Only
-# misses mutate it, under the lock, so any thread may read it.
-_READ_MEMO: dict[tuple[str, str, tuple], DataFrame] = {}
+# Superseded versions kept beside the current one; older ones are deleted.
+RETAINED_VERSIONS = 2
+
+# (applicationId, table path, version directory, file listing) ->
+# resolved DataFrame. Only misses mutate it, under the lock, so any
+# thread may read it.
+_READ_MEMO: dict[tuple[str, str, str, tuple], DataFrame] = {}
 _READ_MEMO_LOCK = threading.Lock()
-
-
-def _is_table_file(name: str) -> bool:
-    return name.endswith(".parquet") or name == "_SUCCESS"
 
 
 def _listing(root: str) -> tuple[tuple[str, int, int], ...]:
     """Sorted (relative path, size, mtime_ns) of every file under root."""
-    while True:
-        try:
-            out = []
-            for d, _, names in os.walk(root):
-                for n in names:
-                    st = os.stat(os.path.join(d, n))
-                    rel = os.path.join(d[len(root) + 1:], n)
-                    out.append((rel, st.st_size, st.st_mtime_ns))
-            return tuple(sorted(out))
-        except FileNotFoundError:  # a swap moved the table mid-walk
-            continue
+    out = []
+    for d, _, names in os.walk(root):
+        for n in names:
+            st = os.stat(os.path.join(d, n))
+            out.append((os.path.join(d[len(root) + 1:], n), st.st_size, st.st_mtime_ns))
+    return tuple(sorted(out))
+
+
+def _link_files(src: str, dst: str) -> None:
+    """Hard-link src's parquet files and their .crc side files into dst,
+    keeping partition subdirectories. Never ``_SUCCESS``: Hadoop
+    rewrites it in place, which through a link would change src."""
+    for d, _, names in os.walk(src):
+        out = os.path.join(dst, os.path.relpath(d, src))
+        for n in names:
+            if n.endswith((".parquet", ".parquet.crc")):
+                os.makedirs(out, exist_ok=True)
+                os.link(os.path.join(d, n), os.path.join(out, n))
 
 
 class Warehouse:
-    """Table store over ``root``; one parquet directory per table.
-
-    ``read`` resolves each table version once: it walks the table
-    directory and memoizes the lazy DataFrame by (applicationId, table
-    path, sorted (relative path, size, mtime_ns) of every file under
-    it). A hit skips Spark's file listing and schema inference; no rows
-    are cached. Every overwrite, append or restore writes part files
-    under new names, so the key changes: the next read misses, resolves
-    the new files and drops the path's older entry and any dead
-    session's entries.
+    """Table store over ``root``; ``<root>/<table>/*.parquet`` names the
+    live files. ``read`` resolves the table's link once and memoizes the
+    lazy DataFrame by (applicationId, table path, version directory,
+    sorted (relative path, size, mtime_ns) of every file under it); no
+    rows are cached, and a scan planned before a commit keeps its files.
+    Every write commits a new version, so the next read misses and drops
+    the path's older entry and any dead session's entries.
     """
 
-    def __init__(self, spark: SparkSession, root: str, snapshot_retention: int = 0):
-        """``snapshot_retention`` > 0 turns every overwrite's displaced
-        directory into a retained table version (time travel): the
-        atomic swap already produces the old directory for free, so
-        keeping the last N versions costs one rename instead of a
-        delete — the plain-parquet sketch of a lakehouse table's
-        version history. 0 (default) preserves the original
-        delete-on-swap behavior."""
+    def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
-        self.snapshot_retention = snapshot_retention
         os.makedirs(root, exist_ok=True)
 
     def path(self, table: str) -> str:
         return os.path.join(self.root, table)
 
     def exists(self, table: str) -> bool:
-        p = self.path(table)
-        return os.path.isdir(p) and any(_is_table_file(f) for f in os.listdir(p))
+        return os.path.isdir(self.path(table))  # only a commit makes the path
 
     # column renames shipped after warehouses existed: old name -> new.
     # read() aliases on the fly so pre-rename tables keep working; the
@@ -92,18 +79,19 @@ class Warehouse:
 
     def read(self, table: str) -> DataFrame:
         path = os.path.abspath(self.path(table))
-        files = _listing(path)
-        if not any(os.sep not in f and _is_table_file(f) for f, _, _ in files):
+        version = os.path.realpath(path)
+        files = _listing(version)
+        if not files:
             if table in TABLE_SCHEMAS:
                 # limit 0: the optimizer sees the frame is empty and prunes it
                 return self.spark.createDataFrame([], TABLE_SCHEMAS[table]).limit(0)
             raise FileNotFoundError(f"table {table!r} not found in warehouse")
         app_id = self.spark.sparkContext.applicationId
-        key = (app_id, path, files)
+        key = (app_id, path, version, files)
         hit = _READ_MEMO.get(key)
         if hit is not None:
             return hit
-        df = self.spark.read.parquet(path)
+        df = self.spark.read.parquet(version)
         for old, new in self._LEGACY_RENAMES.get(table, {}).items():
             if old in df.columns and new not in df.columns:
                 df = df.withColumnRenamed(old, new)
@@ -120,76 +108,90 @@ class Warehouse:
         mode: str = "overwrite",
         partition_by: list[str] | None = None,
     ) -> None:
-        """Write with atomic swap for overwrites.
+        """Commit ``df`` as a new version; ``append`` links the current
+        version's files in beside it. A plan that reads the table it
+        replaces (the merge-upsert shape) reads an untouched version."""
 
-        Overwriting a table whose own scan feeds the new plan (the
-        merge-upsert shape) would otherwise read-while-truncate; the
-        tmp-dir swap also removes that hazard.
-        """
-        target = self.path(table)
-        if mode == "append" and self.exists(table):
-            writer = df.write.mode("append")
+        def fill(version: str, current: str | None) -> None:
+            writer = df.write.mode("append")  # into the empty reserved directory
             if partition_by:
                 writer = writer.partitionBy(*partition_by)
-            writer.parquet(target)
-            return
-        tmp = f"{target}.tmp-{uuid.uuid4().hex[:8]}"
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(tmp)
-        old = f"{target}.old-{uuid.uuid4().hex[:8]}"
-        if os.path.exists(target):
-            os.rename(target, old)
-        os.rename(tmp, target)
-        if os.path.exists(old):
-            if self.snapshot_retention > 0:
-                os.makedirs(self._snap_root(table), exist_ok=True)
-                seq = (max(self.list_snapshots(table), default=-1)) + 1
-                os.rename(old, self._snap_path(table, seq))
-                self._prune_snapshots(table)
-            else:
-                shutil.rmtree(old, ignore_errors=True)
+            writer.parquet(version)
+            if mode == "append" and current is not None:
+                _link_files(current, version)
 
-    # ------------------------------------------------------------------
-    # Table versions (time travel). Versions are integers in write
-    # order; version v is the table state displaced by the (v+1)-th
-    # retained overwrite. Monotonic across pruning: sequence numbers
-    # are never reused, so "version 7" always means the same bytes.
-    # ------------------------------------------------------------------
-
-    def _snap_root(self, table: str) -> str:
-        return os.path.join(self.root, "_snapshots", table)
-
-    def _snap_path(self, table: str, seq: int) -> str:
-        return os.path.join(self._snap_root(table), f"v{seq:08d}")
-
-    def list_snapshots(self, table: str) -> list[int]:
-        """Retained version numbers, oldest first."""
-        root = self._snap_root(table)
-        if not os.path.isdir(root):
-            return []
-        return sorted(
-            int(d[1:]) for d in os.listdir(root)
-            if d.startswith("v") and d[1:].isdigit()
-        )
-
-    def _prune_snapshots(self, table: str) -> None:
-        snaps = self.list_snapshots(table)
-        for seq in snaps[: max(0, len(snaps) - self.snapshot_retention)]:
-            shutil.rmtree(self._snap_path(table, seq), ignore_errors=True)
-
-    def read_version(self, table: str, version: int) -> DataFrame:
-        """Read a retained historical version of a table."""
-        p = self._snap_path(table, version)
-        if not os.path.isdir(p):
-            raise FileNotFoundError(
-                f"table {table!r} has no retained version {version}; "
-                f"available: {self.list_snapshots(table)}"
-            )
-        return self.spark.read.parquet(p)
+        self._commit(table, fill)
 
     def restore(self, table: str, version: int) -> None:
-        """Make a historical version current (the pre-restore state is
-        itself retained as a new version, so a restore is undoable)."""
-        self.write(table, self.read_version(table, version))
+        """Commit a retained version again as hard links; undoable like any write."""
+        src = self._retained(table, version)
+        self._commit(table, lambda new, current: _link_files(src, new))
+
+    def read_version(self, table: str, version: int) -> DataFrame:
+        """Read a retained superseded version of a table."""
+        return self.spark.read.parquet(self._retained(table, version))
+
+    def list_snapshots(self, table: str) -> list[int]:
+        """Retained superseded version numbers, oldest first."""
+        current = self._current(table)
+        return [n for n in self._numbers(table) if current is not None and n < current]
+
+    def _retained(self, table: str, version: int) -> str:
+        kept = self.list_snapshots(table)
+        if version not in kept:
+            raise FileNotFoundError(f"table {table!r} has no retained version {version}; available: {kept}")
+        return self._version_path(table, version)
+
+    def _commit(self, table: str, fill) -> None:
+        """Reserve a version, ``fill(it, current version or None)``, make it live, prune."""
+        path = self.path(table)
+        if os.path.isdir(path) and not os.path.islink(path):
+            # a table from before versions: adopt it, the one non-atomic step
+            adopted = self._reserve(table)
+            os.rename(path, adopted)
+            self._point(table, adopted)
+        current = self._current(table)
+        version = self._reserve(table)
+        fill(version, None if current is None else self._version_path(table, current))
+        self._point(table, version)
+        self._prune(table, current, int(os.path.basename(version)[1:]))
+
+    def _point(self, table: str, version: str) -> None:
+        # the link is made inside the version, so a pruned version
+        # cannot be made live, and a crash leaves it where prune looks
+        link = os.path.join(version, "_commit")
+        os.symlink(os.path.relpath(version, self.root), link)
+        os.replace(link, self.path(table))
+
+    def _version_path(self, table: str, version: int) -> str:
+        return os.path.join(self.root, "_versions", table, f"v{version:08d}")
+
+    def _numbers(self, table: str) -> list[int]:
+        """Every version on disk, committed or not; nothing else lives there."""
+        d = os.path.dirname(self._version_path(table, 0))
+        return sorted(int(n[1:]) for n in (os.listdir(d) if os.path.isdir(d) else []))
+
+    def _current(self, table: str) -> int | None:
+        try:
+            return int(os.path.basename(os.readlink(self.path(table)))[1:])
+        except OSError:  # no table, or one from before versions
+            return None
+
+    def _reserve(self, table: str) -> str:
+        """Create the next version directory; makedirs fails on a number another writer took."""
+        while True:
+            version = self._version_path(table, max(self._numbers(table), default=-1) + 1)
+            try:
+                os.makedirs(version)
+                return version
+            except FileExistsError:
+                continue
+
+    def _prune(self, table: str, previous: int | None, new: int) -> None:
+        """Keep ``new`` and the last RETAINED_VERSIONS up to ``previous``;
+        delete every other older version, committed or not."""
+        numbers = self._numbers(table)
+        keep = {new, *[n for n in numbers if previous is not None and n <= previous][-RETAINED_VERSIONS:]}
+        for n in numbers:
+            if n < new and n not in keep:
+                shutil.rmtree(self._version_path(table, n), ignore_errors=True)

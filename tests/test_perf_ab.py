@@ -1,6 +1,8 @@
 """tools/perf_ab.py's per-metric summary: the pairs head won and the
-base's quartiles, and the claim rule they decide (at least 9 in 10
-pairs won, medians further apart than the base's interquartile range)."""
+base's quartiles, the claim rule they decide (at least 10 pairs run, at
+least 9 in 10 of them won, medians further apart than the base's
+interquartile range) and the unresolved mark (base interquartile range
+wider than the bound, head and base runs not separated)."""
 
 from __future__ import annotations
 
@@ -51,4 +53,22 @@ def test_higher_is_better_and_worse_past_bound():
 def test_single_pair():
     r = summarize(LOWER, [10.0], [9.0])
     assert (r["base_q1"], r["base_q3"]) == (10.0, 10.0)
-    assert r["wins"] == 1 and r["claim"] and r["flag"] == ""
+    assert r["wins"] == 1 and not r["claim"] and r["flag"] == ""
+
+
+def test_claim_needs_ten_pairs():
+    r = summarize(LOWER, [10.0, 11.0, 12.0], [5.0, 5.5, 6.0])
+    assert r["wins"] == 3 and r["pairs"] == 3 and not r["claim"]
+
+
+def test_unresolved_when_base_spread_exceeds_bound():
+    # IQR 4.5 > 0.25 * 14.5: the runs spread wider than the bound
+    r = summarize(LOWER, BASE, [x - 0.1 for x in BASE])
+    assert r["unresolved"] and not r["worse"]
+    # unless every head run beats every base run
+    assert not summarize(LOWER, BASE, [x - 10 for x in BASE])["unresolved"]
+    assert not summarize(HIGHER, BASE, [x + 10 for x in BASE])["unresolved"]
+    assert summarize(HIGHER, BASE, [x + 5 for x in BASE])["unresolved"]
+    # a tight base resolves
+    tight = [100.0 + 0.1 * i for i in range(10)]
+    assert not summarize(LOWER, tight, tight)["unresolved"]

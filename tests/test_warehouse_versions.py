@@ -1,11 +1,11 @@
-"""Warehouse table versions (time travel on the atomic-swap writer).
+"""Warehouse table versions (time travel over the committed versions).
 
-The overwrite swap produces the displaced directory for free; with
-snapshot_retention > 0 it becomes a retained version instead of being
-deleted. These tests prove: version numbering is monotonic in write
-order, old versions read back bit-identically, retention prunes
-oldest-first without renumbering, restore round-trips and is itself
-undoable, and retention=0 keeps the original delete behavior.
+Every write commits a new immutable version and the warehouse keeps the
+last RETAINED_VERSIONS superseded ones. These tests prove: version
+numbering is monotonic in write order, old versions read back
+bit-identically, retention prunes oldest-first without renumbering,
+restore round-trips and is itself undoable, and versions beyond the
+retained count are deleted from disk.
 """
 
 from __future__ import annotations
@@ -15,7 +15,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from calaveras_uniteus_etl_spark.warehouse import Warehouse
+from calaveras_uniteus_etl_spark.warehouse import RETAINED_VERSIONS, Warehouse
 
 
 def _rows(df):
@@ -23,36 +23,38 @@ def _rows(df):
 
 
 def test_versions_accumulate_and_read_back(spark, tmp_path):
-    wh = Warehouse(spark, str(tmp_path / "wh"), snapshot_retention=5)
-    for gen in range(3):
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    for gen in range(RETAINED_VERSIONS + 1):
         df = spark.range(3).select(
             "id", (F.col("id") * 10 + gen).alias("v")
         )
         wh.write("t", df)
-    # two overwrites displaced two versions (the first write had
-    # nothing to displace)
-    assert wh.list_snapshots("t") == [0, 1]
+    # the last write is current; every earlier one is a retained version
+    assert wh.list_snapshots("t") == list(range(RETAINED_VERSIONS))
     assert _rows(wh.read_version("t", 0)) == [(0, 0), (1, 10), (2, 20)]
     assert _rows(wh.read_version("t", 1)) == [(0, 1), (1, 11), (2, 21)]
-    assert _rows(wh.read("t")) == [(0, 2), (1, 12), (2, 22)]
+    gen = RETAINED_VERSIONS
+    assert _rows(wh.read("t")) == [(0, gen), (1, 10 + gen), (2, 20 + gen)]
     with pytest.raises(FileNotFoundError, match="no retained version 9"):
         wh.read_version("t", 9)
 
 
 def test_retention_prunes_oldest_without_renumbering(spark, tmp_path):
-    wh = Warehouse(spark, str(tmp_path / "wh"), snapshot_retention=2)
-    for gen in range(5):
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    writes = RETAINED_VERSIONS + 3
+    for gen in range(writes):
         wh.write(
             "t", spark.range(2).select("id", F.lit(gen).alias("v"))
         )
-    # 4 displaced versions, only the latest 2 retained; numbering is
-    # NOT compacted — version 3 still means the 4th write's state
-    assert wh.list_snapshots("t") == [2, 3]
-    assert {r.v for r in wh.read_version("t", 3).collect()} == {3}
+    # only the latest RETAINED_VERSIONS superseded versions are kept;
+    # numbering is NOT compacted — version n still means write n's state
+    kept = list(range(writes - 1 - RETAINED_VERSIONS, writes - 1))
+    assert wh.list_snapshots("t") == kept
+    assert {r.v for r in wh.read_version("t", kept[-1]).collect()} == {kept[-1]}
 
 
 def test_restore_is_undoable(spark, tmp_path):
-    wh = Warehouse(spark, str(tmp_path / "wh"), snapshot_retention=4)
+    wh = Warehouse(spark, str(tmp_path / "wh"))
     wh.write("t", spark.range(2).select("id", F.lit("a").alias("v")))
     wh.write("t", spark.range(2).select("id", F.lit("b").alias("v")))
     assert {r.v for r in wh.read("t").collect()} == {"b"}
@@ -66,15 +68,18 @@ def test_restore_is_undoable(spark, tmp_path):
 
 
 def test_retention_zero_keeps_delete_behavior(spark, tmp_path):
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    wh.write("t", spark.range(2).select("id", F.lit(0).alias("v")))
-    wh.write("t", spark.range(2).select("id", F.lit(1).alias("v")))
-    assert wh.list_snapshots("t") == []
-    assert not os.path.isdir(os.path.join(str(tmp_path / "wh"), "_snapshots", "t"))
+    """Versions beyond the retained count are gone from disk."""
+    root = str(tmp_path / "wh")
+    wh = Warehouse(spark, root)
+    for gen in range(RETAINED_VERSIONS + 3):
+        wh.write("t", spark.range(2).select("id", F.lit(gen).alias("v")))
+    on_disk = os.listdir(os.path.join(root, "_versions", "t"))
+    assert len(on_disk) == RETAINED_VERSIONS + 1
+    assert len(wh.list_snapshots("t")) == RETAINED_VERSIONS
 
 
 def test_partitioned_table_versions_read_back(spark, tmp_path):
-    wh = Warehouse(spark, str(tmp_path / "wh"), snapshot_retention=3)
+    wh = Warehouse(spark, str(tmp_path / "wh"))
     for gen in range(2):
         df = spark.range(6).select(
             "id", (F.col("id") % 3).alias("day"), F.lit(gen).alias("v")

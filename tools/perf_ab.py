@@ -8,10 +8,14 @@ for every seed, alternating which side goes first so host speed drift
 falls on both. Prints each end-to-end metric's per-seed values, medians
 and head/base ratio, the pairs head won and the base's quartiles, and
 flags every move past its bound. A gain may be claimed (marked
-``claim``) when head won at least 9 in 10 pairs, ties counting for
-neither, and the medians differ by more than the base's interquartile
-range. Exits 1 when a run fails a correctness gate or a metric gets
-worse past its bound. Nothing is written inside the checkout.
+``claim``) when at least 10 pairs ran, head won at least 9 in 10 of
+them, ties counting for neither, and the medians differ by more than
+the base's interquartile range. A metric is marked ``unresolved`` when
+the base's interquartile range is wider than its bound times the base
+median, unless every head run beats every base run: its runs spread too
+widely to call it unchanged. Exits 1 when a run fails a correctness
+gate or a metric gets worse past its bound. Nothing is written inside
+the checkout.
 """
 
 from __future__ import annotations
@@ -54,10 +58,12 @@ def summarize(metric: dict, base: list[float], head: list[float]) -> dict:
     gain = 1 - ratio if lower else ratio - 1
     q1, _, q3 = statistics.quantiles(base, n=4, method="inclusive") if len(base) > 1 else base * 3
     wins = sum((y < x) if lower else (y > x) for x, y in zip(base, head))
+    separated = max(head) < min(base) if lower else min(head) > max(base)
     return {
         "name": metric["name"], "base": b, "head": h, "ratio": ratio,
         "wins": wins, "pairs": len(base), "base_q1": q1, "base_q3": q3,
-        "claim": gain > 0 and 10 * wins >= 9 * len(base) and abs(h - b) > q3 - q1,
+        "claim": gain > 0 and len(base) >= 10 and 10 * wins >= 9 * len(base) and abs(h - b) > q3 - q1,
+        "unresolved": q3 - q1 > metric["bound"] * b and not separated,
         "worse": gain < -metric["bound"],
         "flag": "" if abs(gain) <= metric["bound"] else ("better" if gain > 0 else "WORSE") + f" past {metric['bound']}",
     }
@@ -102,7 +108,7 @@ def main(argv: list[str] | None = None) -> int:
         seeds = " ".join(f"{x:.4g}/{y:.4g}" for x, y in zip(b, h))
         print(f"{m['name']:16s} {r['base']:9.4g} {r['head']:9.4g} {r['ratio']:6.3f} "
               f"{r['wins']:2d}/{r['pairs']} {r['base_q1']:.4g}-{r['base_q3']:.4g} [{seeds}] "
-              f"{r['flag']}{' claim' if r['claim'] else ''}")
+              f"{r['flag']}{' claim' if r['claim'] else ''}{' unresolved' if r['unresolved'] else ''}")
     return 1 if worse else 0
 
 
