@@ -1,5 +1,5 @@
 """Parquet-backed warehouse, the engine's table store in place of the
-reference's SQLite data DB (/root/reference/core/database.py). Every
+reference's SQLite data DB (reference core/database.py). Every
 write fills a new version directory ``<root>/_versions/<table>/v<N>/``
 and commits it by one atomic replace of the ``<root>/<table>`` symlink;
 nothing writes to a version after that. A reader sees the old table or
