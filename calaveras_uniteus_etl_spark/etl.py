@@ -16,12 +16,14 @@ The Spark re-expression of the reference's ETL job lifecycle
 Per-file pipeline: read (A1) → schema-validate (§1.4, critical → FAIL
 the file) → clean B1-B4 → one projection onto the declared row (cast,
 PHI hash, audit stamp; rows missing a required field dropped) → merge
-by primary key, the first load included (C2), or append a keyless
-table (C1). The header comes from the driver-side encoding probe, and
-the cleaning report and the inserted/updated counts are observations
-that fill during the write, so the write is a file's only Spark work.
-Per job, after every file: schema-error, data-quality and metadata
-rows (C5/C6), one append each.
+by primary key, the first load included (C2). Only the declared data
+tables load, each with its primary key; a file naming a bookkeeping
+table such as ``etl_metadata`` fails validation, so no delivery writes
+the load record. The header comes from the driver-side encoding probe,
+and the cleaning report and the inserted/updated counts are
+observations that fill during the write, so the write is a file's only
+Spark work. Per job, after every file: schema-error, data-quality and
+metadata rows (C5/C6), one append each.
 """
 
 from __future__ import annotations
@@ -122,18 +124,15 @@ def ingest_file(
         loaded_at or datetime.now(tz=timezone.utc).replace(tzinfo=None),
     )
 
-    keys = PRIMARY_KEYS.get(table)
     counts = Observation()
-    if keys:
-        # _line_no orders within-batch duplicates (keep-last, SURVEY §7.3).
-        # Safe though the plan reads the table it replaces: the warehouse
-        # writes a new version and never touches the one being read.
-        out = merge_upsert(
-            wh.read(table), declared, keys, order_col="_line_no", observation=counts
-        )
-    else:
-        out = declared.drop("_line_no").observe(counts, F.count(F.lit(1)).alias("inserted"))
-    wh.write(table, out, mode="overwrite" if keys else "append")
+    # _line_no orders within-batch duplicates (keep-last, SURVEY §7.3).
+    # Safe though the plan reads the table it replaces: the warehouse
+    # writes a new version and never touches the one being read.
+    out = merge_upsert(
+        wh.read(table), declared, PRIMARY_KEYS[table], order_col="_line_no",
+        observation=counts,
+    )
+    wh.write(table, out, mode="overwrite")
     # the write filled both observations; reading them runs no job
     stats = upsert_stats(counts)
     task.rows_inserted, task.rows_updated = stats.inserted, stats.updated

@@ -118,7 +118,8 @@ def project_declared(
     PHI-hashed when ``phi`` lists it; a declared column the file lacks
     is NULL, and the audit pair is stamped with ``loaded_at`` (now when
     None). An order column (``_line_no``) passes through. Rows missing
-    a required field the file carries are dropped.
+    a required field are dropped; schema validation has already failed
+    a file that lacks a required column.
     """
     present = set(df.columns)
     hashed = set(phi.fields.get(table, ())) if phi.enabled else set()
@@ -135,11 +136,8 @@ def project_declared(
             if f.name in hashed:
                 c = salted_sha256(c, phi.salt)
         cols.append(c.alias(f.name))
-    required = [
-        c for c in REQUIRED_FIELDS.get(table, PRIMARY_KEYS.get(table, [])) if c in present
-    ]
-    if required:
-        df = df.filter(reduce(operator.and_, [F.col(c).isNotNull() for c in required]))
+    required = REQUIRED_FIELDS.get(table, PRIMARY_KEYS[table])
+    df = df.filter(reduce(operator.and_, [F.col(c).isNotNull() for c in required]))
     return df.select(*cols, *[c for c in df.columns if c == "_line_no"])
 
 

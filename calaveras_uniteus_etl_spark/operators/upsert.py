@@ -35,7 +35,6 @@ def merge_upsert(
     incoming: DataFrame,
     keys: list[str],
     order_col: str | None = None,
-    evolve_schema: bool = False,
     observation: Observation | None = None,
 ) -> DataFrame:
     """Last-write-wins merge: per key, the last ``incoming`` row by
@@ -51,23 +50,17 @@ def merge_upsert(
     with the ``inserted`` and ``updated`` counts during the merged
     frame's first action (read them with ``upsert_stats``).
 
-    ``evolve_schema=True`` is the lakehouse mergeSchema behavior: a
-    column new to the batch is APPENDED to the table schema (existing
-    rows read null there), and a column the batch stopped sending is
-    kept (upserted rows null there — last-write-wins applies to the
-    whole row, so an absent column is an explicit null, not a
-    carry-forward). Default stays strict: the batch must cover the
-    table's columns, extras are rejected rather than silently dropped.
+    The batch must carry the table's columns; a column the table lacks
+    is rejected rather than silently dropped.
     """
     order = [order_col] if order_col else []
     extra = [c for c in incoming.columns if c not in existing.columns + order]
-    if extra and not evolve_schema:
+    if extra:
         raise ValueError(
             f"merge_upsert: batch carries columns {extra} absent from the "
-            "table; pass evolve_schema=True to append them (silently "
-            "dropping data would be a correctness hazard)"
+            "table (silently dropping data would be a correctness hazard)"
         )
-    batch = incoming if evolve_schema else incoming.select(*existing.columns, *order)
+    batch = incoming.select(*existing.columns, *order)
     tagged = existing.withColumn(_SIDE, F.lit(0)).unionByName(
         batch.withColumn(_SIDE, F.lit(1)), allowMissingColumns=True
     )
@@ -93,12 +86,11 @@ def upsert_stats(observation: Observation) -> UpsertStats:
     (core/database.py:450-465): updated = batch keys already in the
     table, inserted = the rest, both after within-batch dedupe.
 
-    Reads the ``observation`` a ``merge_upsert`` (or an append, which
-    observes ``inserted`` only) filled during its write; runs no Spark
-    job. Call it only after that write returned.
+    Reads the ``observation`` a ``merge_upsert`` filled during its
+    write; runs no Spark job. Call it only after that write returned.
     """
     m = observation.get
-    return UpsertStats(inserted=m["inserted"], updated=m.get("updated", 0))
+    return UpsertStats(inserted=m["inserted"], updated=m["updated"])
 
 
 def undo_load(

@@ -1,1 +1,1 @@
-"""Sources: delimited file scan, discovery/routing, streaming ingest."""
+"""Sources: delimited file scan, discovery/routing, schema validation."""

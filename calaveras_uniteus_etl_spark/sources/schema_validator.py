@@ -3,8 +3,14 @@
 
 Compares a file's header columns against the declared table schema:
 
-- unknown table → critical ``missing_table`` (with a suggested
-  StructType snippet, the DDL-generation analog)
+- a table that is not one of the declared data tables
+  (``EXPECTED_TABLES``, each with a primary key) → critical
+  ``missing_table`` (with a suggested StructType snippet, the
+  DDL-generation analog); the bookkeeping tables ``etl_metadata``,
+  ``data_quality_issues``, ``schema_errors`` and ``sftp_cache`` are
+  declared but never loaded from a file
+- expected column absent from the file → critical
+  ``missing_required_column`` (reference core/config.py:325-334)
 - file column absent from the declared schema → critical
   ``missing_column`` (suggested type inferred from name heuristics)
 - declared column absent from the file → warning (NULL-filled)
@@ -17,6 +23,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+from calaveras_uniteus_etl_spark.config import EXPECTED_TABLES
 from calaveras_uniteus_etl_spark.schema import TABLE_SCHEMAS
 
 # column-name → type heuristics (reference schema_validator.py:285-292)
@@ -38,7 +45,8 @@ def infer_type_from_name(column: str) -> str:
 
 @dataclass(frozen=True)
 class SchemaIssue:
-    error_type: str  # missing_table | missing_column | extra_column
+    # missing_table | missing_required_column | missing_column | extra_column
+    error_type: str
     severity: str  # critical | warning
     table_name: str
     column_name: str | None
@@ -61,8 +69,8 @@ class ValidationResult:
 
 def validate_schema(table_name: str, file_columns: list[str]) -> ValidationResult:
     issues: list[SchemaIssue] = []
-    declared = TABLE_SCHEMAS.get(table_name)
-    if declared is None:
+    expected = EXPECTED_TABLES.get(table_name)
+    if expected is None:
         fields = ", ".join(
             f'("{c}", {infer_type_from_name(c)})' for c in file_columns
         )
@@ -72,13 +80,27 @@ def validate_schema(table_name: str, file_columns: list[str]) -> ValidationResul
                 severity="critical",
                 table_name=table_name,
                 column_name=None,
-                suggestion=f"declare StructType for {table_name}: [{fields}]",
+                suggestion=(
+                    f"{table_name} is not a data table; to load it, declare its "
+                    f"StructType, primary key and expected columns: [{fields}]"
+                ),
             )
         )
         return ValidationResult(table_name, issues)
 
-    declared_cols = {f.name for f in declared.fields}
+    declared_cols = {f.name for f in TABLE_SCHEMAS[table_name].fields}
     file_cols = [c for c in file_columns if not c.startswith("_")]
+    for c in expected:
+        if c not in file_cols:
+            issues.append(
+                SchemaIssue(
+                    error_type="missing_required_column",
+                    severity="critical",
+                    table_name=table_name,
+                    column_name=c,
+                    suggestion=f"file lacks required column '{c}' of {table_name}",
+                )
+            )
     for c in file_cols:
         if c not in declared_cols:
             issues.append(
@@ -93,7 +115,7 @@ def validate_schema(table_name: str, file_columns: list[str]) -> ValidationResul
                     ),
                 )
             )
-    ingestable = set(file_cols) | {"etl_loaded_at", "etl_updated_at"}
+    ingestable = set(file_cols) | set(expected) | {"etl_loaded_at", "etl_updated_at"}
     for c in declared_cols - ingestable:
         issues.append(
             SchemaIssue(

@@ -2,11 +2,10 @@
 
 The reference's only time-driven behavior is a polling scheduler
 (/root/reference/core/app.py:157-410, SURVEY.md §2.K) — no streaming
-semantics to port. This package is the idiomatic-Spark upgrade path:
+semantics to port, and its one load path is the batch ETL job
+(``etl.ingest``). This package holds the streaming operators the
+registry's streaming and lifecycle plans run:
 
-- ``ingest``: file-source streaming ingest with checkpointed
-  exactly-once file tracking (replaces the reference's md5-based
-  processed-file bookkeeping, core/etl_service.py:364-370);
 - ``windows``: watermarked tumbling-window aggregates (the streaming
   twin of plans/queries_streaming.s1_tumbling_window);
 - ``sessionize``: built-in ``session_window`` aggregation plus a
@@ -18,17 +17,8 @@ semantics to port. This package is the idiomatic-Spark upgrade path:
   built-in windowed aggregate expresses.
 """
 
-from calaveras_uniteus_etl_spark.streaming.enrich import (  # noqa: F401
-    enrich_with_dimension,
-)
 from calaveras_uniteus_etl_spark.streaming.ewma import (  # noqa: F401
     ewma_with_state,
-)
-from calaveras_uniteus_etl_spark.streaming.ingest import stream_ingest  # noqa: F401
-from calaveras_uniteus_etl_spark.streaming.rollup import (  # noqa: F401
-    apply_batch,
-    merge_rollup,
-    stream_rollup,
 )
 from calaveras_uniteus_etl_spark.streaming.windows import (  # noqa: F401
     windowed_agg,

@@ -7,10 +7,9 @@ passed ``next_run`` — stamps ``last_run``/``next_run`` BEFORE syncing
 files + runs the ETL (/root/reference/core/app.py:221-310; the config
 endpoints at core/app.py:1569-1648). In this engine the same contract
 is a CLI loop: ``cli.py sync --loop`` polls the identical single-row
-warehouse table and each due tick drives ``etl.ingest`` (whose
-file-source dedup already makes re-runs idempotent; the streaming
-twin, ``streaming/ingest.py``'s AvailableNow drain, shares that
-idempotence via the checkpoint file log).
+warehouse table and each due tick drives ``etl.ingest``, whose
+(file_name, md5) skip check in ``etl_metadata`` makes re-runs
+idempotent.
 
 The clock is injectable everywhere — ticks take ``now`` and the loop
 takes ``clock``/``sleep`` — so scheduling decisions are deterministic

@@ -5,15 +5,23 @@ FIXTURES.md + tests/unit/test_database.py:257-297 insert/update counts)."""
 
 from __future__ import annotations
 
+import hashlib
 import os
 import uuid
 
 import pytest
 from pyspark.sql import functions as F
 
-from calaveras_uniteus_etl_spark.config import ETLConfig, PHIConfig
+from calaveras_uniteus_etl_spark.config import (
+    EXPECTED_TABLES,
+    PRIMARY_KEYS,
+    REQUIRED_FIELDS,
+    ETLConfig,
+    PHIConfig,
+)
 from calaveras_uniteus_etl_spark.etl import ingest
 from calaveras_uniteus_etl_spark.functions.hashing import salted_sha256
+from calaveras_uniteus_etl_spark.schema import TABLE_SCHEMAS
 from calaveras_uniteus_etl_spark.sources.delimited import detect_encoding, read_delimited
 from calaveras_uniteus_etl_spark.sources.discovery import TaskStatus
 from calaveras_uniteus_etl_spark.warehouse import Warehouse
@@ -280,6 +288,54 @@ def test_schema_validation_fails_unknown_column(tmp_path, spark, input_dir):
     wh = Warehouse(spark, cfg.warehouse_dir)
     errors = wh.read("schema_errors").collect()
     assert any(e.error_type == "missing_column" for e in errors)
+
+
+def test_delivered_file_cannot_forge_the_load_record(tmp_path, spark, input_dir):
+    """A file routed to a bookkeeping table fails as missing_table, so it
+    cannot mark a later delivery as already loaded."""
+    cases_md5 = hashlib.md5(CASES_V1.encode()).hexdigest()
+    (input_dir / "SAMPLE_etl_metadata_20240101.txt").write_text(
+        "file_name|table_name|file_hash|status\n"
+        f"SAMPLE_cases_20240103.txt|cases|{cases_md5}|completed\n"
+    )
+    cfg = _cfg(tmp_path)
+    [forged] = ingest(spark, cfg).tasks
+    assert forged.status == TaskStatus.FAILED
+    wh = Warehouse(spark, cfg.warehouse_dir)
+    assert [(e.table_name, e.error_type) for e in wh.read("schema_errors").collect()] == [
+        ("etl_metadata", "missing_table")
+    ]
+
+    (input_dir / "SAMPLE_cases_20240103.txt").write_text(CASES_V1)
+    report = ingest(spark, cfg)
+    assert [t.file_name for t in report.completed] == ["SAMPLE_cases_20240103.txt"]
+    assert wh.read("cases").count() == 3
+
+
+def test_file_without_key_column_fails(tmp_path, spark, input_dir):
+    """A file that lacks an expected column (here the primary key) fails
+    its schema check instead of merging rows with a NULL key."""
+    (input_dir / "SAMPLE_people_20240102.txt").write_text(
+        "first_name|last_name\nAnn|Ayes\n"
+    )
+    cfg = _cfg(tmp_path)
+    [task] = ingest(spark, cfg).tasks
+    assert task.status == TaskStatus.FAILED and "person_id" in task.error
+    wh = Warehouse(spark, cfg.warehouse_dir)
+    errors = [(e.error_type, e.column_name, e.severity) for e in wh.read("schema_errors").collect()]
+    assert ("missing_required_column", "person_id", "critical") in errors
+    assert not wh.exists("people")
+
+
+def test_every_data_table_is_declared_and_keyed():
+    """Every loadable table has a declared schema and a primary key that
+    its expected columns cover, so a file that passes validation always
+    carries the columns its merge keys on and its rows are filtered by."""
+    assert set(PRIMARY_KEYS) == set(EXPECTED_TABLES)
+    for table, expected in EXPECTED_TABLES.items():
+        assert table in TABLE_SCHEMAS, table
+        assert PRIMARY_KEYS[table] and set(PRIMARY_KEYS[table]) <= set(expected), table
+        assert set(REQUIRED_FIELDS.get(table, ())) <= set(expected), table
 
 
 def test_required_field_rows_dropped(tmp_path, spark, input_dir):

@@ -1,0 +1,91 @@
+"""Every engine module has a caller.
+
+Walks, with ``ast``, the imports reachable from the product's entry
+points (the CLI, the ETL job, the sync ticks, the query registry under
+``plans/`` and the driver contract ``__spark_entry__.py``). An engine
+module outside ``plans/`` that none of them reaches is dead code and
+fails this test, unless it is named in ``AWAITING_CLI`` with the
+SURVEY.md row of the reference feature it ports.
+"""
+
+from __future__ import annotations
+
+import ast
+from pathlib import Path
+
+REPO = Path(__file__).resolve().parent.parent
+PKG = "calaveras_uniteus_etl_spark"
+
+# the entry points (``__main__`` is ``python -m``'s door to the CLI);
+# every module under plans/ is one too
+ROOTS = ("__spark_entry__", f"{PKG}.__main__", f"{PKG}.cli", f"{PKG}.etl", f"{PKG}.sync")
+
+# Reference-parity modules that no CLI command exposes yet.
+AWAITING_CLI = {
+    f"{PKG}.sources.jdbc": "SURVEY.md A11, any-to-any database migration",
+    f"{PKG}.sources.sftp": "SURVEY.md A6, SFTP pull source",
+    f"{PKG}.sources.staging": "SURVEY.md A7, input staging sink",
+    f"{PKG}.reports.document": "SURVEY.md A12, Word/PDF report sink",
+}
+
+
+def _module_files() -> dict[str, Path]:
+    """Dotted name -> file, for every module of the package."""
+    out = {}
+    for path in (REPO / PKG).rglob("*.py"):
+        parts = list(path.relative_to(REPO).with_suffix("").parts)
+        if parts[-1] == "__init__":
+            parts.pop()
+        out[".".join(parts)] = path
+    return out
+
+
+def _imports(path: Path) -> set[str]:
+    """Every module ``path`` imports, with its enclosing packages
+    (importing a module runs their ``__init__``). The package imports
+    absolutely; ``from pkg import name`` counts ``pkg.name`` too, which
+    is the submodule when ``name`` is one."""
+    found = set()
+    for node in ast.walk(ast.parse(path.read_text())):
+        if isinstance(node, ast.Import):
+            targets = [a.name for a in node.names]
+        elif isinstance(node, ast.ImportFrom) and node.module:
+            targets = [node.module] + [f"{node.module}.{a.name}" for a in node.names]
+        else:
+            continue
+        for target in targets:
+            parts = target.split(".")
+            found |= {".".join(parts[:i]) for i in range(1, len(parts) + 1)}
+    return found
+
+
+def _reachable(modules: dict[str, Path]) -> set[str]:
+    files = {**modules, "__spark_entry__": REPO / "__spark_entry__.py"}
+    todo = [*ROOTS, *(n for n in modules if n.startswith(f"{PKG}.plans"))]
+    seen = set()
+    while todo:
+        name = todo.pop()
+        if name not in seen:
+            seen.add(name)
+            todo += _imports(files[name]) & files.keys()
+    return seen
+
+
+def test_every_engine_module_is_reachable_from_an_entry_point():
+    modules = _module_files()
+    reachable = _reachable(modules)
+    unreachable = {
+        name
+        for name in modules
+        if name not in reachable
+        and not name.startswith(f"{PKG}.plans")
+        and name not in AWAITING_CLI
+    }
+    assert not unreachable, f"engine modules without a caller: {sorted(unreachable)}"
+
+
+def test_awaiting_cli_list_names_only_unreached_modules():
+    """An entry leaves the list once a command reaches its module."""
+    modules = _module_files()
+    assert set(AWAITING_CLI) <= modules.keys()
+    assert not set(AWAITING_CLI) & _reachable(modules)

@@ -1,10 +1,11 @@
 """Structured Streaming surface tests.
 
-Covers: exactly-once file-source ingest (checkpointed file log +
-micro-batch merge upsert), watermarked tumbling windows matching the
-batch plan, built-in session windows matching gap-and-island, and the
-applyInPandasWithState sessionizer holding state across separate runs
-of the same checkpointed query.
+Covers: exactly-once file ingest through the one batch load path
+(``etl.ingest``: (file_name, md5) skip check plus merge upsert),
+watermarked tumbling windows matching the batch plan, built-in session
+windows matching gap-and-island, and the applyInPandasWithState
+sessionizer holding state across separate runs of the same
+checkpointed query.
 """
 
 from __future__ import annotations
@@ -16,12 +17,13 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from calaveras_uniteus_etl_spark.config import PHIConfig
+from calaveras_uniteus_etl_spark.config import ETLConfig, PHIConfig
+from calaveras_uniteus_etl_spark.etl import ingest
 from calaveras_uniteus_etl_spark.schema import TABLE_SCHEMAS
+from calaveras_uniteus_etl_spark.sources.discovery import TaskStatus
 from calaveras_uniteus_etl_spark.streaming import (
     session_window_agg,
     sessionize_with_state,
-    stream_ingest,
     windowed_agg,
 )
 from calaveras_uniteus_etl_spark.warehouse import Warehouse
@@ -45,35 +47,40 @@ def _phi(value: str) -> str:
 
 
 def test_stream_ingest_exactly_once_with_upsert(spark, tmp_path):
+    """Each delivered file loads exactly once: a re-run skips the files
+    already recorded in etl_metadata and merges only the new one."""
     inp = tmp_path / "in"
     inp.mkdir()
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    ckpt = str(tmp_path / "ckpt")
+    cfg = ETLConfig(input_dir=str(inp), warehouse_dir=str(tmp_path / "wh"))
+    wh = Warehouse(spark, cfg.warehouse_dir)
 
     _write_people_file(
-        inp / "people_a.txt",
+        inp / "people_20240101.txt",
         [
             {"person_id": "p1", "first_name": "Ann"},
             {"person_id": "p2", "first_name": "Bob"},
+            # PHI is hashed, and a row without its key is dropped
+            {"first_name": "Nobody"},
         ],
     )
-    _write_people_file(inp / "people_b.txt", [{"person_id": "p3", "first_name": "Cal"}])
-
-    # PHI is hashed as on the batch path, and a keyless row is dropped
-    _write_people_file(inp / "people_nokey.txt", [{"first_name": "Nobody"}])
-    q = stream_ingest(spark, str(inp), wh, "people", ckpt)
-    q.awaitTermination()
+    _write_people_file(inp / "people_20240102.txt", [{"person_id": "p3", "first_name": "Cal"}])
+    first = ingest(spark, cfg)
+    assert [t.status for t in first.tasks] == [TaskStatus.COMPLETED] * 2
     got = {r["person_id"] for r in wh.read("people").collect()}
     assert got == {_phi("p1"), _phi("p2"), _phi("p3")}
 
-    # second run: only the new file is consumed (the checkpointed file
-    # log skips a+b), and the shared key p2 is updated, not duplicated
+    # second run: only the new file loads (a and b are skipped), and the
+    # shared key p2 is updated, not duplicated
     _write_people_file(
-        inp / "people_c.txt",
+        inp / "people_20240103.txt",
         [{"person_id": "p2", "first_name": "Bea"}, {"person_id": "p4"}],
     )
-    q = stream_ingest(spark, str(inp), wh, "people", ckpt)
-    q.awaitTermination()
+    second = ingest(spark, cfg)
+    assert sorted(t.file_name for t in second.skipped) == [
+        "people_20240101.txt", "people_20240102.txt"
+    ]
+    [c] = second.completed
+    assert (c.file_name, c.rows_inserted, c.rows_updated) == ("people_20240103.txt", 1, 1)
     out = {r["person_id"]: r["first_name"] for r in wh.read("people").collect()}
     assert out == {
         _phi(k): v and _phi(v)
@@ -278,211 +285,6 @@ def test_streaming_dedup_within_watermark(spark, tmp_path):
     out = spark.read.schema(df1.schema).parquet(sink)
     ids = sorted(r["event_id"] for r in out.collect())
     assert ids == [100, 101]
-
-
-def test_stream_static_enrich_matches_batch(spark, small_events, tmp_path):
-    """Stream-static broadcast join: per-micro-batch enrich equals the
-    batch join, row for row."""
-    from calaveras_uniteus_etl_spark.streaming.enrich import enrich_with_dimension
-
-    dim = spark.createDataFrame(
-        [("click", "web"), ("view", "web"), ("purchase", "commerce")],
-        "etype string, channel string",
-    )
-    src_dir, ckpt = str(tmp_path / "in"), str(tmp_path / "ck")
-    small_events.write.parquet(src_dir)
-
-    stream = spark.readStream.schema(small_events.schema).parquet(src_dir)
-    enriched = enrich_with_dimension(stream, dim, "event_type", "etype").select(
-        "event_id", "event_type", "channel"
-    )
-    q = (
-        enriched.writeStream.format("memory")
-        .queryName("enrich_out")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    got = {
-        (r.event_id, r.event_type, r.channel)
-        for r in spark.sql("SELECT * FROM enrich_out").collect()
-    }
-    want = {
-        (r.event_id, r.event_type, r.channel)
-        for r in enrich_with_dimension(small_events, dim, "event_type", "etype")
-        .select("event_id", "event_type", "channel")
-        .collect()
-    }
-    assert got == want and len(want) > 0
-
-
-def test_foreachbatch_rollup_equals_batch_recompute(spark, small_events, tmp_path):
-    """Incrementally-maintained rollup == full batch aggregate after
-    two separate drains (new files arriving between runs)."""
-    from calaveras_uniteus_etl_spark.streaming.rollup import (
-        ROLLUP_TABLE,
-        stream_rollup,
-    )
-    from calaveras_uniteus_etl_spark.warehouse import Warehouse
-
-    src = tmp_path / "roll_in"
-    src.mkdir()
-    ckpt = str(tmp_path / "roll_ck")
-    wh = Warehouse(spark, str(tmp_path / "roll_wh"))
-
-    half1 = small_events.filter(F.col("event_id") % 2 == 0)
-    half2 = small_events.filter(F.col("event_id") % 2 == 1)
-
-    half1.write.parquet(str(src / "drop1"))
-    q = stream_rollup(spark, str(src / "*"), wh, ckpt, small_events.schema)
-    q.awaitTermination(120)
-
-    half2.write.parquet(str(src / "drop2"))
-    q = stream_rollup(spark, str(src / "*"), wh, ckpt, small_events.schema)
-    q.awaitTermination(120)
-
-    got = {
-        (r.event_type, r.n_events, str(r.sum_value))
-        for r in wh.read(ROLLUP_TABLE).collect()
-    }
-    want = {
-        (r.event_type, r.n_events, str(r.sum_value))
-        for r in small_events.groupBy("event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,6)"))
-            .cast("decimal(38,6)")
-            .alias("sum_value"),
-        )
-        .collect()
-    }
-    assert got == want and len(want) > 0
-
-
-def test_rollup_crash_replay_is_idempotent(spark, small_events, tmp_path):
-    """At-least-once foreachBatch: re-delivering an already-applied
-    batch_id (crash after swap, before checkpoint commit) must not
-    double-count; a NEW batch_id with the same data must."""
-    from calaveras_uniteus_etl_spark.streaming.rollup import (
-        ROLLUP_TABLE,
-        apply_batch,
-    )
-    from calaveras_uniteus_etl_spark.warehouse import Warehouse
-
-    wh = Warehouse(spark, str(tmp_path / "replay_wh"))
-
-    assert apply_batch(wh, small_events, batch_id=0) is True
-    baseline = {
-        (r.event_type, r.n_events, str(r.sum_value))
-        for r in wh.read(ROLLUP_TABLE).collect()
-    }
-
-    # crash-replay: same batch_id again -> skipped, table unchanged
-    assert apply_batch(wh, small_events, batch_id=0) is False
-    assert {
-        (r.event_type, r.n_events, str(r.sum_value))
-        for r in wh.read(ROLLUP_TABLE).collect()
-    } == baseline
-
-    # genuinely new batch -> merged (counts double)
-    assert apply_batch(wh, small_events, batch_id=1) is True
-    doubled = {
-        (r.event_type, r.n_events)
-        for r in wh.read(ROLLUP_TABLE).collect()
-    }
-    assert doubled == {(t, n * 2) for (t, n, _s) in baseline}
-
-
-def test_rollup_fresh_checkpoint_does_not_drop_data(spark, small_events, tmp_path):
-    """Losing the checkpoint dir restarts batch_ids at 0; the run-id
-    marker must prevent the skip-if-seen guard from silently dropping
-    every batch of the new run against the existing rollup."""
-    from calaveras_uniteus_etl_spark.streaming.rollup import (
-        ROLLUP_TABLE,
-        apply_batch,
-        checkpoint_run_id,
-    )
-    from calaveras_uniteus_etl_spark.warehouse import Warehouse
-
-    wh = Warehouse(spark, str(tmp_path / "fresh_wh"))
-    ck1 = str(tmp_path / "ck1")
-    run1 = checkpoint_run_id(ck1)
-    assert apply_batch(wh, small_events, batch_id=5, run_id=run1) is True
-    baseline = {
-        (r.event_type, r.n_events) for r in wh.read(ROLLUP_TABLE).collect()
-    }
-
-    # same run, replayed batch -> still deduped
-    assert apply_batch(wh, small_events, batch_id=5, run_id=run1) is False
-
-    # checkpoint dir lost/recreated: new run id, batch_ids restart at 0.
-    # batch 0 <= recorded batch 5, but it is a DIFFERENT run -> merged.
-    ck2 = str(tmp_path / "ck2")
-    run2 = checkpoint_run_id(ck2)
-    assert run2 != run1
-    assert apply_batch(wh, small_events, batch_id=0, run_id=run2) is True
-    assert {
-        (r.event_type, r.n_events) for r in wh.read(ROLLUP_TABLE).collect()
-    } == {(t, n * 2) for (t, n) in baseline}
-
-    # and the same checkpoint dir yields the same id across restarts
-    assert checkpoint_run_id(ck2) == run2
-
-
-def test_rollup_legacy_table_without_run_marker_merges(spark, small_events, tmp_path):
-    """A rollup written by pre-run-id code has no _applied_run column;
-    a run-id-aware caller must MERGE against it (at-least-once), not
-    skip on the legacy batch marker."""
-    from calaveras_uniteus_etl_spark.streaming.rollup import (
-        ROLLUP_TABLE,
-        apply_batch,
-    )
-    from calaveras_uniteus_etl_spark.warehouse import Warehouse
-
-    wh = Warehouse(spark, str(tmp_path / "legacy_roll_wh"))
-    # legacy writer: no run_id -> marker column present, run column NULL
-    assert apply_batch(wh, small_events, batch_id=7, run_id=None) is True
-    baseline = {
-        (r.event_type, r.n_events) for r in wh.read(ROLLUP_TABLE).collect()
-    }
-    # legacy callers still dedupe among themselves
-    assert apply_batch(wh, small_events, batch_id=7, run_id=None) is False
-    # run-id-aware caller with a fresh checkpoint: batch 0 <= 7 but the
-    # marker is not this run's -> merged, not dropped
-    assert apply_batch(wh, small_events, batch_id=0, run_id="r-new") is True
-    assert {
-        (r.event_type, r.n_events) for r in wh.read(ROLLUP_TABLE).collect()
-    } == {(t, n * 2) for (t, n) in baseline}
-
-
-def test_rollup_legacy_caller_on_run_id_table_merges(spark, small_events, tmp_path):
-    """Mixed versions the OTHER way: a legacy caller (run_id=None)
-    restarting with a fresh checkpoint against a run-id-written table
-    must merge (with a warning), not skip on the stale batch marker —
-    its batch_ids restarted at 0 and the recorded sequence is not its
-    own."""
-    import warnings as _warnings
-
-    from calaveras_uniteus_etl_spark.streaming.rollup import (
-        ROLLUP_TABLE,
-        apply_batch,
-    )
-    from calaveras_uniteus_etl_spark.warehouse import Warehouse
-
-    wh = Warehouse(spark, str(tmp_path / "mixed_roll_wh"))
-    assert apply_batch(wh, small_events, batch_id=9, run_id="r-old") is True
-    baseline = {
-        (r.event_type, r.n_events) for r in wh.read(ROLLUP_TABLE).collect()
-    }
-    with _warnings.catch_warnings(record=True) as caught:
-        _warnings.simplefilter("always")
-        assert apply_batch(wh, small_events, batch_id=0, run_id=None) is True
-    assert any("mixed-version" in str(w.message) for w in caught)
-    assert {
-        (r.event_type, r.n_events) for r in wh.read(ROLLUP_TABLE).collect()
-    } == {(t, n * 2) for (t, n) in baseline}
 
 
 def test_interval_join_rejects_ambiguous_extra(spark):
