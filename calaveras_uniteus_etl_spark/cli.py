@@ -358,7 +358,6 @@ def cmd_sync(spark, a) -> int:
     wh = Warehouse(spark, a.warehouse)
     if a.configure:
         cfg = save_config(
-            spark,
             wh,
             enabled=not a.disabled,
             interval_minutes=a.interval_minutes,

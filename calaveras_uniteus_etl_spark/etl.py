@@ -11,7 +11,10 @@ The Spark re-expression of the reference's ETL job lifecycle
   (file date, file name) order, so the newest delivery wins
 - the reference's per-row UPDATE upsert becomes one ranked-window
   merge (operators/upsert.py)
-- job/metadata/data-quality bookkeeping are ordinary appended tables
+- job/metadata/data-quality bookkeeping are ordinary appended tables,
+  but like the reference's row operations they stay on the driver: the
+  skip check scans ``etl_metadata`` with pyarrow and each append writes
+  one small parquet file with pyarrow, so neither runs a Spark job
 
 Per-file pipeline: read (A1) → schema-validate (§1.4, critical → FAIL
 the file) → clean B1-B4 → one projection onto the declared row (cast,
@@ -23,7 +26,8 @@ the load record. The header comes from the driver-side encoding probe,
 and the cleaning report and the inserted/updated counts are
 observations that fill during the write, so the write is a file's only
 Spark work. Per job, after every file: schema-error, data-quality and
-metadata rows (C5/C6), one append each.
+metadata rows (C5/C6), one driver-side append each (``Warehouse.write_rows``).
+An ingest that skips every file runs no Spark job.
 """
 
 from __future__ import annotations
@@ -32,8 +36,9 @@ from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
 
+import pyarrow.dataset as ds
 from pyspark.sql import Observation, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 from pyspark.util import inheritable_thread_target
 
 from calaveras_uniteus_etl_spark.config import ETLConfig, PRIMARY_KEYS
@@ -52,6 +57,11 @@ from calaveras_uniteus_etl_spark.warehouse import Warehouse
 
 # driver threads loading one table each, the reference ETL's pool size
 INGEST_WORKERS = 4
+
+# the etl_metadata columns the skip check reads
+_SKIP_COLUMNS = StructType(
+    [f for f in TABLE_SCHEMAS["etl_metadata"] if f.name in ("file_name", "file_hash", "status")]
+)
 
 
 @dataclass
@@ -72,29 +82,25 @@ class IngestReport:
         return [t for t in self.tasks if t.status == TaskStatus.SKIPPED]
 
 
-def _processed_subset(
-    spark: SparkSession, wh: Warehouse, candidates: list[tuple[str, str]]
-) -> set[tuple[str, str]]:
+def _processed_subset(wh: Warehouse, candidates: list[tuple[str, str]]) -> set[tuple[str, str]]:
     """Which of this batch's (file_name, md5) pairs are already loaded
     (reference incremental-skip identity, etl_service.py:213-229).
 
-    Semi-join shape on purpose: the candidate list (this batch's file
-    listing) is the small side, so only its matches ever reach the
-    driver — bounded by batch size. Collecting etl_metadata itself
-    would grow with total history and eventually not fit.
+    A pyarrow scan of the live etl_metadata version on the driver, no
+    Spark job. The filter on status and on this batch's file names runs
+    in the scan, so only those rows reach the driver — bounded by batch
+    size, not by the table's history.
     """
-    if not candidates or not wh.exists("etl_metadata"):
+    if not candidates:
         return set()
-    cand = spark.createDataFrame(candidates, "file_name string, file_hash string")
-    matched = (
-        wh.read("etl_metadata")
-        .filter(F.col("status") == "completed")
-        .select("file_name", "file_hash")
-        .join(F.broadcast(cand), ["file_name", "file_hash"], "left_semi")
-        .distinct()
-        .collect()
+    names = sorted({name for name, _ in candidates})
+    rows = wh.read_rows(
+        "etl_metadata",
+        _SKIP_COLUMNS,
+        (ds.field("status") == "completed") & ds.field("file_name").isin(names),
     )
-    return {(r.file_name, r.file_hash) for r in matched}
+    loaded = zip(rows["file_name"].to_pylist(), rows["file_hash"].to_pylist())
+    return set(loaded) & set(candidates)
 
 
 def ingest_file(
@@ -152,12 +158,12 @@ def _load_table(spark, wh, tasks, config, loaded_at) -> None:
             task.error = str(exc)[:500]
 
 
-def _append_rows(spark, wh, table: str, rows: list) -> None:
+def _append_rows(wh, table: str, rows: list) -> None:
     if rows:
-        wh.write(table, spark.createDataFrame(rows, TABLE_SCHEMAS[table]), mode="append")
+        wh.write_rows(table, rows, TABLE_SCHEMAS[table], mode="append")
 
 
-def _append_quality_issues(spark, wh, report: IngestReport) -> None:
+def _append_quality_issues(wh, report: IngestReport) -> None:
     """C6: persist each loaded file's cleaning report as
     data_quality_issues rows (reference core/database.py:540-565 logs
     dropped-row and null-rate issues per load; summarized by
@@ -178,7 +184,7 @@ def _append_quality_issues(spark, wh, report: IngestReport) -> None:
             for col, n in sorted(quality.null_counts.items())
             if n
         ]
-    _append_rows(spark, wh, "data_quality_issues", rows)
+    _append_rows(wh, "data_quality_issues", rows)
 
 
 def quality_summary(wh) -> "DataFrame":
@@ -211,7 +217,7 @@ def quality_summary(wh) -> "DataFrame":
     )
 
 
-def _append_schema_errors(spark, wh, report: IngestReport) -> None:
+def _append_schema_errors(wh, report: IngestReport) -> None:
     now = datetime.now(tz=timezone.utc).replace(tzinfo=None)
     rows = [
         (t.file_name, i.table_name, i.error_type, i.column_name, i.severity,
@@ -219,10 +225,10 @@ def _append_schema_errors(spark, wh, report: IngestReport) -> None:
         for t in report.tasks
         for i in t.details.get("schema_issues", ())
     ]
-    _append_rows(spark, wh, "schema_errors", rows)
+    _append_rows(wh, "schema_errors", rows)
 
 
-def _append_metadata(spark, wh, report: IngestReport, started_at, completed_at) -> None:
+def _append_metadata(wh, report: IngestReport, started_at, completed_at) -> None:
     rows = [
         (
             t.file_name,
@@ -240,7 +246,7 @@ def _append_metadata(spark, wh, report: IngestReport, started_at, completed_at) 
         )
         for t in report.tasks
     ]
-    _append_rows(spark, wh, "etl_metadata", rows)
+    _append_rows(wh, "etl_metadata", rows)
 
 
 def ingest(
@@ -264,9 +270,7 @@ def ingest(
         mappings=mappings,
     )
     if config.skip_processed:
-        processed = _processed_subset(
-            spark, wh, [(t.file_name, t.file_hash) for t in tasks]
-        )
+        processed = _processed_subset(wh, [(t.file_name, t.file_hash) for t in tasks])
         for t in tasks:
             if (t.file_name, t.file_hash) in processed:
                 t.status = TaskStatus.SKIPPED
@@ -293,7 +297,7 @@ def ingest(
     completed_at = datetime.now(tz=timezone.utc).replace(tzinfo=None)
     # metadata last: it marks the files processed, so a crash before it
     # reloads them on the next run
-    _append_schema_errors(spark, wh, report)
-    _append_quality_issues(spark, wh, report)
-    _append_metadata(spark, wh, report, started_at, completed_at)
+    _append_schema_errors(wh, report)
+    _append_quality_issues(wh, report)
+    _append_metadata(wh, report, started_at, completed_at)
     return report

@@ -30,8 +30,6 @@ from dataclasses import dataclass
 from datetime import datetime, timezone
 from typing import Protocol
 
-from pyspark.sql import SparkSession
-
 from calaveras_uniteus_etl_spark.config import FILE_PATTERNS
 from calaveras_uniteus_etl_spark.schema import TABLE_SCHEMAS
 from calaveras_uniteus_etl_spark.warehouse import Warehouse
@@ -191,7 +189,6 @@ class SFTPStage:
 
     def record_sync(
         self,
-        spark: SparkSession,
         wh: Warehouse,
         files: list[RemoteFile],
         synced_by: str = "system",
@@ -221,5 +218,4 @@ class SFTPStage:
             len(files),
             synced_by,
         )
-        df = spark.createDataFrame([row], TABLE_SCHEMAS["sftp_cache"])
-        wh.write("sftp_cache", df, mode="append")
+        wh.write_rows("sftp_cache", [row], TABLE_SCHEMAS["sftp_cache"], mode="append")

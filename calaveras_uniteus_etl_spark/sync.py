@@ -9,7 +9,9 @@ endpoints at core/app.py:1569-1648). In this engine the same contract
 is a CLI loop: ``cli.py sync --loop`` polls the identical single-row
 warehouse table and each due tick drives ``etl.ingest``, whose
 (file_name, md5) skip check in ``etl_metadata`` makes re-runs
-idempotent.
+idempotent. The config row is read and written on the driver with
+pyarrow (``Warehouse.read_rows``/``write_rows``), so a tick runs Spark
+jobs only for the table merges of the files it loads.
 
 The clock is injectable everywhere — ticks take ``now`` and the loop
 takes ``clock``/``sleep`` — so scheduling decisions are deterministic
@@ -22,6 +24,7 @@ import time as _time
 from dataclasses import dataclass, replace
 from datetime import datetime, timedelta
 
+import pyarrow.dataset as ds
 from pyspark.sql import SparkSession
 from pyspark.sql.types import (
     BooleanType,
@@ -63,12 +66,10 @@ class SyncConfig:
 
 
 def load_config(wh: Warehouse) -> SyncConfig:
-    if not wh.exists(SYNC_TABLE):
-        return SyncConfig()
-    rows = wh.read(SYNC_TABLE).filter("id = 1").collect()
+    rows = wh.read_rows(SYNC_TABLE, SYNC_SCHEMA, ds.field("id") == 1).to_pylist()
     if not rows:
         return SyncConfig()
-    r = rows[0].asDict()
+    r = rows[0]
     return SyncConfig(
         enabled=bool(r["enabled"]),
         interval_minutes=int(r["interval_minutes"]),
@@ -79,23 +80,20 @@ def load_config(wh: Warehouse) -> SyncConfig:
     )
 
 
-def _persist(spark: SparkSession, wh: Warehouse, cfg: SyncConfig) -> None:
-    row = [
-        (
-            1,
-            cfg.enabled,
-            cfg.interval_minutes,
-            cfg.last_run,
-            cfg.next_run,
-            cfg.updated_at,
-            cfg.updated_by,
-        )
-    ]
-    wh.write(SYNC_TABLE, spark.createDataFrame(row, SYNC_SCHEMA))
+def _persist(wh: Warehouse, cfg: SyncConfig) -> None:
+    row = (
+        1,
+        cfg.enabled,
+        cfg.interval_minutes,
+        cfg.last_run,
+        cfg.next_run,
+        cfg.updated_at,
+        cfg.updated_by,
+    )
+    wh.write_rows(SYNC_TABLE, [row], SYNC_SCHEMA)
 
 
 def save_config(
-    spark: SparkSession,
     wh: Warehouse,
     *,
     enabled: bool,
@@ -119,7 +117,7 @@ def save_config(
         updated_at=now.isoformat(),
         updated_by=username,
     )
-    _persist(spark, wh, cfg)
+    _persist(wh, cfg)
     return cfg
 
 
@@ -159,7 +157,7 @@ def sync_tick(
             now + timedelta(minutes=cfg.interval_minutes)
         ).isoformat(),
     )
-    _persist(spark, wh, armed)
+    _persist(wh, armed)
     from calaveras_uniteus_etl_spark.etl import ingest
 
     report = ingest(spark, etl_cfg)

@@ -5,20 +5,37 @@ and commits it by one atomic replace of the ``<root>/<table>`` symlink;
 nothing writes to a version after that. A reader sees the old table or
 the new one, as under the reference's WAL mode, and a failed or crashed
 write leaves the old one live.
+
+A version is filled one of two ways: ``write`` runs a Spark job over a
+DataFrame (the data tables), ``write_rows`` writes rows the driver
+already holds as one parquet file with pyarrow, no Spark job (the load
+record, quality log, schema errors, sync config and SFTP listings).
+Both store timestamps as UTC instants, so Spark reads either file as
+``TimestampType``; ``read_rows`` scans the live version with pyarrow.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import threading
+import uuid
 
+import pyarrow as pa
+import pyarrow.dataset as ds
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from calaveras_uniteus_etl_spark.schema import TABLE_SCHEMAS
 
 # Superseded versions kept beside the current one; older ones are deleted.
 RETAINED_VERSIONS = 2
+
+# the parquet footer key under which Spark stores a file's Spark schema
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 # (applicationId, table path, version directory, file listing) ->
 # resolved DataFrame. Only misses mutate it, under the lock, so any
@@ -35,6 +52,20 @@ def _listing(root: str) -> tuple[tuple[str, int, int], ...]:
             st = os.stat(os.path.join(d, n))
             out.append((os.path.join(d[len(root) + 1:], n), st.st_size, st.st_mtime_ns))
     return tuple(sorted(out))
+
+
+def _footer_schema(version: str, files: tuple) -> StructType | None:
+    """The Spark schema stored in the footer of the version's first data
+    file, the one Spark's own inference would read, without its one-task
+    job. None for a partitioned version (its partition columns come from
+    the paths) or a file that stores no Spark schema."""
+    if any(os.sep in rel for rel, _, _ in files):
+        return None
+    data = [rel for rel, _, _ in files if rel.endswith(".parquet") and not rel.startswith((".", "_"))]
+    if not data:
+        return None
+    stored = (pq.read_metadata(os.path.join(version, data[0])).metadata or {}).get(_SPARK_SCHEMA_KEY)
+    return None if stored is None else StructType.fromJson(json.loads(stored))
 
 
 def _link_files(src: str, dst: str) -> None:
@@ -56,7 +87,9 @@ class Warehouse:
     sorted (relative path, size, mtime_ns) of every file under it); no
     rows are cached, and a scan planned before a commit keeps its files.
     Every write commits a new version, so the next read misses and drops
-    the path's older entry and any dead session's entries.
+    the path's older entry and any dead session's entries. A miss takes
+    the schema Spark stored in a file footer, read on the driver, so it
+    runs no schema-inference job.
     """
 
     def __init__(self, spark: SparkSession, root: str):
@@ -91,7 +124,11 @@ class Warehouse:
         hit = _READ_MEMO.get(key)
         if hit is not None:
             return hit
-        df = self.spark.read.parquet(version)
+        reader = self.spark.read
+        schema = _footer_schema(version, files)
+        if schema is not None:
+            reader = reader.schema(schema)
+        df = reader.parquet(version)
         for old, new in self._LEGACY_RENAMES.get(table, {}).items():
             if old in df.columns and new not in df.columns:
                 df = df.withColumnRenamed(old, new)
@@ -112,20 +149,47 @@ class Warehouse:
         version's files in beside it. A plan that reads the table it
         replaces (the merge-upsert shape) reads an untouched version."""
 
-        def fill(version: str, current: str | None) -> None:
+        def fill(version: str) -> None:
             writer = df.write.mode("append")  # into the empty reserved directory
             if partition_by:
                 writer = writer.partitionBy(*partition_by)
             writer.parquet(version)
-            if mode == "append" and current is not None:
-                _link_files(current, version)
 
-        self._commit(table, fill)
+        self._commit(table, fill, append=mode == "append")
+
+    def write_rows(
+        self, table: str, rows: list[tuple], schema: StructType, mode: str = "overwrite"
+    ) -> None:
+        """Commit driver-held ``rows`` (tuples in ``schema`` order) as a
+        new version holding one parquet file, written with pyarrow: no
+        Spark job. Naive datetimes are UTC. The footer stores ``schema``
+        where Spark stores its own. ``append`` links the current version's
+        files in beside it, as ``write`` does."""
+        arrow = to_arrow_schema(schema).with_metadata({_SPARK_SCHEMA_KEY: schema.json()})
+        columns = list(zip(*rows)) or [()] * len(arrow)
+        data = pa.Table.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(columns, arrow)], schema=arrow
+        )
+        self._commit(
+            table,
+            lambda version: pq.write_table(data, os.path.join(version, f"part-{uuid.uuid4().hex}.parquet")),
+            append=mode == "append",
+        )
+
+    def read_rows(self, table: str, schema: StructType, filter=None) -> pa.Table:
+        """The live version's ``schema`` columns, scanned on the driver
+        with pyarrow: no Spark job. ``filter`` is a pyarrow expression
+        applied during the scan, so only matching rows are kept."""
+        arrow = to_arrow_schema(schema)
+        if not self.exists(table):
+            return arrow.empty_table()
+        version = os.path.realpath(self.path(table))  # resolved once
+        return ds.dataset(version, schema=arrow, format="parquet").to_table(filter=filter)
 
     def restore(self, table: str, version: int) -> None:
         """Commit a retained version again as hard links; undoable like any write."""
         src = self._retained(table, version)
-        self._commit(table, lambda new, current: _link_files(src, new))
+        self._commit(table, lambda new: _link_files(src, new))
 
     def read_version(self, table: str, version: int) -> DataFrame:
         """Read a retained superseded version of a table."""
@@ -142,8 +206,9 @@ class Warehouse:
             raise FileNotFoundError(f"table {table!r} has no retained version {version}; available: {kept}")
         return self._version_path(table, version)
 
-    def _commit(self, table: str, fill) -> None:
-        """Reserve a version, ``fill(it, current version or None)``, make it live, prune."""
+    def _commit(self, table: str, fill, append: bool = False) -> None:
+        """Reserve a version, ``fill(it)``, link the current version's
+        files in if ``append``, make it live, prune."""
         path = self.path(table)
         if os.path.isdir(path) and not os.path.islink(path):
             # a table from before versions: adopt it, the one non-atomic step
@@ -152,7 +217,9 @@ class Warehouse:
             self._point(table, adopted)
         current = self._current(table)
         version = self._reserve(table)
-        fill(version, None if current is None else self._version_path(table, current))
+        fill(version)
+        if append and current is not None:
+            _link_files(self._version_path(table, current), version)
         self._point(table, version)
         self._prune(table, current, int(os.path.basename(version)[1:]))
 

@@ -259,7 +259,7 @@ def test_cli_sync_schedule_with_fake_clock(spark, tmp_path, capsys):
     # the CLI stamped the wall clock; pin the schedule to the fake
     # epoch so the tick arithmetic below is deterministic
     save_config(
-        spark, wh, enabled=True, interval_minutes=30, now=t0, username="op"
+        wh, enabled=True, interval_minutes=30, now=t0, username="op"
     )
     assert load_config(wh).next_run == (
         t0 + timedelta(minutes=30)
@@ -305,6 +305,6 @@ def test_cli_sync_schedule_with_fake_clock(spark, tmp_path, capsys):
 
     # (c) save_config disabled clears the schedule
     save_config(
-        spark, wh, enabled=False, interval_minutes=30, now=late, username="op"
+        wh, enabled=False, interval_minutes=30, now=late, username="op"
     )
     assert load_config(wh).next_run is None

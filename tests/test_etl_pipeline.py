@@ -442,13 +442,14 @@ def _spark_jobs(spark, fn):
 
 
 def test_ingest_job_budget(tmp_path, spark, input_dir):
-    """Loading one file runs 1 to 3 Spark jobs more than an ingest that
-    loads nothing (both run the skip check and the metadata append): the
-    merge's shuffle and write, and the quality append. The header comes
-    from the encoding probe, not from a job. A counting pass over the
-    file breaks the upper bound; a pool worker that drops the caller's
-    job group breaks the lower one. Checked for a first load and for a
-    reload with one update and one insert."""
+    """An ingest that skips every file runs no Spark job: the skip check
+    and the schema-error, quality and metadata appends run on the driver
+    with pyarrow. Loading one file runs 1 or 2 jobs, the merge's shuffle
+    and write and nothing else. The header comes from the encoding probe,
+    not from a job. A counting pass over the file or a bookkeeping step
+    back on Spark breaks the upper bound; a pool worker that drops the
+    caller's job group breaks the lower one. Checked for a first load and
+    for a reload with one update and one insert."""
     cfg = _cfg(tmp_path)
     (input_dir / "cases_20240101.txt").write_text(CASES_V1)
     ingest(spark, cfg)
@@ -456,10 +457,135 @@ def test_ingest_job_budget(tmp_path, spark, input_dir):
         ("people_20240101.txt", PEOPLE_V1, (3, 0)),
         ("people_20240201.txt", PEOPLE_V2, (1, 1)),
     ):
-        idle = _spark_jobs(spark, lambda: ingest(spark, cfg))
-        (input_dir / name).write_text(body)
         reports = []
+        idle = _spark_jobs(spark, lambda: reports.append(ingest(spark, cfg)))
+        assert reports[0].tasks and len(reports[0].skipped) == len(reports[0].tasks)
+        assert idle == 0, (name, idle)
+        (input_dir / name).write_text(body)
         one_file = _spark_jobs(spark, lambda: reports.append(ingest(spark, cfg)))
-        [t] = reports[0].completed
+        [t] = reports[1].completed
         assert (t.rows_inserted, t.rows_updated) == counts
-        assert 1 <= one_file - idle <= 3, (name, idle, one_file)
+        assert 1 <= one_file <= 2, (name, one_file)
+
+
+def test_bookkeeping_mixes_spark_and_pyarrow_files(tmp_path, spark, input_dir):
+    """The upgrade path of every existing warehouse: a bookkeeping
+    table's live version holds a file Spark wrote (as earlier releases
+    appended it) beside rows appended on the driver with pyarrow. Spark
+    reads both as one table with TimestampType columns and equal values,
+    the quality rollup matches one written by Spark alone, and the skip
+    check finds files that either writer recorded."""
+    from datetime import datetime
+
+    from pyspark.sql.types import TimestampType
+
+    from calaveras_uniteus_etl_spark import etl
+
+    (input_dir / "people_20240101.txt").write_text(PEOPLE_V1)
+    (input_dir / "cases_20240101.txt").write_text(CASES_V1)
+    md5 = {n: hashlib.md5(b.encode()).hexdigest() for n, b in
+           (("people_20240101.txt", PEOPLE_V1), ("cases_20240101.txt", CASES_V1))}
+    t0, t1 = datetime(2024, 1, 1, 10, 0, 0, 123456), datetime(2024, 2, 1, 9, 30)
+    older = {
+        "etl_metadata": [("people_20240101.txt", "people", "20240101", md5["people_20240101.txt"],
+                          3, 3, 0, "completed", None, "manual", t0, t0)],
+        "data_quality_issues": [("people", "people_20240101.txt", "null_values",
+                                 "people_created_at", 1, "1 null values", t0)],
+    }
+    newer = {
+        "etl_metadata": [("cases_20240101.txt", "cases", "20240101", md5["cases_20240101.txt"],
+                          3, 3, 0, "completed", None, "manual", t1, t1),
+                         ("referrals_20240101.txt", "referrals", "20240101", "f" * 32,
+                          0, 0, 0, "failed", "boom", "manual", t1, None)],
+        "data_quality_issues": [("cases", "cases_20240101.txt", "null_values", "case_closed_at", 3,
+                                 "3 null values", t1),
+                                ("people", "people_20240201.txt", "all_null_row", None, 1,
+                                 "dropped 1 fully-null rows", t1)],
+    }
+    cfg = _cfg(tmp_path)
+    wh = Warehouse(spark, cfg.warehouse_dir)
+    alone = Warehouse(spark, str(tmp_path / "spark_only"))
+    for table, rows in older.items():
+        wh.write(table, spark.createDataFrame(rows, TABLE_SCHEMAS[table]), mode="append")
+        etl._append_rows(wh, table, newer[table])
+        alone.write(table, spark.createDataFrame(rows + newer[table], TABLE_SCHEMAS[table]))
+        live = [f for f in os.listdir(os.path.realpath(wh.path(table))) if f.endswith(".parquet")]
+        # Spark names its files part-<task>-<uuid>-c000.snappy.parquet, the row writer part-<hex>.parquet
+        assert {f.endswith(".snappy.parquet") for f in live} == {True, False}
+
+        df = wh.read(table)
+        stamps = [f.name for f in TABLE_SCHEMAS[table] if isinstance(f.dataType, TimestampType)]
+        assert [df.schema[c].dataType for c in stamps] == [TimestampType()] * len(stamps)
+        assert sorted(tuple(r) for r in df.collect()) == sorted(rows + newer[table])
+
+    rollup = sorted(tuple(r) for r in etl.quality_summary(wh).collect())
+    assert rollup == sorted(tuple(r) for r in etl.quality_summary(alone).collect())
+    assert ("total", None, 5) in rollup
+
+    candidates = [(n, h) for n, h in md5.items()] + [("referrals_20240101.txt", "f" * 32)]
+    assert etl._processed_subset(wh, candidates) == set(md5.items())
+    report = ingest(spark, cfg)
+    assert {t.file_name for t in report.skipped} == set(md5) and not report.completed
+
+
+def _data_tables(wh):
+    """Each loaded data table's rows, audit stamps left out (they carry
+    the job's start time)."""
+    audit = {"etl_loaded_at", "etl_updated_at"}
+    return {
+        t: sorted(
+            tuple(r) for r in wh.read(t).select([c for c in wh.read(t).columns if c not in audit]).collect()
+        )
+        for t in ("people", "cases")
+    }
+
+
+@pytest.mark.parametrize("crash", ["row_writer", "pointer_replace"])
+def test_crash_in_metadata_append_reruns_to_one_record_per_file(tmp_path, spark, crash, monkeypatch):
+    """A crash while the load record is appended, after the merges have
+    committed, leaves etl_metadata without the job's rows: the re-run
+    loads the files again (the merge keeps the last line per key, so the
+    tables do not change) and ends with exactly one completed row per
+    file and the tables of a clean single run."""
+    from calaveras_uniteus_etl_spark import warehouse as W
+
+    def load(root):
+        inp = root / "input"
+        inp.mkdir(parents=True)
+        (inp / "people_20240101.txt").write_text(PEOPLE_V1)
+        (inp / "cases_20240101.txt").write_text(CASES_V1)
+        return ETLConfig(input_dir=str(inp), warehouse_dir=str(root / "warehouse"),
+                         phi=PHIConfig(enabled=False))
+
+    clean_cfg = load(tmp_path / "clean")
+    ingest(spark, clean_cfg)
+    clean = Warehouse(spark, clean_cfg.warehouse_dir)
+
+    cfg = load(tmp_path / "crashed")
+    wh = Warehouse(spark, cfg.warehouse_dir)
+    write_rows = Warehouse.write_rows
+
+    def boom(*a, **k):
+        raise OSError("injected crash")
+
+    def crashing_write_rows(self, table, *a, **k):
+        if table != "etl_metadata":
+            return write_rows(self, table, *a, **k)
+        if crash == "row_writer":
+            boom()
+        with monkeypatch.context() as m:  # the version is filled, the link swap fails
+            m.setattr(W.os, "replace", boom)
+            write_rows(self, table, *a, **k)
+
+    with monkeypatch.context() as m, pytest.raises(OSError, match="injected crash"):
+        m.setattr(Warehouse, "write_rows", crashing_write_rows)
+        ingest(spark, cfg)
+    assert _data_tables(wh) == _data_tables(clean)  # the merges committed
+    assert not wh.exists("etl_metadata")
+
+    report = ingest(spark, cfg)
+    assert len(report.completed) == 2 and not report.skipped
+    assert len(ingest(spark, cfg).skipped) == 2
+    meta = wh.read("etl_metadata").filter(F.col("status") == "completed").collect()
+    assert sorted(r.file_name for r in meta) == ["cases_20240101.txt", "people_20240101.txt"]
+    assert _data_tables(wh) == _data_tables(clean)

@@ -2,7 +2,8 @@
 base's quartiles, the claim rule they decide (at least 10 pairs run, at
 least 9 in 10 of them won, medians further apart than the base's
 interquartile range) and the unresolved mark (base interquartile range
-wider than the bound, head and base runs not separated)."""
+wider than the bound, head and base runs not separated); and one
+invocation over several workloads, each with its own rows."""
 
 from __future__ import annotations
 
@@ -11,7 +12,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
 
-from perf_ab import summarize  # noqa: E402
+from perf_ab import collect, report, summarize  # noqa: E402
 
 LOWER = {"name": "build_s", "better": "lower", "bound": 0.25}
 HIGHER = {"name": "requests_per_s", "better": "higher", "bound": 0.25}
@@ -72,3 +73,32 @@ def test_unresolved_when_base_spread_exceeds_bound():
     # a tight base resolves
     tight = [100.0 + 0.1 * i for i in range(10)]
     assert not summarize(LOWER, tight, tight)["unresolved"]
+
+
+def test_several_workloads_each_get_their_own_rows(capsys):
+    """Workloads run one after the other, the first side alternating per
+    seed; each prints its own rows, and only a regression in one of them
+    reports worse."""
+    bench = {"end_to_end": [LOWER, HIGHER]}
+    seeds = list(range(1, 11))
+    calls = []
+
+    def fake_run(tree, workload, seed, seconds):
+        calls.append((workload, tree, seed))
+        base = tree == "b"
+        scale = 1.0 if base or workload == "analytics" else 0.5
+        return {"metrics": {"build_s": {"value": scale * (10 + seed)},
+                            "requests_per_s": {"value": 1.0 if base or workload == "dashboard" else 0.5}}}
+
+    results = collect({"base": "b", "head": "h"}, ["dashboard", "analytics"], seeds, 10, run=fake_run)
+    assert [c[0] for c in calls] == ["dashboard"] * 20 + ["analytics"] * 20
+    assert [c[1] for c in calls[:4]] == ["b", "h", "h", "b"]
+    assert not report(bench, "dashboard", seeds, results["dashboard"])
+    assert report(bench, "analytics", seeds, results["analytics"])
+    out = capsys.readouterr().out.splitlines()
+    rows = {line.split(",")[0]: i for i, line in enumerate(out) if line.endswith("[per seed base/head]")}
+    assert list(rows) == ["dashboard", "analytics"]
+    dash, ana = out[rows["dashboard"] + 1:rows["analytics"]], out[rows["analytics"] + 1:]
+    assert dash[0].startswith("build_s") and dash[0].endswith("claim")
+    assert ana[1].startswith("requests_per_s") and "WORSE past 0.25" in ana[1]
+    assert collect({"base": "b", "head": "h"}, ["dashboard"], seeds, 10, run=lambda *a: None) is None

@@ -95,7 +95,7 @@ def test_fetched_dir_feeds_ingest_and_sync_recorded(tmp_path, spark):
     wh = Warehouse(spark, config.warehouse_dir)
     assert wh.read("people").count() == 2
 
-    stage.record_sync(spark, wh, files, synced_by="tester", sync_time=_MTIME.replace(tzinfo=None))
+    stage.record_sync(wh, files, synced_by="tester", sync_time=_MTIME.replace(tzinfo=None))
     row = wh.read("sftp_cache").collect()[0]
     assert row.file_count == 1 and row.synced_by == "tester"
     assert "people_20250115.txt" in row.file_list

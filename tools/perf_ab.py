@@ -1,11 +1,12 @@
 """A/B the benchmark between two revisions, interleaved seed by seed.
 
-    python3 tools/perf_ab.py --base <rev> --workload dashboard --seeds 1 2 3
+    python3 tools/perf_ab.py --base <rev> --workload dashboard analytics --seeds 1 2 3
 
 Exports ``<rev>`` and HEAD with ``git archive`` into a temp dir and
 runs ``perfbench/run.py`` for BENCHMARK.json's ``run_seconds`` on each
-for every seed, alternating which side goes first so host speed drift
-falls on both. Prints each end-to-end metric's per-seed values, medians
+for every workload and seed, alternating which side goes first so host
+speed drift falls on both. Prints, per workload, each end-to-end
+metric's per-seed values, medians
 and head/base ratio, the pairs head won and the base's quartiles, and
 flags every move past its bound. A gain may be claimed (marked
 ``claim``) when at least 10 pairs ran, head won at least 9 in 10 of
@@ -69,10 +70,43 @@ def summarize(metric: dict, base: list[float], head: list[float]) -> dict:
     }
 
 
+def collect(trees: dict[str, str], workloads: list[str], seeds: list[int], seconds: float, run=run) -> dict | None:
+    """``{workload: {"base": [result], "head": [result]}}`` over the
+    seeds, one workload after the other; within a workload the side that
+    runs first alternates per seed. None once a run fails a gate."""
+    results = {w: {"base": [], "head": []} for w in workloads}
+    for w in workloads:
+        for i, seed in enumerate(seeds):
+            for side in ("base", "head")[:: 1 if i % 2 == 0 else -1]:
+                result = run(trees[side], w, seed, seconds)
+                print(f"{w} {side} seed {seed}: {'ok' if result else 'FAILED'}", flush=True)
+                if result is None:
+                    return None
+                results[w][side].append(result)
+    return results
+
+
+def report(bench: dict, workload: str, seeds: list[int], runs: dict) -> bool:
+    """Print one workload's row per end-to-end metric; True if one got
+    worse past its bound."""
+    worse = False
+    print(f"{workload}, seeds {seeds}: median base, median head, head/base, "
+          "pairs head won, base q1-q3 [per seed base/head]")
+    for m in bench["end_to_end"]:
+        b, h = ([r["metrics"][m["name"]]["value"] for r in runs[s]] for s in ("base", "head"))
+        r = summarize(m, b, h)
+        worse |= r["worse"]
+        per_seed = " ".join(f"{x:.4g}/{y:.4g}" for x, y in zip(b, h))
+        print(f"{m['name']:16s} {r['base']:9.4g} {r['head']:9.4g} {r['ratio']:6.3f} "
+              f"{r['wins']:2d}/{r['pairs']} {r['base_q1']:.4g}-{r['base_q3']:.4g} [{per_seed}] "
+              f"{r['flag']}{' claim' if r['claim'] else ''}{' unresolved' if r['unresolved'] else ''}")
+    return worse
+
+
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(prog="perf_ab")
     p.add_argument("--base", required=True)
-    p.add_argument("--workload", required=True)
+    p.add_argument("--workload", required=True, nargs="+")
     p.add_argument("--seeds", type=int, nargs="+", default=[1, 2, 3])
     a = p.parse_args(argv)
 
@@ -87,29 +121,14 @@ def main(argv: list[str] | None = None) -> int:
             if archive.wait():
                 return 2
             print(f"{side}: {rev} = {git('rev-parse', '--short', rev)}", flush=True)
-        results: dict[str, list[dict]] = {"base": [], "head": []}
-        for i, seed in enumerate(a.seeds):
-            for side in ("base", "head")[:: 1 if i % 2 == 0 else -1]:
-                result = run(os.path.join(tmp, side), a.workload, seed, bench["run_seconds"])
-                print(f"{side} seed {seed}: {'ok' if result else 'FAILED'}", flush=True)
-                if result is None:
-                    return 1
-                results[side].append(result)
+        trees = {side: os.path.join(tmp, side) for side in ("base", "head")}
+        results = collect(trees, a.workload, a.seeds, bench["run_seconds"])
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-
-    worse = False
-    print(f"{a.workload}, seeds {a.seeds}: median base, median head, head/base, "
-          "pairs head won, base q1-q3 [per seed base/head]")
-    for m in bench["end_to_end"]:
-        b, h = ([r["metrics"][m["name"]]["value"] for r in results[s]] for s in ("base", "head"))
-        r = summarize(m, b, h)
-        worse |= r["worse"]
-        seeds = " ".join(f"{x:.4g}/{y:.4g}" for x, y in zip(b, h))
-        print(f"{m['name']:16s} {r['base']:9.4g} {r['head']:9.4g} {r['ratio']:6.3f} "
-              f"{r['wins']:2d}/{r['pairs']} {r['base_q1']:.4g}-{r['base_q3']:.4g} [{seeds}] "
-              f"{r['flag']}{' claim' if r['claim'] else ''}{' unresolved' if r['unresolved'] else ''}")
-    return 1 if worse else 0
+    if results is None:
+        return 1
+    worse = [report(bench, w, a.seeds, results[w]) for w in a.workload]
+    return 1 if any(worse) else 0
 
 
 if __name__ == "__main__":
