@@ -93,7 +93,7 @@ def _processed_subset(wh: Warehouse, candidates: list[tuple[str, str]]) -> set[t
     """
     if not candidates:
         return set()
-    names = sorted({name for name, _ in candidates})
+    names = list({name for name, _ in candidates})
     rows = wh.read_rows(
         "etl_metadata",
         _SKIP_COLUMNS,

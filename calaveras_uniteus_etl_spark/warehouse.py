@@ -162,8 +162,9 @@ class Warehouse:
     ) -> None:
         """Commit driver-held ``rows`` (tuples in ``schema`` order) as a
         new version holding one parquet file, written with pyarrow: no
-        Spark job. Naive datetimes are UTC. The footer stores ``schema``
-        where Spark stores its own. ``append`` links the current version's
+        Spark job. Datetimes must be naive UTC: pyarrow stores an aware
+        one's wall clock as UTC. The footer stores ``schema`` where Spark
+        stores its own. ``append`` links the current version's
         files in beside it, as ``write`` does."""
         arrow = to_arrow_schema(schema).with_metadata({_SPARK_SCHEMA_KEY: schema.json()})
         columns = list(zip(*rows)) or [()] * len(arrow)
@@ -176,7 +177,7 @@ class Warehouse:
             append=mode == "append",
         )
 
-    def read_rows(self, table: str, schema: StructType, filter=None) -> pa.Table:
+    def read_rows(self, table: str, schema: StructType, filter) -> pa.Table:
         """The live version's ``schema`` columns, scanned on the driver
         with pyarrow: no Spark job. ``filter`` is a pyarrow expression
         applied during the scan, so only matching rows are kept."""

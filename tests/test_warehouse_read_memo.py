@@ -1,7 +1,8 @@
 """``Warehouse.read`` resolves each table version once: the memo keyed
 by (applicationId, table path, version directory, file listing) must
 return the same lazy DataFrame while the files stand still, and a fresh
-one after every write that changes them."""
+one after every write that changes them. A miss takes its schema from
+a file footer, with no Spark job."""
 
 from __future__ import annotations
 
@@ -10,8 +11,13 @@ import subprocess
 import sys
 import textwrap
 import threading
+import uuid
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 
 from calaveras_uniteus_etl_spark import warehouse as W
+from calaveras_uniteus_etl_spark.schema import TABLE_SCHEMAS
 from calaveras_uniteus_etl_spark.warehouse import Warehouse
 
 
@@ -36,6 +42,37 @@ def test_repeat_read_hits_and_writes_miss(spark, tmp_path):
     wh.write("t", spark.range(20, 21), mode="append")
     assert _ids(wh.read("t")) == [10, 11, 20]
     assert _entries(wh, "t") == 1  # a miss drops the path's older entry
+
+
+def _jobs(spark, fn):
+    sc = spark.sparkContext
+    group = f"read-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "read")
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_miss_takes_the_footer_schema_without_a_job(spark, tmp_path):
+    """A miss on a table Spark wrote, or one the row writer wrote, plans
+    with the schema Spark's inference would give, and runs no job; a
+    file that stores no Spark schema still infers (one job)."""
+    wh = Warehouse(spark, str(tmp_path))
+    wh.write("cases", spark.createDataFrame([], TABLE_SCHEMAS["cases"]))
+    wh.write_rows("etl_metadata", [("f", "t", "20240101", "h", 1, 1, 0, "completed", None, "manual", None, None)],
+                  TABLE_SCHEMAS["etl_metadata"])
+    for table in ("cases", "etl_metadata"):
+        df, jobs = _jobs(spark, lambda: wh.read(table))
+        assert jobs == 0, table
+        assert df.schema == spark.read.parquet(os.path.realpath(wh.path(table))).schema
+        assert [f.dataType for f in df.schema] == [f.dataType for f in TABLE_SCHEMAS[table]]
+    os.makedirs(wh.path("plain"))  # a table directory from before versions
+    pq.write_table(pa.table({"id": [2]}), os.path.join(wh.path("plain"), "part-0.parquet"))
+    df, jobs = _jobs(spark, lambda: wh.read("plain"))
+    assert jobs == 1 and _ids(df) == [2]
 
 
 def test_read_sees_append_into_one_partition(spark, tmp_path):
