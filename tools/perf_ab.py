@@ -6,17 +6,16 @@ Exports ``<rev>`` and HEAD with ``git archive`` into a temp dir and
 runs ``perfbench/run.py`` for BENCHMARK.json's ``run_seconds`` on each
 for every workload and seed, alternating which side goes first so host
 speed drift falls on both. Prints, per workload, each end-to-end
-metric's per-seed values, medians
-and head/base ratio, the pairs head won and the base's quartiles, and
-flags every move past its bound. A gain may be claimed (marked
-``claim``) when at least 10 pairs ran, head won at least 9 in 10 of
-them, ties counting for neither, and the medians differ by more than
-the base's interquartile range. A metric is marked ``unresolved`` when
-the base's interquartile range is wider than its bound times the base
-median, unless every head run beats every base run: its runs spread too
-widely to call it unchanged. Exits 1 when a run fails a correctness
-gate or a metric gets worse past its bound. Nothing is written inside
-the checkout.
+metric's per-seed values, medians and head/base ratio, the pairs head
+won and the base's quartiles, and flags every move past its bound. A
+gain may be claimed (marked ``claim``) when at least 10 pairs ran, head
+won at least 9 in 10 of them, ties counting for neither, and the
+medians differ by more than the base's interquartile range. A metric is
+marked ``unresolved`` when the base's interquartile range is wider than
+its bound times the base median, unless every head run beats every base
+run: its runs spread too widely to call it unchanged. Exits 1 when a
+run fails a correctness gate or a metric gets worse past its bound.
+Nothing is written inside the checkout.
 """
 
 from __future__ import annotations
