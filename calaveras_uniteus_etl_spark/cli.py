@@ -271,15 +271,17 @@ def _report_registry():
 
 
 def _load_tables(spark: SparkSession, warehouse_dir: str, names, table_arg):
+    """Every table a request reads, all from one commit."""
     from calaveras_uniteus_etl_spark.warehouse import Warehouse
 
     wh = Warehouse(spark, warehouse_dir)
+    head = wh.head()
     out = {}
     for n in names:
         name = table_arg if n == "*table" else n
         if name is None:
             raise SystemExit("--table is required for this report")
-        out[name] = wh.read(name)
+        out[name] = wh.read(name, at=head)
     return out
 
 
@@ -417,13 +419,11 @@ def cmd_report(spark, a) -> int:
 
 def cmd_query(spark, a) -> int:
     from calaveras_uniteus_etl_spark.operators.adhoc import execute_query
-    from calaveras_uniteus_etl_spark.schema import TABLE_SCHEMAS
-    from calaveras_uniteus_etl_spark.warehouse import Warehouse
-
-    wh = Warehouse(spark, a.warehouse)
-    for t in TABLE_SCHEMAS:
-        wh.read(t).createOrReplaceTempView(t)
     from calaveras_uniteus_etl_spark.reports.views import register_views
+    from calaveras_uniteus_etl_spark.schema import TABLE_SCHEMAS
+
+    for t, df in _load_tables(spark, a.warehouse, TABLE_SCHEMAS, None).items():
+        df.createOrReplaceTempView(t)
 
     register_views(spark)  # v_active_cases … v_client_journey
     res = execute_query(spark, a.sql, limit=a.limit or ROW_CAP)
@@ -441,11 +441,9 @@ def cmd_query(spark, a) -> int:
 
 def cmd_export(spark, a) -> int:
     from calaveras_uniteus_etl_spark.exports import writers
-    from calaveras_uniteus_etl_spark.warehouse import Warehouse
 
-    wh = Warehouse(spark, a.warehouse)
     names = [t.strip() for t in a.tables.split(",") if t.strip()]
-    tables = {t: wh.read(t) for t in names}
+    tables = _load_tables(spark, a.warehouse, names, None)
     if a.fmt == "csv":
         if len(tables) != 1:
             raise SystemExit("csv export takes exactly one table")

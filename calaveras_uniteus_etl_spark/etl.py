@@ -14,7 +14,8 @@ The Spark re-expression of the reference's ETL job lifecycle
 - job/metadata/data-quality bookkeeping are ordinary appended tables,
   but like the reference's row operations they stay on the driver: the
   skip check scans ``etl_metadata`` with pyarrow and each append writes
-  one small parquet file with pyarrow, so neither runs a Spark job
+  one small parquet file with pyarrow, so neither runs a Spark job; the
+  rows and the merges go live in one warehouse commit (``Warehouse.job``)
 
 Per-file pipeline: read (A1) → schema-validate (§1.4, critical → FAIL
 the file) → clean B1-B4 → one projection onto the declared row (cast,
@@ -26,8 +27,8 @@ the load record. The header comes from the driver-side encoding probe,
 and the cleaning report and the inserted/updated counts are
 observations that fill during the write, so the write is a file's only
 Spark work. Per job, after every file: schema-error, data-quality and
-metadata rows (C5/C6), one driver-side append each (``Warehouse.write_rows``).
-An ingest that skips every file runs no Spark job.
+metadata rows (C5/C6), one driver-side append each (``Warehouse.write_rows``),
+then one commit. An ingest that skips every file runs no Spark job.
 """
 
 from __future__ import annotations
@@ -138,7 +139,7 @@ def ingest_file(
         wh.read(table), declared, PRIMARY_KEYS[table], order_col="_line_no",
         observation=counts,
     )
-    wh.write(table, out, mode="overwrite")
+    wh.write(table, out)
     # the write filled both observations; reading them runs no job
     stats = upsert_stats(counts)
     task.rows_inserted, task.rows_updated = stats.inserted, stats.updated
@@ -282,22 +283,16 @@ def ingest(
     for task in sorted(tasks, key=lambda t: (t.file_date, t.file_name)):
         if task.status != TaskStatus.SKIPPED:
             by_table.setdefault(task.table_name, []).append(task)
-    if by_table:
-        with ThreadPoolExecutor(min(INGEST_WORKERS, len(by_table))) as pool:
-            # each worker starts from this thread's job group, description and tags
-            futures = [
-                pool.submit(
-                    inheritable_thread_target(spark)(_load_table),
-                    spark, wh, table_tasks, config, started_at,
-                )
-                for table_tasks in by_table.values()
-            ]
-            for f in futures:
-                f.result()
-    completed_at = datetime.now(tz=timezone.utc).replace(tzinfo=None)
-    # metadata last: it marks the files processed, so a crash before it
-    # reloads them on the next run
-    _append_schema_errors(wh, report)
-    _append_quality_issues(wh, report)
-    _append_metadata(wh, report, started_at, completed_at)
+    # one commit: the merges and the three row sets go live together, so
+    # a crash before it reloads the files on the next run and logs them once
+    with wh.job(), ThreadPoolExecutor(min(INGEST_WORKERS, len(by_table)) or 1) as pool:
+        # each worker starts from this thread's job group, description and tags
+        futures = [pool.submit(inheritable_thread_target(spark)(_load_table), spark, wh, t, config, started_at)
+                   for t in by_table.values()]
+        for f in futures:
+            f.result()
+        completed_at = datetime.now(tz=timezone.utc).replace(tzinfo=None)
+        _append_schema_errors(wh, report)
+        _append_quality_issues(wh, report)
+        _append_metadata(wh, report, started_at, completed_at)
     return report

@@ -1,26 +1,34 @@
 """Parquet-backed warehouse, the engine's table store in place of the
-reference's SQLite data DB (reference core/database.py). Every
-write fills a new version directory ``<root>/_versions/<table>/v<N>/``
-and commits it by one atomic replace of the ``<root>/<table>`` symlink;
-nothing writes to a version after that. A reader sees the old table or
-the new one, as under the reference's WAL mode, and a failed or crashed
-write leaves the old one live.
+reference's SQLite data DB (reference core/database.py).
 
-A version is filled one of two ways: ``write`` runs a Spark job over a
-DataFrame (the data tables), ``write_rows`` writes rows the driver
-already holds as one parquet file with pyarrow, no Spark job (the load
-record, quality log, schema errors, sync config and SFTP listings).
-Both store timestamps as UTC instants, so Spark reads either file as
-``TimestampType``; ``read_rows`` scans the live version with pyarrow.
+Table files live in immutable versions ``_versions/<table>/<id>/``. A
+commit ``_commits/c<N>/`` links every table to one version, and one
+atomic replace of the ``_head`` link makes it live, under a ``flock`` on
+``_lock`` that writers in every process take. ``<table>`` is a fixed
+link ``_head/<table>``, so ``<table>/*.parquet`` names the live files. A
+request reads every table ``at`` one ``head()``, so it never mixes two
+loads, as under the reference's WAL mode. Writes in ``job()`` stage
+versions that its reads see and commit once at its end, or not at all;
+other writes commit at once. A commit keeps the versions the last
+RETAINED_VERSIONS + 1 commits name and those still staged (each holds a
+shared ``flock`` until its commit), and deletes the rest.
+
+``write`` fills a version by a Spark job (data tables); ``write_rows``
+writes driver-held rows (bookkeeping, sync config, SFTP listings) as one
+parquet file with pyarrow, no Spark job, timestamps as UTC instants that
+Spark reads as ``TimestampType``; ``read_rows`` scans one with pyarrow.
 """
 
 from __future__ import annotations
 
+import fcntl
+import glob
 import json
 import os
 import shutil
 import threading
 import uuid
+from contextlib import contextmanager
 
 import pyarrow as pa
 import pyarrow.dataset as ds
@@ -31,77 +39,69 @@ from pyspark.sql.types import StructType
 
 from calaveras_uniteus_etl_spark.schema import TABLE_SCHEMAS
 
-# Superseded versions kept beside the current one; older ones are deleted.
+# Superseded commits kept beside the head, with the versions they name.
 RETAINED_VERSIONS = 2
 
 # the parquet footer key under which Spark stores a file's Spark schema
 _SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
-# (applicationId, table path, version directory, file listing) ->
-# resolved DataFrame. Only misses mutate it, under the lock, so any
-# thread may read it.
-_READ_MEMO: dict[tuple[str, str, str, tuple], DataFrame] = {}
+# (applicationId, version directory) -> resolved DataFrame. Only misses
+# mutate it, under the lock, so any thread may read it.
+_READ_MEMO: dict[tuple[str, str], DataFrame] = {}
 _READ_MEMO_LOCK = threading.Lock()
 
 
-def _listing(root: str) -> tuple[tuple[str, int, int], ...]:
-    """Sorted (relative path, size, mtime_ns) of every file under root."""
-    out = []
-    for d, _, names in os.walk(root):
-        for n in names:
-            st = os.stat(os.path.join(d, n))
-            out.append((os.path.join(d[len(root) + 1:], n), st.st_size, st.st_mtime_ns))
-    return tuple(sorted(out))
+def _listing(root: str) -> list[str]:
+    """Sorted relative path of every file under root."""
+    return sorted(os.path.join(d[len(root) + 1:], n) for d, _, names in os.walk(root) for n in names)
 
 
-def _footer_schema(version: str, files: tuple) -> StructType | None:
+def _footer_schema(version: str, files: list[str]) -> StructType | None:
     """The Spark schema stored in the footer of the version's first data
     file, the one Spark's own inference would read, without its one-task
     job. None for a partitioned version (its partition columns come from
     the paths) or a file that stores no Spark schema."""
-    if any(os.sep in rel for rel, _, _ in files):
+    if any(os.sep in rel for rel in files):
         return None
-    data = [rel for rel, _, _ in files if rel.endswith(".parquet") and not rel.startswith((".", "_"))]
+    data = [rel for rel in files if rel.endswith(".parquet") and not rel.startswith((".", "_"))]
     if not data:
         return None
     stored = (pq.read_metadata(os.path.join(version, data[0])).metadata or {}).get(_SPARK_SCHEMA_KEY)
     return None if stored is None else StructType.fromJson(json.loads(stored))
 
 
-def _link_files(src: str, dst: str) -> None:
-    """Hard-link src's parquet files and their .crc side files into dst,
-    keeping partition subdirectories. Never ``_SUCCESS``: Hadoop
-    rewrites it in place, which through a link would change src."""
-    for d, _, names in os.walk(src):
-        out = os.path.join(dst, os.path.relpath(d, src))
-        for n in names:
-            if n.endswith((".parquet", ".parquet.crc")):
-                os.makedirs(out, exist_ok=True)
-                os.link(os.path.join(d, n), os.path.join(out, n))
+def _links(commit: str) -> dict[str, str]:
+    """Table -> version directory of every table ``commit`` names."""
+    return {t: os.path.normpath(os.path.join(commit, os.readlink(os.path.join(commit, t))))
+            for t in os.listdir(commit) if not t.startswith(".")}
 
 
 class Warehouse:
-    """Table store over ``root``; ``<root>/<table>/*.parquet`` names the
-    live files. ``read`` resolves the table's link once and memoizes the
-    lazy DataFrame by (applicationId, table path, version directory,
-    sorted (relative path, size, mtime_ns) of every file under it); no
-    rows are cached, and a scan planned before a commit keeps its files.
-    Every write commits a new version, so the next read misses and drops
-    the path's older entry and any dead session's entries. A miss takes
-    the schema Spark stored in a file footer, read on the driver, so it
-    runs no schema-inference job.
+    """Table store over ``root``. ``read`` memoizes the lazy DataFrame of
+    a version by (applicationId, version directory): a version never
+    changes, so a hit touches no file; a miss drops the entries of pruned
+    versions and dead sessions, and takes the schema Spark stored in a
+    file footer, read on the driver, so it runs no inference job. No rows
+    are cached, and a scan planned before a commit keeps its files.
     """
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
-        self.root = root
+        self.root = os.path.abspath(root)
+        self._staged: dict[str, str] | None = None  # in job(): table -> staged version
         os.makedirs(root, exist_ok=True)
 
     def path(self, table: str) -> str:
-        return os.path.join(self.root, table)
+        """The table's live path; inside a job, the version it staged."""
+        return (self._staged or {}).get(table) or os.path.join(self.root, table)
 
     def exists(self, table: str) -> bool:
         return os.path.isdir(self.path(table))  # only a commit makes the path
+
+    def head(self) -> str | None:
+        """The live commit directory, or None before the first commit."""
+        head = os.path.join(self.root, "_head")
+        return os.path.realpath(head) if os.path.islink(head) else None
 
     # column renames shipped after warehouses existed: old name -> new.
     # read() aliases on the fly so pre-rename tables keep working; the
@@ -110,20 +110,20 @@ class Warehouse:
         "assistance_requests": {"housing_status": "housing_current_status"},
     }
 
-    def read(self, table: str) -> DataFrame:
-        path = os.path.abspath(self.path(table))
-        version = os.path.realpath(path)
-        files = _listing(version)
+    def read(self, table: str, at: str | None = None) -> DataFrame:
+        """The table as commit ``at`` (default: the head) holds it."""
+        version = self._version(table, at)
+        app_id = self.spark.sparkContext.applicationId
+        key = (app_id, version)
+        hit = _READ_MEMO.get(key)
+        if hit is not None:
+            return hit
+        files = _listing(version) if version else []
         if not files:
             if table in TABLE_SCHEMAS:
                 # limit 0: the optimizer sees the frame is empty and prunes it
                 return self.spark.createDataFrame([], TABLE_SCHEMAS[table]).limit(0)
             raise FileNotFoundError(f"table {table!r} not found in warehouse")
-        app_id = self.spark.sparkContext.applicationId
-        key = (app_id, path, version, files)
-        hit = _READ_MEMO.get(key)
-        if hit is not None:
-            return hit
         reader = self.spark.read
         schema = _footer_schema(version, files)
         if schema is not None:
@@ -133,133 +133,137 @@ class Warehouse:
             if old in df.columns and new not in df.columns:
                 df = df.withColumnRenamed(old, new)
         with _READ_MEMO_LOCK:
-            for k in [k for k in _READ_MEMO if k[0] != app_id or k[1] == path]:
+            for k in [k for k in _READ_MEMO if k[0] != app_id or not os.path.isdir(k[1])]:
                 del _READ_MEMO[k]
             _READ_MEMO[key] = df
         return df
 
-    def write(
-        self,
-        table: str,
-        df: DataFrame,
-        mode: str = "overwrite",
-        partition_by: list[str] | None = None,
-    ) -> None:
-        """Commit ``df`` as a new version; ``append`` links the current
-        version's files in beside it. A plan that reads the table it
-        replaces (the merge-upsert shape) reads an untouched version."""
+    def write(self, table: str, df: DataFrame, partition_by: list[str] | None = None) -> None:
+        """Fill a new version with ``df`` by one Spark job and commit it; a
+        plan that reads the table it replaces reads an untouched version."""
+        writer = df.write.mode("append")  # into the empty reserved directory
+        self._stage(table, (writer.partitionBy(*partition_by) if partition_by else writer).parquet)
 
-        def fill(version: str) -> None:
-            writer = df.write.mode("append")  # into the empty reserved directory
-            if partition_by:
-                writer = writer.partitionBy(*partition_by)
-            writer.parquet(version)
-
-        self._commit(table, fill, append=mode == "append")
-
-    def write_rows(
-        self, table: str, rows: list[tuple], schema: StructType, mode: str = "overwrite"
-    ) -> None:
-        """Commit driver-held ``rows`` (tuples in ``schema`` order) as a
-        new version holding one parquet file, written with pyarrow: no
-        Spark job. Datetimes must be naive UTC: pyarrow stores an aware
-        one's wall clock as UTC. The footer stores ``schema`` where Spark
-        stores its own. ``append`` links the current version's
-        files in beside it, as ``write`` does."""
-        arrow = to_arrow_schema(schema).with_metadata({_SPARK_SCHEMA_KEY: schema.json()})
-        columns = list(zip(*rows)) or [()] * len(arrow)
-        data = pa.Table.from_arrays(
-            [pa.array(c, type=f.type) for c, f in zip(columns, arrow)], schema=arrow
-        )
-        self._commit(
-            table,
-            lambda version: pq.write_table(data, os.path.join(version, f"part-{uuid.uuid4().hex}.parquet")),
-            append=mode == "append",
-        )
-
-    def read_rows(self, table: str, schema: StructType, filter) -> pa.Table:
-        """The live version's ``schema`` columns, scanned on the driver
-        with pyarrow: no Spark job. ``filter`` is a pyarrow expression
-        applied during the scan, so only matching rows are kept."""
+    def write_rows(self, table: str, rows: list[tuple], schema: StructType, mode: str = "overwrite") -> None:
+        """Commit driver-held ``rows`` (tuples in ``schema`` order, naive UTC
+        datetimes) as a new version of one parquet file, with ``schema`` in
+        the footer where Spark stores its own; ``append`` adds the live rows."""
         arrow = to_arrow_schema(schema)
-        if not self.exists(table):
+        columns = list(zip(*rows)) or [()] * len(arrow)
+        data = pa.Table.from_arrays([pa.array(c, type=f.type) for c, f in zip(columns, arrow)], schema=arrow)
+        if mode == "append":
+            data = pa.concat_tables([self.read_rows(table, schema), data])
+        data = data.replace_schema_metadata({_SPARK_SCHEMA_KEY: schema.json()})
+        self._stage(table, lambda version: pq.write_table(data, os.path.join(version, f"part-{uuid.uuid4().hex}.parquet")))
+
+    def read_rows(self, table: str, schema: StructType, filter=None) -> pa.Table:
+        """The ``schema`` columns of the version ``read`` would read, scanned
+        on the driver with pyarrow, no Spark job; ``filter`` applies in the scan."""
+        arrow = to_arrow_schema(schema)
+        version = self._version(table)
+        if version is None:
             return arrow.empty_table()
-        version = os.path.realpath(self.path(table))  # resolved once
         return ds.dataset(version, schema=arrow, format="parquet").to_table(filter=filter)
 
-    def restore(self, table: str, version: int) -> None:
-        """Commit a retained version again as hard links; undoable like any write."""
-        src = self._retained(table, version)
-        self._commit(table, lambda new: _link_files(src, new))
-
-    def read_version(self, table: str, version: int) -> DataFrame:
-        """Read a retained superseded version of a table."""
-        return self.spark.read.parquet(self._retained(table, version))
-
-    def list_snapshots(self, table: str) -> list[int]:
-        """Retained superseded version numbers, oldest first."""
-        current = self._current(table)
-        return [n for n in self._numbers(table) if current is not None and n < current]
-
-    def _retained(self, table: str, version: int) -> str:
-        kept = self.list_snapshots(table)
-        if version not in kept:
-            raise FileNotFoundError(f"table {table!r} has no retained version {version}; available: {kept}")
-        return self._version_path(table, version)
-
-    def _commit(self, table: str, fill, append: bool = False) -> None:
-        """Reserve a version, ``fill(it)``, link the current version's
-        files in if ``append``, make it live, prune."""
-        path = self.path(table)
-        if os.path.isdir(path) and not os.path.islink(path):
-            # a table from before versions: adopt it, the one non-atomic step
-            adopted = self._reserve(table)
-            os.rename(path, adopted)
-            self._point(table, adopted)
-        current = self._current(table)
-        version = self._reserve(table)
-        fill(version)
-        if append and current is not None:
-            _link_files(self._version_path(table, current), version)
-        self._point(table, version)
-        self._prune(table, current, int(os.path.basename(version)[1:]))
-
-    def _point(self, table: str, version: str) -> None:
-        # the link is made inside the version, so a pruned version
-        # cannot be made live, and a crash leaves it where prune looks
-        link = os.path.join(version, "_commit")
-        os.symlink(os.path.relpath(version, self.root), link)
-        os.replace(link, self.path(table))
-
-    def _version_path(self, table: str, version: int) -> str:
-        return os.path.join(self.root, "_versions", table, f"v{version:08d}")
-
-    def _numbers(self, table: str) -> list[int]:
-        """Every version on disk, committed or not; nothing else lives there."""
-        d = os.path.dirname(self._version_path(table, 0))
-        return sorted(int(n[1:]) for n in (os.listdir(d) if os.path.isdir(d) else []))
-
-    def _current(self, table: str) -> int | None:
+    @contextmanager
+    def job(self):
+        """Stage every write of the block and commit them together at its
+        end; an exception commits none of them."""
+        self._staged, self._locks = {}, []
         try:
-            return int(os.path.basename(os.readlink(self.path(table)))[1:])
-        except OSError:  # no table, or one from before versions
-            return None
+            yield
+            if self._staged:
+                self._commit(self._staged)
+        finally:
+            for lock in self._locks:
+                os.close(lock)
+            self._staged = None
 
-    def _reserve(self, table: str) -> str:
-        """Create the next version directory; makedirs fails on a number another writer took."""
-        while True:
-            version = self._version_path(table, max(self._numbers(table), default=-1) + 1)
-            try:
-                os.makedirs(version)
-                return version
-            except FileExistsError:
+    def _version(self, table: str, at: str | None = None) -> str | None:
+        """The directory ``table`` reads from: the version this job staged,
+        else the one commit ``at`` (default: the head) names; before the
+        first commit, a table directory from before commits."""
+        if self._staged and table in self._staged:
+            return self._staged[table]
+        path = os.path.join(at or self.head() or self.root, table)
+        return os.path.realpath(path) if os.path.isdir(path) else None
+
+    @contextmanager
+    def _locked(self):
+        with open(os.path.join(self.root, "_lock"), "a") as lock:
+            fcntl.flock(lock, fcntl.LOCK_EX)
+            yield
+
+    def _stage(self, table: str, fill) -> None:
+        """Fill a new version of ``table``; stage it inside a job, else commit it."""
+        version = os.path.join(self.root, "_versions", table, uuid.uuid4().hex)
+        with self._locked():  # so no prune sees it unlocked
+            os.makedirs(version)
+            lock = os.open(version, os.O_RDONLY)
+            fcntl.flock(lock, fcntl.LOCK_SH)
+        if self._staged is not None:
+            self._locks.append(lock)  # released after the job's commit
+            fill(version)
+            self._staged[table] = version
+            return
+        try:
+            fill(version)
+            self._commit({table: version})
+        finally:
+            os.close(lock)
+
+    def _commit(self, versions: dict[str, str]) -> None:
+        """Make ``versions`` (table -> version directory) live beside the
+        head's other tables by one replace of ``_head``, then prune. A crash
+        leaves its temporary links in the commit, which the next one deletes."""
+        with self._locked():
+            head = self.head()
+            n = int(os.path.basename(head)[1:]) + 1 if head else 0
+            tables = {**self._live(head), **versions}
+            commit = os.path.join(self.root, "_commits", f"c{n}")
+            shutil.rmtree(commit, ignore_errors=True)  # left by a crash before its head replace
+            os.makedirs(commit)
+            for table, version in tables.items():
+                os.symlink(os.path.relpath(version, commit), os.path.join(commit, table))
+            os.symlink(os.path.relpath(commit, self.root), os.path.join(commit, "._head"))
+            os.replace(os.path.join(commit, "._head"), os.path.join(self.root, "_head"))
+            for table in tables:  # the fixed links; replacing one changes nothing a reader sees
+                os.symlink(os.path.join("_head", table), os.path.join(commit, "." + table))
+                os.replace(os.path.join(commit, "." + table), os.path.join(self.root, table))
+            self._prune(n)
+
+    def _live(self, head: str | None) -> dict[str, str]:
+        """Table -> version directory of every live table. A table from before
+        commits (a plain directory, or a link to its version) is adopted; a
+        plain one moves into ``_versions``, the one non-atomic step."""
+        live = _links(head) if head else {}
+        for table in os.listdir(self.root):
+            path = os.path.join(self.root, table)
+            if table in live or table.startswith(("_", ".")) or not os.path.isdir(path):
                 continue
+            if os.path.islink(path):
+                live[table] = os.path.join(self.root, os.readlink(path))
+            else:
+                live[table] = os.path.join(self.root, "_versions", table, uuid.uuid4().hex)
+                os.makedirs(os.path.dirname(live[table]), exist_ok=True)
+                os.rename(path, live[table])
+        return live
 
-    def _prune(self, table: str, previous: int | None, new: int) -> None:
-        """Keep ``new`` and the last RETAINED_VERSIONS up to ``previous``;
-        delete every other older version, committed or not."""
-        numbers = self._numbers(table)
-        keep = {new, *[n for n in numbers if previous is not None and n <= previous][-RETAINED_VERSIONS:]}
-        for n in numbers:
-            if n < new and n not in keep:
-                shutil.rmtree(self._version_path(table, n), ignore_errors=True)
+    def _prune(self, n: int) -> None:
+        """Delete the commits before the last RETAINED_VERSIONS + 1 up to
+        ``c<n>``, and every version none of those names and no writer stages."""
+        keep = set()
+        for commit in glob.glob(os.path.join(self.root, "_commits", "c*")):
+            if int(os.path.basename(commit)[1:]) < n - RETAINED_VERSIONS:
+                shutil.rmtree(commit)
+            else:
+                keep |= set(_links(commit).values())
+        for version in set(glob.glob(os.path.join(self.root, "_versions", "*", "*"))) - keep:
+            lock = os.open(version, os.O_RDONLY)
+            try:
+                fcntl.flock(lock, fcntl.LOCK_EX | fcntl.LOCK_NB)  # fails while a writer stages it
+                shutil.rmtree(version)
+            except BlockingIOError:
+                pass
+            finally:
+                os.close(lock)

@@ -470,11 +470,12 @@ def test_ingest_job_budget(tmp_path, spark, input_dir):
 
 def test_bookkeeping_mixes_spark_and_pyarrow_files(tmp_path, spark, input_dir):
     """The upgrade path of every existing warehouse: a bookkeeping
-    table's live version holds a file Spark wrote (as earlier releases
-    appended it) beside rows appended on the driver with pyarrow. Spark
-    reads both as one table with TimestampType columns and equal values,
-    the quality rollup matches one written by Spark alone, and the skip
-    check finds files that either writer recorded."""
+    table's live version is a file Spark wrote (as earlier releases
+    appended it), and the next append on the driver rewrites its rows
+    and the new ones with pyarrow as one file. Spark reads that file with
+    TimestampType columns and equal values, the quality rollup matches
+    one written by Spark alone, and the skip check finds files that
+    either writer recorded."""
     from datetime import datetime
 
     from pyspark.sql.types import TimestampType
@@ -506,12 +507,14 @@ def test_bookkeeping_mixes_spark_and_pyarrow_files(tmp_path, spark, input_dir):
     wh = Warehouse(spark, cfg.warehouse_dir)
     alone = Warehouse(spark, str(tmp_path / "spark_only"))
     for table, rows in older.items():
-        wh.write(table, spark.createDataFrame(rows, TABLE_SCHEMAS[table]), mode="append")
+        wh.write(table, spark.createDataFrame(rows, TABLE_SCHEMAS[table]))
+        spark_files = [f for f in os.listdir(wh.path(table)) if f.endswith(".parquet")]
         etl._append_rows(wh, table, newer[table])
         alone.write(table, spark.createDataFrame(rows + newer[table], TABLE_SCHEMAS[table]))
-        live = [f for f in os.listdir(os.path.realpath(wh.path(table))) if f.endswith(".parquet")]
+        live = [f for f in os.listdir(wh.path(table)) if f.endswith(".parquet")]
         # Spark names its files part-<task>-<uuid>-c000.snappy.parquet, the row writer part-<hex>.parquet
-        assert {f.endswith(".snappy.parquet") for f in live} == {True, False}
+        assert spark_files and all(f.endswith(".snappy.parquet") for f in spark_files)
+        assert len(live) == 1 and not live[0].endswith(".snappy.parquet")
 
         df = wh.read(table)
         stamps = [f.name for f in TABLE_SCHEMAS[table] if isinstance(f.dataType, TimestampType)]
@@ -540,13 +543,22 @@ def _data_tables(wh):
     }
 
 
+def _bookkeeping(wh):
+    """The job's schema-error and quality rows, creation stamps left out."""
+    return {
+        t: sorted(tuple(r) for r in wh.read(t).drop("created_at").collect())
+        for t in ("data_quality_issues", "schema_errors")
+    }
+
+
 @pytest.mark.parametrize("crash", ["row_writer", "pointer_replace"])
 def test_crash_in_metadata_append_reruns_to_one_record_per_file(tmp_path, spark, crash, monkeypatch):
-    """A crash while the load record is appended, after the merges have
-    committed, leaves etl_metadata without the job's rows: the re-run
-    loads the files again (the merge keeps the last line per key, so the
-    tables do not change) and ends with exactly one completed row per
-    file and the tables of a clean single run."""
+    """A crash while the load record is written, or at the head replace
+    that commits the job, leaves every table of the job at its pre-job
+    version: no data table, no quality or schema-error row, no load
+    record is live. The re-run loads the files again and ends with the
+    data, quality and schema-error tables of a clean single run and
+    exactly one completed row per file."""
     from calaveras_uniteus_etl_spark import warehouse as W
 
     def load(root):
@@ -554,12 +566,14 @@ def test_crash_in_metadata_append_reruns_to_one_record_per_file(tmp_path, spark,
         inp.mkdir(parents=True)
         (inp / "people_20240101.txt").write_text(PEOPLE_V1)
         (inp / "cases_20240101.txt").write_text(CASES_V1)
+        (inp / "referrals_20240101.txt").write_text("referral_id|no_such_column\nr1|x\n")
         return ETLConfig(input_dir=str(inp), warehouse_dir=str(root / "warehouse"),
                          phi=PHIConfig(enabled=False))
 
     clean_cfg = load(tmp_path / "clean")
     ingest(spark, clean_cfg)
     clean = Warehouse(spark, clean_cfg.warehouse_dir)
+    assert all(_bookkeeping(clean).values())  # the job logs rows of both kinds
 
     cfg = load(tmp_path / "crashed")
     wh = Warehouse(spark, cfg.warehouse_dir)
@@ -569,23 +583,41 @@ def test_crash_in_metadata_append_reruns_to_one_record_per_file(tmp_path, spark,
         raise OSError("injected crash")
 
     def crashing_write_rows(self, table, *a, **k):
-        if table != "etl_metadata":
-            return write_rows(self, table, *a, **k)
-        if crash == "row_writer":
+        if table == "etl_metadata" and crash == "row_writer":
             boom()
-        with monkeypatch.context() as m:  # the version is filled, the link swap fails
-            m.setattr(W.os, "replace", boom)
-            write_rows(self, table, *a, **k)
+        return write_rows(self, table, *a, **k)
 
     with monkeypatch.context() as m, pytest.raises(OSError, match="injected crash"):
         m.setattr(Warehouse, "write_rows", crashing_write_rows)
+        if crash == "pointer_replace":
+            m.setattr(W.os, "replace", boom)
         ingest(spark, cfg)
-    assert _data_tables(wh) == _data_tables(clean)  # the merges committed
-    assert not wh.exists("etl_metadata")
+    tables = ("people", "cases", "data_quality_issues", "schema_errors", "etl_metadata")
+    assert not any(wh.exists(t) for t in tables)
 
     report = ingest(spark, cfg)
     assert len(report.completed) == 2 and not report.skipped
+    assert _bookkeeping(wh) == _bookkeeping(clean)
     assert len(ingest(spark, cfg).skipped) == 2
     meta = wh.read("etl_metadata").filter(F.col("status") == "completed").collect()
     assert sorted(r.file_name for r in meta) == ["cases_20240101.txt", "people_20240101.txt"]
     assert _data_tables(wh) == _data_tables(clean)
+
+
+def test_bookkeeping_tables_stay_one_file(tmp_path, spark, input_dir):
+    """Each job rewrites the live rows of etl_metadata,
+    data_quality_issues and schema_errors with its own as one file, so
+    after five jobs each table's live version still holds one parquet
+    file with every job's rows."""
+    cfg = _cfg(tmp_path)
+    # fails its schema check in every job, so every job logs schema errors
+    (input_dir / "referrals_20240101.txt").write_text("referral_id|no_such_column\nr1|x\n")
+    for day in range(1, 6):
+        (input_dir / f"people_2024010{day}.txt").write_text(PEOPLE_V1)
+        report = ingest(spark, cfg)
+        assert len(report.completed) == 1 and len(report.failed) == 1
+    wh = Warehouse(spark, cfg.warehouse_dir)
+    for table in ("etl_metadata", "data_quality_issues", "schema_errors"):
+        assert len([f for f in os.listdir(wh.path(table)) if f.endswith(".parquet")]) == 1, table
+    assert wh.read("etl_metadata").filter(F.col("status") == "completed").count() == 5
+    assert wh.read("data_quality_issues").select("file_name").distinct().count() == 5

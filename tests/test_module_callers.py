@@ -1,11 +1,15 @@
-"""Every engine module has a caller.
+"""Every engine module has a caller, and so does every public function
+of the ETL job and the warehouse.
 
 Walks, with ``ast``, the imports reachable from the product's entry
 points (the CLI, the ETL job, the sync ticks, the query registry under
 ``plans/`` and the driver contract ``__spark_entry__.py``). An engine
 module outside ``plans/`` that none of them reaches is dead code and
 fails this test, unless it is named in ``AWAITING_CLI`` with the
-SURVEY.md row of the reference feature it ports.
+SURVEY.md row of the reference feature it ports. A public top-level
+function of ``etl.py`` or ``warehouse.py``, or a public ``Warehouse``
+method, that no other non-test file names (the engine,
+``__spark_entry__.py``, ``perfbench/`` or ``tools/``) fails it too.
 """
 
 from __future__ import annotations
@@ -89,3 +93,38 @@ def test_awaiting_cli_list_names_only_unreached_modules():
     modules = _module_files()
     assert set(AWAITING_CLI) <= modules.keys()
     assert not set(AWAITING_CLI) & _reachable(modules)
+
+
+def _names(path: Path) -> set[str]:
+    """Every identifier, attribute and string constant ``path`` names."""
+    found = set()
+    for node in ast.walk(ast.parse(path.read_text())):
+        if isinstance(node, ast.Name):
+            found.add(node.id)
+        elif isinstance(node, ast.Attribute):
+            found.add(node.attr)
+        elif isinstance(node, ast.alias):
+            found.add(node.name.rsplit(".", 1)[-1])
+        elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+            found.add(node.value)
+    return found
+
+
+def _public_functions(path: Path) -> set[str]:
+    """Public top-level functions of ``path`` and public methods of its
+    top-level classes."""
+    tree = ast.parse(path.read_text())
+    defs = [n for n in tree.body if isinstance(n, ast.FunctionDef)]
+    defs += [m for c in tree.body if isinstance(c, ast.ClassDef) for m in c.body if isinstance(m, ast.FunctionDef)]
+    return {d.name for d in defs if not d.name.startswith("_")}
+
+
+def test_every_public_etl_and_warehouse_function_has_a_caller():
+    sources = [*(REPO / PKG).rglob("*.py"), REPO / "__spark_entry__.py", *(REPO / "tools").rglob("*.py")]
+    sources += [p for p in (REPO / "perfbench").rglob("*.py") if "tests" not in p.relative_to(REPO).parts]
+    uncalled = {}
+    for module in ("etl", "warehouse"):
+        path = REPO / PKG / f"{module}.py"
+        named = set().union(*(_names(p) for p in sources if p != path))
+        uncalled[module] = sorted(_public_functions(path) - named)
+    assert not any(uncalled.values()), f"public functions without a caller: {uncalled}"

@@ -1,12 +1,16 @@
-"""The warehouse commit: every write fills a new version directory and
-one symlink replace makes it live.
+"""The warehouse commit: every write fills a new version directory, and
+one replace of the ``_head`` link makes a commit live that names one
+version of every table.
 
-Crash points: a write that fails in Spark, at the pointer replace or in
+Crash points: a write that fails in Spark, at the head replace or in
 the prune leaves readers on exactly the old or the new rows, and the
-next write converges to the current version plus RETAINED_VERSIONS
-superseded ones on disk. Product path: reports that loop while an
-ingest tick reloads their tables see each table's pre-tick or post-tick
-row count, never an empty table or an error.
+next write converges to the versions of the last RETAINED_VERSIONS + 1
+commits on disk. Concurrency: two writers that commit different tables
+at once both stay live, and a job's staged version survives another
+writer's commit. Product path: every report that runs while an ingest
+tick reloads its tables reads all of them from one commit, so a
+``summary`` counts all four tables before the tick or all four after
+it, never a mix, an empty table or an error.
 """
 
 from __future__ import annotations
@@ -17,11 +21,14 @@ import threading
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 from calaveras_uniteus_etl_spark import cli, etl
 from calaveras_uniteus_etl_spark import warehouse as W
 from calaveras_uniteus_etl_spark.config import ETLConfig, PHIConfig
 from calaveras_uniteus_etl_spark.warehouse import RETAINED_VERSIONS, Warehouse
+
+N = StructType([StructField("n", LongType())])
 
 
 def _rows(df) -> list[tuple]:
@@ -36,6 +43,11 @@ def _on_disk(root: str, table: str) -> list[str]:
     return sorted(os.listdir(os.path.join(root, "_versions", table)))
 
 
+def _commits(root: str) -> list[str]:
+    names = sorted(os.listdir(os.path.join(root, "_commits")), key=lambda n: int(n[1:]))
+    return [os.path.join(root, "_commits", n) for n in names]
+
+
 def _failing_spark_write(monkeypatch, wh, spark):
     bad = spark.range(3).select(
         "id", F.when(F.col("id") == 2, F.raise_error(F.lit("boom"))).otherwise(F.lit(-1)).alias("v")
@@ -45,7 +57,7 @@ def _failing_spark_write(monkeypatch, wh, spark):
 
 def _failing_pointer(monkeypatch, wh, spark):
     def boom(*a, **k):
-        raise OSError("pointer replace failed")
+        raise OSError("head replace failed")
 
     monkeypatch.setattr(W.os, "replace", boom)
     wh.write("t", _gen(spark, 99))
@@ -78,22 +90,23 @@ def test_crash_point_leaves_old_or_new_and_next_write_converges(spark, tmp_path,
     wh.write("t", _gen(spark, 7))
     assert _rows(wh.read("t")) == _rows(_gen(spark, 7))
     assert len(_on_disk(root, "t")) == RETAINED_VERSIONS + 1
-    # history holds the committed versions only, oldest first
-    history = [{r.v for r in wh.read_version("t", n).collect()} for n in wh.list_snapshots("t")]
-    committed_gens = list(range(RETAINED_VERSIONS + 1)) + ([99] if committed else [])
-    assert history == [{g} for g in committed_gens[-RETAINED_VERSIONS:]]
+    # the retained commits hold the committed writes only, oldest first
+    history = [{r.v for r in wh.read("t", at=c).collect()} for c in _commits(root)]
+    committed_gens = list(range(RETAINED_VERSIONS + 1)) + ([99] if committed else []) + [7]
+    assert history == [{g} for g in committed_gens[-RETAINED_VERSIONS - 1:]]
 
 
-def test_append_links_current_files_and_keeps_the_old_version(spark, tmp_path):
+def test_append_writes_one_file_and_keeps_the_old_version(spark, tmp_path):
+    """A row append writes the live rows and the new ones as the new
+    version's one file; the commit before it still reads the old rows."""
     wh = Warehouse(spark, str(tmp_path / "wh"))
-    wh.write("t", _gen(spark, 0))
-    wh.write("t", spark.range(10, 11).select("id", F.lit(1).alias("v")), mode="append")
-    assert _rows(wh.read("t")) == [(0, 0), (1, 0), (2, 0), (10, 1)]
-    [previous] = wh.list_snapshots("t")
-    assert _rows(wh.read_version("t", previous)) == [(0, 0), (1, 0), (2, 0)]
-    live = os.path.realpath(wh.path("t"))
-    linked = [n for n in os.listdir(live) if os.stat(os.path.join(live, n)).st_nlink > 1]
-    assert linked and all(n.endswith((".parquet", ".parquet.crc")) for n in linked)
+    wh.write_rows("t", [(0,), (1,)], N)
+    previous = wh.head()
+    wh.write_rows("t", [(10,)], N, mode="append")
+    assert _rows(wh.read("t")) == [(0,), (1,), (10,)]
+    assert _rows(wh.read("t", at=previous)) == [(0,), (1,)]
+    [only] = os.listdir(wh.path("t"))
+    assert only.endswith(".parquet")
 
 
 def test_first_write_adopts_a_plain_table_directory(spark, tmp_path):
@@ -101,11 +114,70 @@ def test_first_write_adopts_a_plain_table_directory(spark, tmp_path):
     it reads as it is, and the first write adopts it as a version."""
     wh = Warehouse(spark, str(tmp_path / "wh"))
     _gen(spark, 0).write.parquet(wh.path("t"))
+    _gen(spark, 5).write.parquet(wh.path("u"))  # not written below: adopted as it is
     assert _rows(wh.read("t")) == [(0, 0), (1, 0), (2, 0)]
-    wh.write("t", spark.range(10, 11).select("id", F.lit(1).alias("v")), mode="append")
-    assert os.path.islink(wh.path("t"))
+    wh.write("t", wh.read("t").union(spark.range(10, 11).select("id", F.lit(1).alias("v"))))
+    assert os.path.islink(wh.path("t")) and os.path.islink(wh.path("u"))
     assert _rows(wh.read("t")) == [(0, 0), (1, 0), (2, 0), (10, 1)]
-    assert [_rows(wh.read_version("t", n)) for n in wh.list_snapshots("t")] == [[(0, 0), (1, 0), (2, 0)]]
+    assert _rows(wh.read("u")) == _rows(_gen(spark, 5))
+
+
+def test_two_warehouses_commit_different_tables_at_once(tmp_path):
+    """Two writers, each with its own Warehouse as two processes would
+    have, commit a different table at the same moment, round after
+    round. The lock orders the head replaces, so neither commit drops
+    the other's new version: each round's rows of both tables are live
+    once both writers return."""
+    root = str(tmp_path / "wh")
+    rounds = 15
+    start = threading.Barrier(2)
+    errors: list[str] = []
+
+    def writer(table: str, other: str) -> None:
+        wh = Warehouse(None, root)  # row writes and scans need no Spark session
+        try:
+            for n in range(rounds):
+                start.wait(timeout=60)
+                seen = wh.read_rows(other, N)["n"].to_pylist()
+                if n and seen not in ([n - 1], [n]):
+                    errors.append(f"round {n}: {other} holds {seen}")
+                wh.write_rows(table, [(n,)], N)
+        except Exception as e:  # noqa: BLE001 - every error fails the test
+            errors.append(f"{table}: {type(e).__name__}: {e}")
+            start.abort()  # the other writer stops too
+
+    threads = [threading.Thread(target=writer, args=pair) for pair in (("a", "b"), ("b", "a"))]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not errors, errors[:5]
+    wh = Warehouse(None, root)
+    assert [wh.read_rows(t, N)["n"].to_pylist() for t in ("a", "b")] == [[rounds - 1]] * 2
+    assert os.path.basename(wh.head()) == f"c{2 * rounds - 1}"  # no two commits took one number
+
+
+def test_a_job_commits_once_beside_a_concurrent_commit(spark, tmp_path):
+    """A job's staged versions survive the prunes of other writers'
+    commits, and its one commit keeps the tables they committed."""
+    root = str(tmp_path / "wh")
+    wh, other = Warehouse(spark, root), Warehouse(spark, root)
+    wh.write_rows("a", [(0,)], N)
+    with wh.job():
+        wh.write_rows("a", [(1,)], N, mode="append")
+        wh.write_rows("a", [(2,)], N, mode="append")  # reads its own staged version
+        for n in range(RETAINED_VERSIONS + 2):
+            other.write_rows("b", [(n,)], N)
+        assert other.read_rows("a", N)["n"].to_pylist() == [0]  # not live yet
+        head = wh.head()
+    assert int(os.path.basename(wh.head())[1:]) == int(os.path.basename(head)[1:]) + 1
+    assert wh.read_rows("a", N)["n"].to_pylist() == [0, 1, 2]
+    assert wh.read_rows("b", N)["n"].to_pylist() == [RETAINED_VERSIONS + 1]
 
 
 PEOPLE = "person_id|first_name|people_created_at\n{}"
@@ -127,13 +199,14 @@ def _delivery(input_dir, date: str, first: int, n: int) -> None:
 
 
 def test_reports_during_a_tick_see_pre_or_post_tick_counts(spark, tmp_path):
+    """Every summary taken during a tick sees all four tables at their
+    pre-tick count or all four at their post-tick count."""
     input_dir = tmp_path / "input"
     input_dir.mkdir()
     cfg = ETLConfig(input_dir=str(input_dir), warehouse_dir=str(tmp_path / "wh"), phi=PHIConfig(enabled=False))
     _delivery(input_dir, "20240101", 0, 4)
     assert not etl.ingest(spark, cfg).failed
     _delivery(input_dir, "20240201", 2, 5)  # 2 updated keys and 3 new ones per table
-    allowed = {t: {4, 7} for t in ("people", "cases", "referrals", "assistance_requests")}
 
     registry, parser = cli._report_registry(), cli.build_parser()
     requests = [
@@ -176,6 +249,7 @@ def test_reports_during_a_tick_see_pre_or_post_tick_counts(spark, tmp_path):
     assert not any(t.is_alive() for t in threads)
     assert not report.failed and len(report.completed) == 4
     assert not errors, errors[:5]
-    bad = [s for s in seen if any(n not in allowed[t] for t, n in s.items())]
+    # one commit per request: the four counts move together
+    bad = [s for s in seen if set(s.values()) not in ({4}, {7})]
     assert seen and not bad, bad[:5]
     assert request(requests[0]) == [[7, 7, 7, 7]]

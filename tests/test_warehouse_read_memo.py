@@ -1,8 +1,9 @@
 """``Warehouse.read`` resolves each table version once: the memo keyed
-by (applicationId, table path, version directory, file listing) must
-return the same lazy DataFrame while the files stand still, and a fresh
-one after every write that changes them. A miss takes its schema from
-a file footer, with no Spark job."""
+by (applicationId, version directory) must return the same lazy
+DataFrame for a version without touching its files, and a fresh one
+after every write, which commits a new version. A miss takes its schema
+from a file footer, with no Spark job, and drops the entries of pruned
+versions."""
 
 from __future__ import annotations
 
@@ -18,30 +19,37 @@ import pyarrow.parquet as pq
 
 from calaveras_uniteus_etl_spark import warehouse as W
 from calaveras_uniteus_etl_spark.schema import TABLE_SCHEMAS
-from calaveras_uniteus_etl_spark.warehouse import Warehouse
+from calaveras_uniteus_etl_spark.warehouse import RETAINED_VERSIONS, Warehouse
 
 
 def _ids(df) -> list[int]:
     return sorted(r["id"] for r in df.select("id").collect())
 
 
-def _entries(wh: Warehouse, table: str) -> int:
-    path = os.path.abspath(wh.path(table))
-    return sum(k[1] == path for k in list(W._READ_MEMO))
+def _entries(wh: Warehouse, table: str) -> list[str]:
+    """The version directories of ``table`` that the memo holds."""
+    versions = os.path.realpath(os.path.join(wh.root, "_versions", table)) + os.sep
+    return [k[1] for k in list(W._READ_MEMO) if k[1].startswith(versions)]
 
 
-def test_repeat_read_hits_and_writes_miss(spark, tmp_path):
+def test_repeat_read_hits_and_writes_miss(spark, tmp_path, monkeypatch):
     wh = Warehouse(spark, str(tmp_path))
     wh.write("t", spark.range(3))
     first = wh.read("t")
-    # a new Warehouse over the same root (one per CLI request) hits too
-    assert wh.read("t") is first and Warehouse(spark, str(tmp_path)).read("t") is first
+    with monkeypatch.context() as m:
+        m.setattr(W, "_listing", None)  # a hit lists no file
+        # a new Warehouse over the same root (one per CLI request) hits too
+        assert wh.read("t") is first and Warehouse(spark, str(tmp_path)).read("t") is first
     assert _ids(first) == [0, 1, 2]
     wh.write("t", spark.range(10, 12))
     assert _ids(wh.read("t")) == [10, 11]
-    wh.write("t", spark.range(20, 21), mode="append")
+    wh.write("t", wh.read("t").union(spark.range(20, 21)))
     assert _ids(wh.read("t")) == [10, 11, 20]
-    assert _entries(wh, "t") == 1  # a miss drops the path's older entry
+    wh.write("t", spark.range(30, 31))  # prunes the first version
+    assert _ids(wh.read("t")) == [30]
+    # a miss drops the pruned version's entry
+    entries = _entries(wh, "t")
+    assert len(entries) == RETAINED_VERSIONS + 1 and all(os.path.isdir(v) for v in entries)
 
 
 def _jobs(spark, fn):
@@ -69,9 +77,10 @@ def test_miss_takes_the_footer_schema_without_a_job(spark, tmp_path):
         assert jobs == 0, table
         assert df.schema == spark.read.parquet(os.path.realpath(wh.path(table))).schema
         assert [f.dataType for f in df.schema] == [f.dataType for f in TABLE_SCHEMAS[table]]
-    os.makedirs(wh.path("plain"))  # a table directory from before versions
-    pq.write_table(pa.table({"id": [2]}), os.path.join(wh.path("plain"), "part-0.parquet"))
-    df, jobs = _jobs(spark, lambda: wh.read("plain"))
+    legacy = Warehouse(spark, str(tmp_path / "legacy"))
+    os.makedirs(legacy.path("plain"))  # a table directory from before commits
+    pq.write_table(pa.table({"id": [2]}), os.path.join(legacy.path("plain"), "part-0.parquet"))
+    df, jobs = _jobs(spark, lambda: legacy.read("plain"))
     assert jobs == 1 and _ids(df) == [2]
 
 
@@ -81,13 +90,10 @@ def test_read_sees_append_into_one_partition(spark, tmp_path):
     wh.write("t", base, partition_by=["p"])
     assert _ids(wh.read("t")) == [0, 1, 2, 3]
     more = spark.range(10, 11).selectExpr("id", "'a' AS p")
-    wh.write("t", more, mode="append", partition_by=["p"])
-    assert _ids(wh.read("t")) == [0, 1, 2, 3, 10]
-    # new files under p=a alone, top-level _SUCCESS untouched
-    spark.range(20, 21).write.mode("append").parquet(os.path.join(wh.path("t"), "p=a"))
+    wh.write("t", wh.read("t").union(more), partition_by=["p"])
     got = wh.read("t")
-    assert _ids(got) == [0, 1, 2, 3, 10, 20]
-    assert {r["p"] for r in got.filter("id = 20").collect()} == {"a"}
+    assert _ids(got) == [0, 1, 2, 3, 10]
+    assert {r["p"] for r in got.filter("id = 10").collect()} == {"a"}
 
 
 def test_restarted_session_never_reuses_an_entry(tmp_path):
@@ -146,4 +152,5 @@ def test_concurrent_readers_see_old_or_new_rows(spark, tmp_path):
     assert not errors, errors
     assert all(ids in versions for ids in seen), seen
     assert last == [versions[-1]] * 4
-    assert _entries(wh, "race") == 1
+    entries = _entries(wh, "race")
+    assert 1 <= len(entries) <= RETAINED_VERSIONS + 1 and all(os.path.isdir(v) for v in entries)

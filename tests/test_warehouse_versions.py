@@ -1,11 +1,11 @@
-"""Warehouse table versions (time travel over the committed versions).
-
-Every write commits a new immutable version and the warehouse keeps the
-last RETAINED_VERSIONS superseded ones. These tests prove: version
-numbering is monotonic in write order, old versions read back
-bit-identically, retention prunes oldest-first without renumbering,
-restore round-trips and is itself undoable, and versions beyond the
-retained count are deleted from disk.
+"""Warehouse retention: every commit names one version of each table,
+and the warehouse keeps the versions the last RETAINED_VERSIONS + 1
+commits name. These tests prove: a request pinned to a retained commit
+reads that commit's rows back while later commits land, and reads
+nothing once its commit is pruned; commit numbers are monotonic in write
+order and pruning does not renumber them; versions no retained commit
+names are deleted from disk; a partitioned table's pinned commit reads
+back with its partition column.
 """
 
 from __future__ import annotations
@@ -22,70 +22,67 @@ def _rows(df):
     return sorted((r[0], r[1]) for r in df.collect())
 
 
+def _commits(root) -> list[int]:
+    return sorted(int(n[1:]) for n in os.listdir(os.path.join(root, "_commits")))
+
+
 def test_versions_accumulate_and_read_back(spark, tmp_path):
     wh = Warehouse(spark, str(tmp_path / "wh"))
+    pinned = []
     for gen in range(RETAINED_VERSIONS + 1):
         df = spark.range(3).select(
             "id", (F.col("id") * 10 + gen).alias("v")
         )
         wh.write("t", df)
-    # the last write is current; every earlier one is a retained version
-    assert wh.list_snapshots("t") == list(range(RETAINED_VERSIONS))
-    assert _rows(wh.read_version("t", 0)) == [(0, 0), (1, 10), (2, 20)]
-    assert _rows(wh.read_version("t", 1)) == [(0, 1), (1, 11), (2, 21)]
+        pinned.append(wh.head())
+    # the last write is the head; every earlier commit is retained
+    assert _rows(wh.read("t", at=pinned[0])) == [(0, 0), (1, 10), (2, 20)]
+    assert _rows(wh.read("t", at=pinned[1])) == [(0, 1), (1, 11), (2, 21)]
     gen = RETAINED_VERSIONS
     assert _rows(wh.read("t")) == [(0, gen), (1, 10 + gen), (2, 20 + gen)]
-    with pytest.raises(FileNotFoundError, match="no retained version 9"):
-        wh.read_version("t", 9)
+    wh.write("t", spark.range(3).select("id", F.lit(-1).alias("v")))
+    with pytest.raises(FileNotFoundError, match="'t' not found"):
+        wh.read("t", at=pinned[0])  # pruned with its commit
 
 
 def test_retention_prunes_oldest_without_renumbering(spark, tmp_path):
-    wh = Warehouse(spark, str(tmp_path / "wh"))
+    root = str(tmp_path / "wh")
+    wh = Warehouse(spark, root)
     writes = RETAINED_VERSIONS + 3
     for gen in range(writes):
         wh.write(
             "t", spark.range(2).select("id", F.lit(gen).alias("v"))
         )
-    # only the latest RETAINED_VERSIONS superseded versions are kept;
-    # numbering is NOT compacted — version n still means write n's state
-    kept = list(range(writes - 1 - RETAINED_VERSIONS, writes - 1))
-    assert wh.list_snapshots("t") == kept
-    assert {r.v for r in wh.read_version("t", kept[-1]).collect()} == {kept[-1]}
-
-
-def test_restore_is_undoable(spark, tmp_path):
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    wh.write("t", spark.range(2).select("id", F.lit("a").alias("v")))
-    wh.write("t", spark.range(2).select("id", F.lit("b").alias("v")))
-    assert {r.v for r in wh.read("t").collect()} == {"b"}
-    wh.restore("t", 0)  # back to 'a'
-    assert {r.v for r in wh.read("t").collect()} == {"a"}
-    # the pre-restore 'b' state was itself retained as a new version
-    latest = wh.list_snapshots("t")[-1]
-    assert {r.v for r in wh.read_version("t", latest).collect()} == {"b"}
-    wh.restore("t", latest)  # undo the restore
-    assert {r.v for r in wh.read("t").collect()} == {"b"}
+    # only the latest RETAINED_VERSIONS + 1 commits are kept; numbering
+    # is NOT compacted — commit n still holds write n's state
+    kept = list(range(writes - 1 - RETAINED_VERSIONS, writes))
+    assert _commits(root) == kept
+    for n in kept:
+        at = os.path.join(root, "_commits", f"c{n}")
+        assert {r.v for r in wh.read("t", at=at).collect()} == {n}
 
 
 def test_retention_zero_keeps_delete_behavior(spark, tmp_path):
-    """Versions beyond the retained count are gone from disk."""
+    """Versions beyond the retained commits are gone from disk."""
     root = str(tmp_path / "wh")
     wh = Warehouse(spark, root)
     for gen in range(RETAINED_VERSIONS + 3):
         wh.write("t", spark.range(2).select("id", F.lit(gen).alias("v")))
     on_disk = os.listdir(os.path.join(root, "_versions", "t"))
     assert len(on_disk) == RETAINED_VERSIONS + 1
-    assert len(wh.list_snapshots("t")) == RETAINED_VERSIONS
+    assert len(_commits(root)) == RETAINED_VERSIONS + 1
 
 
 def test_partitioned_table_versions_read_back(spark, tmp_path):
     wh = Warehouse(spark, str(tmp_path / "wh"))
+    pinned = []
     for gen in range(2):
         df = spark.range(6).select(
             "id", (F.col("id") % 3).alias("day"), F.lit(gen).alias("v")
         )
         wh.write("t", df, partition_by=["day"])
-    v0 = wh.read_version("t", 0)
+        pinned.append(wh.head())
+    v0 = wh.read("t", at=pinned[0])
     assert {r.v for r in v0.collect()} == {0}
     assert set(v0.columns) == {"id", "day", "v"}  # partition col survives
 
