@@ -169,13 +169,13 @@ class Warehouse:
     def job(self):
         """Stage every write of the block and commit them together at its
         end; an exception commits none of them."""
-        self._staged, self._locks = {}, []
+        self._staged, self._locks = {}, {}
         try:
             yield
             if self._staged:
                 self._commit(self._staged)
         finally:
-            for lock in self._locks:
+            for lock in self._locks.values():
                 os.close(lock)
             self._staged = None
 
@@ -202,9 +202,12 @@ class Warehouse:
             lock = os.open(version, os.O_RDONLY)
             fcntl.flock(lock, fcntl.LOCK_SH)
         if self._staged is not None:
-            self._locks.append(lock)  # released after the job's commit
+            self._locks[version] = lock  # released after the job's commit
             fill(version)
+            superseded = self._staged.get(table)
             self._staged[table] = version
+            if superseded:  # no commit will name it: the job's own prune may delete it
+                os.close(self._locks.pop(superseded))
             return
         try:
             fill(version)

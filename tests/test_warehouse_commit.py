@@ -156,6 +156,7 @@ def test_two_warehouses_commit_different_tables_at_once(tmp_path):
             t.join(timeout=300)
     finally:
         sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
     assert not errors, errors[:5]
     wh = Warehouse(None, root)
     assert [wh.read_rows(t, N)["n"].to_pylist() for t in ("a", "b")] == [[rounds - 1]] * 2
@@ -164,7 +165,8 @@ def test_two_warehouses_commit_different_tables_at_once(tmp_path):
 
 def test_a_job_commits_once_beside_a_concurrent_commit(spark, tmp_path):
     """A job's staged versions survive the prunes of other writers'
-    commits, and its one commit keeps the tables they committed."""
+    commits, and its one commit keeps the tables they committed. The
+    version its second write superseded is pruned with that commit."""
     root = str(tmp_path / "wh")
     wh, other = Warehouse(spark, root), Warehouse(spark, root)
     wh.write_rows("a", [(0,)], N)
@@ -178,6 +180,7 @@ def test_a_job_commits_once_beside_a_concurrent_commit(spark, tmp_path):
     assert int(os.path.basename(wh.head())[1:]) == int(os.path.basename(head)[1:]) + 1
     assert wh.read_rows("a", N)["n"].to_pylist() == [0, 1, 2]
     assert wh.read_rows("b", N)["n"].to_pylist() == [RETAINED_VERSIONS + 1]
+    assert len(_on_disk(root, "a")) == 2  # the pre-job version, still retained, and the job's
 
 
 PEOPLE = "person_id|first_name|people_created_at\n{}"
