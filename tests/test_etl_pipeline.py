@@ -605,18 +605,19 @@ def test_crash_in_metadata_append_reruns_to_one_record_per_file(tmp_path, spark,
 
 
 def test_bookkeeping_tables_stay_one_file(tmp_path, spark, input_dir):
-    """Each job rewrites the live rows of etl_metadata,
-    data_quality_issues and schema_errors with its own as one file, so
-    after five jobs each table's live version still holds one parquet
-    file with every job's rows."""
+    """Each job is one warehouse commit, and it rewrites the live rows of
+    etl_metadata, data_quality_issues and schema_errors with its own as
+    one file, so after five jobs each table's live version still holds
+    one parquet file with every job's rows."""
     cfg = _cfg(tmp_path)
+    wh = Warehouse(spark, cfg.warehouse_dir)
     # fails its schema check in every job, so every job logs schema errors
     (input_dir / "referrals_20240101.txt").write_text("referral_id|no_such_column\nr1|x\n")
     for day in range(1, 6):
         (input_dir / f"people_2024010{day}.txt").write_text(PEOPLE_V1)
         report = ingest(spark, cfg)
         assert len(report.completed) == 1 and len(report.failed) == 1
-    wh = Warehouse(spark, cfg.warehouse_dir)
+        assert os.path.basename(wh.head()) == f"c{day - 1}"  # one commit per job
     for table in ("etl_metadata", "data_quality_issues", "schema_errors"):
         assert len([f for f in os.listdir(wh.path(table)) if f.endswith(".parquet")]) == 1, table
     assert wh.read("etl_metadata").filter(F.col("status") == "completed").count() == 5
