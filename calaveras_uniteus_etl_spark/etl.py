@@ -285,12 +285,19 @@ def ingest(
             by_table.setdefault(task.table_name, []).append(task)
     # one commit: the merges and the three row sets go live together, so
     # a crash before it reloads the files on the next run and logs them once
-    with wh.job(), ThreadPoolExecutor(min(INGEST_WORKERS, len(by_table)) or 1) as pool:
-        # each worker starts from this thread's job group, description and tags
-        futures = [pool.submit(inheritable_thread_target(spark)(_load_table), spark, wh, t, config, started_at)
-                   for t in by_table.values()]
-        for f in futures:
-            f.result()
+    with wh.job():
+        if by_table:
+            with ThreadPoolExecutor(min(INGEST_WORKERS, len(by_table))) as pool:
+                # each worker starts from this thread's job group, description and tags
+                futures = [
+                    pool.submit(
+                        inheritable_thread_target(spark)(_load_table),
+                        spark, wh, table_tasks, config, started_at,
+                    )
+                    for table_tasks in by_table.values()
+                ]
+                for f in futures:
+                    f.result()
         completed_at = datetime.now(tz=timezone.utc).replace(tzinfo=None)
         _append_schema_errors(wh, report)
         _append_quality_issues(wh, report)

@@ -53,7 +53,11 @@ _READ_MEMO_LOCK = threading.Lock()
 
 def _listing(root: str) -> list[str]:
     """Sorted relative path of every file under root."""
-    return sorted(os.path.join(d[len(root) + 1:], n) for d, _, names in os.walk(root) for n in names)
+    out = []
+    for d, _, names in os.walk(root):
+        for n in names:
+            out.append(os.path.join(d[len(root) + 1:], n))
+    return sorted(out)
 
 
 def _footer_schema(version: str, files: list[str]) -> StructType | None:
@@ -72,8 +76,12 @@ def _footer_schema(version: str, files: list[str]) -> StructType | None:
 
 def _links(commit: str) -> dict[str, str]:
     """Table -> version directory of every table ``commit`` names."""
-    return {t: os.path.normpath(os.path.join(commit, os.readlink(os.path.join(commit, t))))
-            for t in os.listdir(commit) if not t.startswith(".")}
+    links = {}
+    for table in os.listdir(commit):
+        if not table.startswith("."):
+            target = os.readlink(os.path.join(commit, table))
+            links[table] = os.path.normpath(os.path.join(commit, target))
+    return links
 
 
 class Warehouse:
@@ -87,7 +95,9 @@ class Warehouse:
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
-        self.root = os.path.abspath(root)
+        # resolved, so the links a commit writes relative to it and the
+        # resolved head it reads them back through share one base
+        self.root = os.path.realpath(root)
         self._staged: dict[str, str] | None = None  # in job(): table -> staged version
         os.makedirs(root, exist_ok=True)
 
@@ -96,7 +106,7 @@ class Warehouse:
         return (self._staged or {}).get(table) or os.path.join(self.root, table)
 
     def exists(self, table: str) -> bool:
-        return os.path.isdir(self.path(table))  # only a commit makes the path
+        return self._version(table) is not None
 
     def head(self) -> str | None:
         """The live commit directory, or None before the first commit."""
@@ -142,19 +152,29 @@ class Warehouse:
         """Fill a new version with ``df`` by one Spark job and commit it; a
         plan that reads the table it replaces reads an untouched version."""
         writer = df.write.mode("append")  # into the empty reserved directory
-        self._stage(table, (writer.partitionBy(*partition_by) if partition_by else writer).parquet)
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        self._stage(table, writer.parquet)
 
-    def write_rows(self, table: str, rows: list[tuple], schema: StructType, mode: str = "overwrite") -> None:
+    def write_rows(
+        self, table: str, rows: list[tuple], schema: StructType, mode: str = "overwrite"
+    ) -> None:
         """Commit driver-held ``rows`` (tuples in ``schema`` order, naive UTC
         datetimes) as a new version of one parquet file, with ``schema`` in
         the footer where Spark stores its own; ``append`` adds the live rows."""
         arrow = to_arrow_schema(schema)
         columns = list(zip(*rows)) or [()] * len(arrow)
-        data = pa.Table.from_arrays([pa.array(c, type=f.type) for c, f in zip(columns, arrow)], schema=arrow)
+        data = pa.Table.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(columns, arrow)], schema=arrow
+        )
         if mode == "append":
             data = pa.concat_tables([self.read_rows(table, schema), data])
         data = data.replace_schema_metadata({_SPARK_SCHEMA_KEY: schema.json()})
-        self._stage(table, lambda version: pq.write_table(data, os.path.join(version, f"part-{uuid.uuid4().hex}.parquet")))
+
+        def fill(version: str) -> None:
+            pq.write_table(data, os.path.join(version, f"part-{uuid.uuid4().hex}.parquet"))
+
+        self._stage(table, fill)
 
     def read_rows(self, table: str, schema: StructType, filter=None) -> pa.Table:
         """The ``schema`` columns of the version ``read`` would read, scanned
@@ -245,7 +265,7 @@ class Warehouse:
             if table in live or table.startswith(("_", ".")) or not os.path.isdir(path):
                 continue
             if os.path.islink(path):
-                live[table] = os.path.join(self.root, os.readlink(path))
+                live[table] = os.path.normpath(os.path.join(self.root, os.readlink(path)))
             else:
                 live[table] = os.path.join(self.root, "_versions", table, uuid.uuid4().hex)
                 os.makedirs(os.path.dirname(live[table]), exist_ok=True)

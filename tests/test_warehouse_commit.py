@@ -2,10 +2,11 @@
 one replace of the ``_head`` link makes a commit live that names one
 version of every table.
 
-Crash points: a write that fails in Spark, at the head replace or in
-the prune leaves readers on exactly the old or the new rows, and the
-next write converges to the versions of the last RETAINED_VERSIONS + 1
-commits on disk. Concurrency: two writers that commit different tables
+Crash points: a write that fails in Spark, at the head replace, at a
+fixed ``<table>`` link or in the prune leaves readers on exactly the old
+or the new rows, and the next write converges to the versions of the
+last RETAINED_VERSIONS + 1 commits on disk. A root reached through a
+symlinked directory keeps every table a commit carries over. Concurrency: two writers that commit different tables
 at once both stay live, and a job's staged version survives another
 writer's commit. Product path: every report that runs while an ingest
 tick reloads its tables reads all of them from one commit, so a
@@ -15,6 +16,7 @@ it, never a mix, an empty table or an error.
 
 from __future__ import annotations
 
+import glob
 import os
 import sys
 import threading
@@ -63,6 +65,23 @@ def _failing_pointer(monkeypatch, wh, spark):
     wh.write("t", _gen(spark, 99))
 
 
+def _fail_fixed_links(monkeypatch) -> None:
+    """Let the head replace through and fail every fixed-link replace."""
+    replace = os.replace
+
+    def boom(src, dst):
+        if os.path.basename(dst) != "_head":
+            raise OSError("fixed link replace failed")
+        replace(src, dst)
+
+    monkeypatch.setattr(W.os, "replace", boom)
+
+
+def _failing_fixed_link(monkeypatch, wh, spark):
+    _fail_fixed_links(monkeypatch)
+    wh.write("t", _gen(spark, 99))
+
+
 def _failing_prune(monkeypatch, wh, spark):
     def boom(*a, **k):
         raise OSError("prune failed")
@@ -73,8 +92,13 @@ def _failing_prune(monkeypatch, wh, spark):
 
 @pytest.mark.parametrize(
     "crash, committed",
-    [(_failing_spark_write, False), (_failing_pointer, False), (_failing_prune, True)],
-    ids=["spark_write", "pointer_replace", "prune"],
+    [
+        (_failing_spark_write, False),
+        (_failing_pointer, False),
+        (_failing_fixed_link, True),
+        (_failing_prune, True),
+    ],
+    ids=["spark_write", "pointer_replace", "fixed_link_replace", "prune"],
 )
 def test_crash_point_leaves_old_or_new_and_next_write_converges(spark, tmp_path, monkeypatch, crash, committed):
     root = str(tmp_path / "wh")
@@ -85,6 +109,7 @@ def test_crash_point_leaves_old_or_new_and_next_write_converges(spark, tmp_path,
     with monkeypatch.context() as m, pytest.raises(Exception):
         crash(m, wh, spark)
     assert _rows(wh.read("t")) == (_rows(_gen(spark, 99)) if committed else old)
+    assert wh.exists("t")
     assert len(_on_disk(root, "t")) > RETAINED_VERSIONS + 1  # the crash left a version behind
 
     wh.write("t", _gen(spark, 7))
@@ -94,6 +119,42 @@ def test_crash_point_leaves_old_or_new_and_next_write_converges(spark, tmp_path,
     history = [{r.v for r in wh.read("t", at=c).collect()} for c in _commits(root)]
     committed_gens = list(range(RETAINED_VERSIONS + 1)) + ([99] if committed else []) + [7]
     assert history == [{g} for g in committed_gens[-RETAINED_VERSIONS - 1:]]
+
+
+def test_a_table_added_by_a_commit_exists_before_its_fixed_link(tmp_path, monkeypatch):
+    """A commit that adds a table and crashes after its head replace,
+    before the table's fixed link, has still made the table live: it
+    exists and reads through the head, and the next commit adds the
+    fixed link that names its files."""
+    root = str(tmp_path / "wh")
+    wh = Warehouse(None, root)
+    wh.write_rows("a", [(1,)], N)
+    with monkeypatch.context() as m, pytest.raises(OSError):
+        _fail_fixed_links(m)
+        wh.write_rows("b", [(2,)], N)
+    assert not os.path.lexists(os.path.join(root, "b"))
+    assert wh.exists("b")
+    assert wh.read_rows("b", N)["n"].to_pylist() == [2]
+    wh.write_rows("a", [(3,)], N)
+    assert len(glob.glob(os.path.join(root, "b", "*.parquet"))) == 1
+
+
+def test_a_root_reached_through_a_symlink_keeps_every_table(tmp_path):
+    """A warehouse opened through a symlinked directory of another depth
+    (a data directory linked to a bigger disk) links every table of a
+    commit to its version: a table that later commits carry over still
+    reads back, and no prune deletes its version."""
+    disk = tmp_path / "disk" / "a" / "b"
+    disk.mkdir(parents=True)
+    os.symlink(disk, tmp_path / "data")
+    root = str(tmp_path / "data" / "wh")
+    wh = Warehouse(None, root)
+    wh.write_rows("a", [(1,)], N)
+    for n in range(RETAINED_VERSIONS + 2):
+        wh.write_rows("b", [(n,)], N)
+    again = Warehouse(None, root)
+    assert [again.read_rows(t, N)["n"].to_pylist() for t in "ab"] == [[1], [RETAINED_VERSIONS + 1]]
+    assert [len(glob.glob(os.path.join(root, t, "*.parquet"))) for t in "ab"] == [1, 1]
 
 
 def test_append_writes_one_file_and_keeps_the_old_version(spark, tmp_path):
