@@ -28,7 +28,9 @@ and the cleaning report and the inserted/updated counts are
 observations that fill during the write, so the write is a file's only
 Spark work. Per job, after every file: schema-error, data-quality and
 metadata rows (C5/C6), one driver-side append each (``Warehouse.write_rows``),
-then one commit. An ingest that skips every file runs no Spark job.
+then one commit. ``etl_metadata`` records the loaded and failed files,
+not the skipped ones, so an ingest that skips every file writes nothing:
+no Spark job and no commit.
 """
 
 from __future__ import annotations
@@ -246,6 +248,7 @@ def _append_metadata(wh, report: IngestReport, started_at, completed_at) -> None
             completed_at,
         )
         for t in report.tasks
+        if t.status != TaskStatus.SKIPPED
     ]
     _append_rows(wh, "etl_metadata", rows)
 

@@ -1,13 +1,11 @@
-"""Export sinks: per-table CSV/JSON/parquet, zip-of-CSVs, SQL dump
+"""Export sinks: single CSV, zip-of-CSVs, SQL dump, SQLite, Excel
 (SURVEY.md A8-A10; reference /root/reference/core/app.py:1882-2202,
 2283-2324).
 
-Distributed-first: every format Spark writes natively goes through
-``df.write`` (scales to any size); single-file convenience outputs
-(zip, sql dump, single CSV) collect through ``toLocalIterator`` with
-an explicit row cap — the reference's own Excel export caps at 100k
-rows (core/app.py:2062), and that cap generalizes here to every
-driver-materializing sink.
+Every sink is one local file, so each collects on the driver with an
+explicit row cap — the reference's own
+Excel export caps at 100k rows (core/app.py:2062), and that cap
+generalizes here to every sink.
 """
 
 from __future__ import annotations
@@ -20,19 +18,6 @@ import zipfile
 from pyspark.sql import DataFrame
 
 SINGLE_FILE_ROW_CAP = 100_000  # reference Excel cap, applied to all driver-side sinks
-
-
-def export_table(df: DataFrame, path: str, fmt: str = "csv") -> None:
-    """Distributed export — CSV/JSON/parquet directories."""
-    writer = df.write.mode("overwrite")
-    if fmt == "csv":
-        writer.option("header", True).csv(path)
-    elif fmt == "json":
-        writer.json(path)
-    elif fmt == "parquet":
-        writer.parquet(path)
-    else:
-        raise ValueError(f"unsupported format {fmt!r}")
 
 
 def _iter_capped(df: DataFrame, cap: int):

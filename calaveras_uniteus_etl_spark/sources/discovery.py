@@ -99,17 +99,11 @@ def file_md5(path: str, chunk_size: int = 4096) -> str:
 def discover_files(
     input_dir: str,
     selected_files: set[str] | None = None,
-    processed: set[tuple[str, str]] | None = None,
     mappings: dict[str, str] | None = None,
     patterns: tuple[str, ...] = FILE_PATTERNS,
 ) -> list[FileProcessingTask]:
-    """Build the ingest task list (reference etl_service.py:184-244).
-
-    ``processed`` is the set of ``(file_name, md5)`` pairs already
-    loaded (from the etl_metadata table) — matching tasks come back
-    SKIPPED rather than silently dropped, preserving the reference's
-    reporting shape.
-    """
+    """Build the ingest task list (reference etl_service.py:184-244),
+    every task PENDING; ``etl.ingest`` marks the loaded ones SKIPPED."""
     paths: list[str] = []
     for pattern in patterns:
         paths.extend(glob.glob(os.path.join(input_dir, pattern)))
@@ -118,17 +112,15 @@ def discover_files(
         name = os.path.basename(path)
         if selected_files is not None and name not in selected_files:
             continue
-        digest = file_md5(path)
-        task = FileProcessingTask(
-            path=path,
-            file_name=name,
-            table_name=extract_table_name(name, mappings),
-            file_date=extract_file_date(name, path),
-            file_hash=digest,
+        tasks.append(
+            FileProcessingTask(
+                path=path,
+                file_name=name,
+                table_name=extract_table_name(name, mappings),
+                file_date=extract_file_date(name, path),
+                file_hash=file_md5(path),
+            )
         )
-        if processed and (name, digest) in processed:
-            task.status = TaskStatus.SKIPPED
-        tasks.append(task)
     return tasks
 
 

@@ -11,7 +11,10 @@ loads, as under the reference's WAL mode. Writes in ``job()`` stage
 versions that its reads see and commit once at its end, or not at all;
 other writes commit at once. A commit keeps the versions the last
 RETAINED_VERSIONS + 1 commits name and those still staged (each holds a
-shared ``flock`` until its commit), and deletes the rest.
+shared ``flock`` until its commit), and deletes the rest. A version is
+flat, with no partition directories, and each of its data files stores
+its Spark schema in the footer. Before the first commit every table is
+absent; no layout from before commits is read or adopted.
 
 ``write`` fills a version by a Spark job (data tables); ``write_rows``
 writes driver-held rows (bookkeeping, sync config, SFTP listings) as one
@@ -51,27 +54,17 @@ _READ_MEMO: dict[tuple[str, str], DataFrame] = {}
 _READ_MEMO_LOCK = threading.Lock()
 
 
-def _listing(root: str) -> list[str]:
-    """Sorted relative path of every file under root."""
-    out = []
-    for d, _, names in os.walk(root):
-        for n in names:
-            out.append(os.path.join(d[len(root) + 1:], n))
-    return sorted(out)
+def _data_files(version: str) -> list[str]:
+    """Sorted names of the version's parquet data files."""
+    return sorted(n for n in os.listdir(version) if n.endswith(".parquet") and not n.startswith((".", "_")))
 
 
-def _footer_schema(version: str, files: list[str]) -> StructType | None:
-    """The Spark schema stored in the footer of the version's first data
-    file, the one Spark's own inference would read, without its one-task
-    job. None for a partitioned version (its partition columns come from
-    the paths) or a file that stores no Spark schema."""
-    if any(os.sep in rel for rel in files):
-        return None
-    data = [rel for rel in files if rel.endswith(".parquet") and not rel.startswith((".", "_"))]
-    if not data:
-        return None
-    stored = (pq.read_metadata(os.path.join(version, data[0])).metadata or {}).get(_SPARK_SCHEMA_KEY)
-    return None if stored is None else StructType.fromJson(json.loads(stored))
+def _footer_schema(path: str) -> StructType:
+    """The Spark schema stored in the footer of the data file ``path``, the
+    one Spark's own inference would read, without its one-task job. Every
+    version is flat and every write path stores the key: Spark's writer,
+    and ``write_rows`` by hand."""
+    return StructType.fromJson(json.loads(pq.read_metadata(path).metadata[_SPARK_SCHEMA_KEY]))
 
 
 def _links(commit: str) -> dict[str, str]:
@@ -113,13 +106,6 @@ class Warehouse:
         head = os.path.join(self.root, "_head")
         return os.path.realpath(head) if os.path.islink(head) else None
 
-    # column renames shipped after warehouses existed: old name -> new.
-    # read() aliases on the fly so pre-rename tables keep working; the
-    # next overwrite persists the new name.
-    _LEGACY_RENAMES = {
-        "assistance_requests": {"housing_status": "housing_current_status"},
-    }
-
     def read(self, table: str, at: str | None = None) -> DataFrame:
         """The table as commit ``at`` (default: the head) holds it."""
         version = self._version(table, at)
@@ -128,33 +114,23 @@ class Warehouse:
         hit = _READ_MEMO.get(key)
         if hit is not None:
             return hit
-        files = _listing(version) if version else []
+        files = _data_files(version) if version else []
         if not files:
             if table in TABLE_SCHEMAS:
                 # limit 0: the optimizer sees the frame is empty and prunes it
                 return self.spark.createDataFrame([], TABLE_SCHEMAS[table]).limit(0)
             raise FileNotFoundError(f"table {table!r} not found in warehouse")
-        reader = self.spark.read
-        schema = _footer_schema(version, files)
-        if schema is not None:
-            reader = reader.schema(schema)
-        df = reader.parquet(version)
-        for old, new in self._LEGACY_RENAMES.get(table, {}).items():
-            if old in df.columns and new not in df.columns:
-                df = df.withColumnRenamed(old, new)
+        df = self.spark.read.schema(_footer_schema(os.path.join(version, files[0]))).parquet(version)
         with _READ_MEMO_LOCK:
             for k in [k for k in _READ_MEMO if k[0] != app_id or not os.path.isdir(k[1])]:
                 del _READ_MEMO[k]
             _READ_MEMO[key] = df
         return df
 
-    def write(self, table: str, df: DataFrame, partition_by: list[str] | None = None) -> None:
+    def write(self, table: str, df: DataFrame) -> None:
         """Fill a new version with ``df`` by one Spark job and commit it; a
         plan that reads the table it replaces reads an untouched version."""
-        writer = df.write.mode("append")  # into the empty reserved directory
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        self._stage(table, writer.parquet)
+        self._stage(table, df.write.mode("append").parquet)  # into the empty reserved directory
 
     def write_rows(
         self, table: str, rows: list[tuple], schema: StructType, mode: str = "overwrite"
@@ -201,12 +177,13 @@ class Warehouse:
 
     def _version(self, table: str, at: str | None = None) -> str | None:
         """The directory ``table`` reads from: the version this job staged,
-        else the one commit ``at`` (default: the head) names; before the
-        first commit, a table directory from before commits."""
+        else the one commit ``at`` (default: the head) names; None before
+        the first commit."""
         if self._staged and table in self._staged:
             return self._staged[table]
-        path = os.path.join(at or self.head() or self.root, table)
-        return os.path.realpath(path) if os.path.isdir(path) else None
+        commit = at or self.head()
+        path = commit and os.path.join(commit, table)
+        return os.path.realpath(path) if path and os.path.isdir(path) else None
 
     @contextmanager
     def _locked(self):
@@ -242,7 +219,7 @@ class Warehouse:
         with self._locked():
             head = self.head()
             n = int(os.path.basename(head)[1:]) + 1 if head else 0
-            tables = {**self._live(head), **versions}
+            tables = {**(_links(head) if head else {}), **versions}
             commit = os.path.join(self.root, "_commits", f"c{n}")
             shutil.rmtree(commit, ignore_errors=True)  # left by a crash before its head replace
             os.makedirs(commit)
@@ -254,23 +231,6 @@ class Warehouse:
                 os.symlink(os.path.join("_head", table), os.path.join(commit, "." + table))
                 os.replace(os.path.join(commit, "." + table), os.path.join(self.root, table))
             self._prune(n)
-
-    def _live(self, head: str | None) -> dict[str, str]:
-        """Table -> version directory of every live table. A table from before
-        commits (a plain directory, or a link to its version) is adopted; a
-        plain one moves into ``_versions``, the one non-atomic step."""
-        live = _links(head) if head else {}
-        for table in os.listdir(self.root):
-            path = os.path.join(self.root, table)
-            if table in live or table.startswith(("_", ".")) or not os.path.isdir(path):
-                continue
-            if os.path.islink(path):
-                live[table] = os.path.normpath(os.path.join(self.root, os.readlink(path)))
-            else:
-                live[table] = os.path.join(self.root, "_versions", table, uuid.uuid4().hex)
-                os.makedirs(os.path.dirname(live[table]), exist_ok=True)
-                os.rename(path, live[table])
-        return live
 
     def _prune(self, n: int) -> None:
         """Delete the commits before the last RETAINED_VERSIONS + 1 up to

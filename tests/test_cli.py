@@ -191,25 +191,6 @@ def test_cli_timeline_unknown_table_is_clean_error(spark, warehouse, capsys):
         a.fn(spark, a)
 
 
-def test_warehouse_reads_legacy_housing_column(spark, tmp_path):
-    """Pre-rename warehouses stored housing_status; read() must alias
-    it to housing_current_status so handlers keep working, also when
-    the read hits the memo."""
-    from calaveras_uniteus_etl_spark.warehouse import Warehouse
-
-    wh = Warehouse(spark, str(tmp_path / "legacy_wh"))
-    old = spark.createDataFrame(
-        [("a1", "c1", "housed")],
-        "assistance_request_id string, case_id string, housing_status string",
-    )
-    old.write.parquet(wh.path("assistance_requests"))
-    got = wh.read("assistance_requests")
-    assert wh.read("assistance_requests") is got
-    assert "housing_current_status" in got.columns
-    assert "housing_status" not in got.columns
-    assert got.first()["housing_current_status"] == "housed"
-
-
 def test_cli_sync_schedule_with_fake_clock(spark, tmp_path, capsys):
     """The automated-sync twin (reference core/app.py:221-310 poller +
     1569-1648 config endpoints): configure writes the single-row

@@ -3,6 +3,7 @@
 
 from __future__ import annotations
 
+import hashlib
 import os
 
 from calaveras_uniteus_etl_spark.sources.discovery import (
@@ -41,11 +42,11 @@ def test_file_date_from_name_else_mtime(tmp_path):
 def test_md5_and_skip_processed(tmp_path):
     p = tmp_path / "people_20240101.txt"
     p.write_text("person_id|first_name\np1|John\n")
-    digest = file_md5(str(p))
-    tasks = discover_files(str(tmp_path), processed={("people_20240101.txt", digest)})
-    assert len(tasks) == 1 and tasks[0].status == TaskStatus.SKIPPED
-    tasks = discover_files(str(tmp_path), processed=set())
-    assert tasks[0].status == TaskStatus.PENDING
+    # discovery hashes every file and leaves the skip to etl.ingest
+    # (test_etl_pipeline::test_ingest_upsert_and_skip)
+    [task] = discover_files(str(tmp_path))
+    assert task.file_hash == file_md5(str(p)) == hashlib.md5(p.read_bytes()).hexdigest()
+    assert task.status == TaskStatus.PENDING
 
 
 def test_latest_only_keeps_newest_per_table(tmp_path):

@@ -468,6 +468,25 @@ def test_ingest_job_budget(tmp_path, spark, input_dir):
         assert 1 <= one_file <= 2, (name, one_file)
 
 
+def test_idle_ingests_make_no_commit(tmp_path, spark, input_dir):
+    """etl_metadata records loaded and failed files, not skipped ones: an
+    ingest that skips every file stages nothing, so repeated idle ticks
+    leave the head and the load log as they were."""
+    cfg = _cfg(tmp_path)
+    (input_dir / "people_20240101.txt").write_text(PEOPLE_V1)
+    (input_dir / "cases_20240101.txt").write_text(CASES_V1)
+    assert len(ingest(spark, cfg).completed) == 2
+    wh = Warehouse(spark, cfg.warehouse_dir)
+    head = wh.head()
+    meta = sorted(tuple(r) for r in wh.read("etl_metadata").collect())
+    assert len(meta) == 2
+    for _ in range(3):
+        report = ingest(spark, cfg)
+        assert len(report.skipped) == 2 and not report.completed
+        assert wh.head() == head
+    assert sorted(tuple(r) for r in wh.read("etl_metadata").collect()) == meta
+
+
 def test_bookkeeping_mixes_spark_and_pyarrow_files(tmp_path, spark, input_dir):
     """The upgrade path of every existing warehouse: a bookkeeping
     table's live version is a file Spark wrote (as earlier releases

@@ -1,12 +1,11 @@
-"""Tests for export sinks (A8-A10), job undo (C3), warehouse
-partitioned writes, and the ad-hoc SQL gate (D8)."""
+"""Tests for export sinks (A8-A10), job undo (C3) and the ad-hoc SQL
+gate (D8)."""
 
 from __future__ import annotations
 
 import csv
 import datetime as dt
 import json
-import os
 import zipfile
 
 import pytest
@@ -16,12 +15,10 @@ from pyspark.sql import functions as F
 from calaveras_uniteus_etl_spark.exports.writers import (
     export_single_csv,
     export_sql_dump,
-    export_table,
     export_zip,
 )
 from calaveras_uniteus_etl_spark.operators.adhoc import run_select_only
 from calaveras_uniteus_etl_spark.operators.upsert import undo_load
-from calaveras_uniteus_etl_spark.warehouse import Warehouse
 
 
 @pytest.fixture(scope="module")
@@ -30,17 +27,6 @@ def small_df(spark):
         [(1, "a", 1.5), (2, "b", 2.5), (3, None, 3.5)],
         "id long, name string, v double",
     )
-
-
-def test_export_table_formats(spark, small_df, tmp_path):
-    for fmt in ("csv", "json", "parquet"):
-        out = str(tmp_path / fmt)
-        export_table(small_df, out, fmt=fmt)
-        assert os.path.isdir(out)
-    back = spark.read.parquet(str(tmp_path / "parquet"))
-    assert back.count() == 3
-    with pytest.raises(ValueError):
-        export_table(small_df, str(tmp_path / "x"), fmt="xml")
 
 
 def test_export_single_csv_and_zip(spark, small_df, tmp_path):
@@ -140,21 +126,6 @@ def test_undo_load_window_and_nulls(spark):
         df, "etl_loaded_at", t0, t0 + dt.timedelta(hours=1)
     )
     assert {r["id"] for r in out.collect()} == {1, 4, 5}
-
-
-def test_warehouse_partitioned_write_prunes(spark, tmp_path):
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    df = spark.createDataFrame(
-        [(i, f"2024-0{1 + i % 2}", float(i)) for i in range(10)],
-        "id long, month string, v double",
-    )
-    wh.write("events", df, partition_by=["month"])
-    # physical layout is hive-partitioned → partition filter prunes dirs
-    assert os.path.isdir(os.path.join(wh.path("events"), "month=2024-01"))
-    back = wh.read("events").filter(F.col("month") == "2024-02")
-    assert back.count() == 5
-    plan = back._jdf.queryExecution().toString()
-    assert "month=2024-02" in plan or "PartitionFilters" in plan
 
 
 def test_adhoc_gate(spark, small_df):

@@ -243,36 +243,6 @@ def test_h24_shipdate_range_reaches_scan(spark):
     assert any("l_shipdate" in ln and "GreaterThanOrEqual" in ln for ln in pushed), pushed
 
 
-def test_partitioned_fact_join_uses_dynamic_partition_pruning(spark, tmp_path):
-    """At 100 TB the events table is date-partitioned and most joins
-    carry a dimension-side filter; Spark must prune fact PARTITIONS at
-    runtime from the filtered dimension (DPP), not scan all of them.
-    This writes a partitioned fact through the warehouse path and
-    asserts the scan's PartitionFilters contains a dynamicpruning
-    expression fed by the dimension filter."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from calaveras_uniteus_etl_spark.warehouse import Warehouse
-
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    fact = spark.range(0, 50_000).select(
-        "id", (F.col("id") % 30).alias("day"), (F.col("id") % 5).alias("k")
-    )
-    wh.write("fact_by_day", fact, partition_by=["day"])
-    dim = spark.range(0, 30).select(
-        F.col("id").alias("day"), (F.col("id") % 7).alias("grp")
-    )
-    dim.write.parquet(os.path.join(str(tmp_path), "dim"))
-
-    f = wh.read("fact_by_day")
-    d = spark.read.parquet(os.path.join(str(tmp_path), "dim")).filter("grp = 3")
-    plan = physical(f.join(d, "day").groupBy("grp").count())
-    scan_lines = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
-    assert any("dynamicpruning" in ln.lower() for ln in scan_lines), plan
-
-
 @pytest.mark.parametrize(
     "name",
     [

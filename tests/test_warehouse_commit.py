@@ -170,25 +170,6 @@ def test_append_writes_one_file_and_keeps_the_old_version(spark, tmp_path):
     assert only.endswith(".parquet")
 
 
-def test_first_write_adopts_a_plain_table_directory(spark, tmp_path):
-    """A table written before versions existed is a plain directory:
-    it reads as it is, and the first write adopts it as a version. So is
-    a table of the per-table link layout, a link straight to its version;
-    tables the write does not touch keep their rows."""
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    _gen(spark, 0).write.parquet(wh.path("t"))
-    _gen(spark, 5).write.parquet(wh.path("u"))
-    _gen(spark, 6).write.parquet(os.path.join(wh.root, "_versions", "w", "v00000000"))
-    os.symlink(os.path.join("_versions", "w", "v00000000"), wh.path("w"))
-    assert _rows(wh.read("t")) == [(0, 0), (1, 0), (2, 0)]
-    assert _rows(wh.read("w")) == _rows(_gen(spark, 6))
-    wh.write("t", wh.read("t").union(spark.range(10, 11).select("id", F.lit(1).alias("v"))))
-    assert [os.readlink(wh.path(t)) for t in "tuw"] == [os.path.join("_head", t) for t in "tuw"]
-    assert _rows(wh.read("t")) == [(0, 0), (1, 0), (2, 0), (10, 1)]
-    assert _rows(wh.read("u")) == _rows(_gen(spark, 5))
-    assert _rows(wh.read("w")) == _rows(_gen(spark, 6))
-
-
 def test_two_warehouses_commit_different_tables_at_once(tmp_path):
     """Two writers, each with its own Warehouse as two processes would
     have, commit a different table at the same moment, round after

@@ -14,9 +14,6 @@ import textwrap
 import threading
 import uuid
 
-import pyarrow as pa
-import pyarrow.parquet as pq
-
 from calaveras_uniteus_etl_spark import warehouse as W
 from calaveras_uniteus_etl_spark.schema import TABLE_SCHEMAS
 from calaveras_uniteus_etl_spark.warehouse import RETAINED_VERSIONS, Warehouse
@@ -37,7 +34,7 @@ def test_repeat_read_hits_and_writes_miss(spark, tmp_path, monkeypatch):
     wh.write("t", spark.range(3))
     first = wh.read("t")
     with monkeypatch.context() as m:
-        m.setattr(W, "_listing", None)  # a hit lists no file
+        m.setattr(W, "_data_files", None)  # a hit lists no file
         # a new Warehouse over the same root (one per CLI request) hits too
         assert wh.read("t") is first and Warehouse(spark, str(tmp_path)).read("t") is first
     assert _ids(first) == [0, 1, 2]
@@ -65,35 +62,21 @@ def _jobs(spark, fn):
 
 
 def test_miss_takes_the_footer_schema_without_a_job(spark, tmp_path):
-    """A miss on a table Spark wrote, or one the row writer wrote, plans
-    with the schema Spark's inference would give, and runs no job; a
-    file that stores no Spark schema still infers (one job)."""
+    """A miss on a version Spark wrote, one Spark wrote from an empty
+    frame, or one the row writer wrote, plans with the schema Spark's
+    inference would give, and runs no job."""
     wh = Warehouse(spark, str(tmp_path))
+    wh.write("t", spark.range(3))
     wh.write("cases", spark.createDataFrame([], TABLE_SCHEMAS["cases"]))
     wh.write_rows("etl_metadata", [("f", "t", "20240101", "h", 1, 1, 0, "completed", None, "manual", None, None)],
                   TABLE_SCHEMAS["etl_metadata"])
-    for table in ("cases", "etl_metadata"):
+    for table in ("t", "cases", "etl_metadata"):
         df, jobs = _jobs(spark, lambda: wh.read(table))
         assert jobs == 0, table
         assert df.schema == spark.read.parquet(os.path.realpath(wh.path(table))).schema
-        assert [f.dataType for f in df.schema] == [f.dataType for f in TABLE_SCHEMAS[table]]
-    legacy = Warehouse(spark, str(tmp_path / "legacy"))
-    os.makedirs(legacy.path("plain"))  # a table directory from before commits
-    pq.write_table(pa.table({"id": [2]}), os.path.join(legacy.path("plain"), "part-0.parquet"))
-    df, jobs = _jobs(spark, lambda: legacy.read("plain"))
-    assert jobs == 1 and _ids(df) == [2]
-
-
-def test_read_sees_append_into_one_partition(spark, tmp_path):
-    wh = Warehouse(spark, str(tmp_path))
-    base = spark.range(4).selectExpr("id", "if(id % 2 = 0, 'a', 'b') AS p")
-    wh.write("t", base, partition_by=["p"])
-    assert _ids(wh.read("t")) == [0, 1, 2, 3]
-    more = spark.range(10, 11).selectExpr("id", "'a' AS p")
-    wh.write("t", wh.read("t").union(more), partition_by=["p"])
-    got = wh.read("t")
-    assert _ids(got) == [0, 1, 2, 3, 10]
-    assert {r["p"] for r in got.filter("id = 10").collect()} == {"a"}
+    for table in ("cases", "etl_metadata"):
+        assert [f.dataType for f in wh.read(table).schema] == [f.dataType for f in TABLE_SCHEMAS[table]]
+    assert _ids(wh.read("t")) == [0, 1, 2]
 
 
 def test_restarted_session_never_reuses_an_entry(tmp_path):

@@ -73,20 +73,6 @@ def test_retention_zero_keeps_delete_behavior(spark, tmp_path):
     assert len(_commits(root)) == RETAINED_VERSIONS + 1
 
 
-def test_partitioned_table_versions_read_back(spark, tmp_path):
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    pinned = []
-    for gen in range(2):
-        df = spark.range(6).select(
-            "id", (F.col("id") % 3).alias("day"), F.lit(gen).alias("v")
-        )
-        wh.write("t", df, partition_by=["day"])
-        pinned.append(wh.head())
-    v0 = wh.read("t", at=pinned[0])
-    assert {r.v for r in v0.collect()} == {0}
-    assert set(v0.columns) == {"id", "day", "v"}  # partition col survives
-
-
 def test_merge_schema_reads_evolving_parquet(spark, tmp_path):
     """Schema evolution at the storage layer: a column added in a
     later load must surface as NULL for old files under mergeSchema —
