@@ -3,9 +3,8 @@
 2283-2324).
 
 Every sink is one local file, so each collects on the driver with an
-explicit row cap — the reference's own
-Excel export caps at 100k rows (core/app.py:2062), and that cap
-generalizes here to every sink.
+explicit row cap — the reference's own Excel export caps at 100k rows
+(core/app.py:2062), and that cap generalizes here to every sink.
 """
 
 from __future__ import annotations
