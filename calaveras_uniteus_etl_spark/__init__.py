@@ -12,9 +12,9 @@ ETL + SQL-analytics platform) on Apache Spark:
   plans plus Spark SQL (``plans/``, ``reports/``)
 - extensions: large-scale training-data pipeline operators — dedup
   (exact / MinHash-LSH / SimHash / n-gram Jaccard), embedding
-  similarity search, text statistics, multimodal column plumbing
-  (``operators/dedup``, ``operators/similarity``, ``operators/textstats``,
-  ``operators/multimodal``)
+  similarity search, multimodal column plumbing (``operators/dedup``,
+  ``operators/similarity``, ``operators/multimodal``); text statistics
+  are registry queries (``plans/queries_text``)
 
 Everything is expressed through the DataFrame API / Spark SQL so that
 Catalyst + AQE choose physical plans; no RDDs, and Python UDFs only

@@ -19,7 +19,7 @@ The Spark re-expression of the reference's ETL job lifecycle
 
 Per-file pipeline: read (A1) → schema-validate (§1.4, critical → FAIL
 the file) → clean B1-B4 → one projection onto the declared row (cast,
-PHI hash, audit stamp; rows missing a required field dropped) → merge
+PHI hash, audit stamp; rows without a primary key dropped) → merge
 by primary key, the first load included (C2). Only the declared data
 tables load, each with its primary key; a file naming a bookkeeping
 table such as ``etl_metadata`` fails validation, so no delivery writes
@@ -44,10 +44,10 @@ from pyspark.sql import Observation, SparkSession
 from pyspark.sql.types import StructType
 from pyspark.util import inheritable_thread_target
 
-from calaveras_uniteus_etl_spark.config import ETLConfig, PRIMARY_KEYS
+from calaveras_uniteus_etl_spark.config import ETLConfig
 from calaveras_uniteus_etl_spark.operators.cleaning import clean, project_declared
 from calaveras_uniteus_etl_spark.operators.upsert import merge_upsert, upsert_stats
-from calaveras_uniteus_etl_spark.schema import TABLE_SCHEMAS
+from calaveras_uniteus_etl_spark.schema import PRIMARY_KEYS, TABLE_SCHEMAS
 from calaveras_uniteus_etl_spark.sources.delimited import read_delimited
 from calaveras_uniteus_etl_spark.sources.discovery import (
     FileProcessingTask,

@@ -21,9 +21,9 @@ from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
-from calaveras_uniteus_etl_spark.config import PHIConfig, PRIMARY_KEYS, REQUIRED_FIELDS
+from calaveras_uniteus_etl_spark.config import PHIConfig
 from calaveras_uniteus_etl_spark.functions.hashing import salted_sha256
-from calaveras_uniteus_etl_spark.schema import AUDIT_COLUMNS, TABLE_SCHEMAS
+from calaveras_uniteus_etl_spark.schema import AUDIT_COLUMNS, PHI_COLUMNS, PRIMARY_KEYS, TABLE_SCHEMAS
 
 # Mojibake repairs (core/etl_service.py:704-718): UTF-8 read as cp1252.
 MOJIBAKE_MAP = (
@@ -115,14 +115,15 @@ def project_declared(
 
     Each declared column is try_cast from the file's string (an
     unparseable value becomes NULL rather than SQLite's 0), then
-    PHI-hashed when ``phi`` lists it; a declared column the file lacks
-    is NULL, and the audit pair is stamped with ``loaded_at`` (now when
-    None). An order column (``_line_no``) passes through. Rows missing
-    a required field are dropped; schema validation has already failed
-    a file that lacks a required column.
+    hashed when the table declares it PHI and ``phi`` is enabled; a
+    declared column the file lacks is NULL, and the audit pair is
+    stamped with ``loaded_at`` (now when None). An order column
+    (``_line_no``) passes through. Rows without a primary key are
+    dropped; schema validation has already failed a file that lacks a
+    key column.
     """
     present = set(df.columns)
-    hashed = set(phi.fields.get(table, ())) if phi.enabled else set()
+    hashed = set(PHI_COLUMNS[table]) if phi.enabled else set()
     stamp = F.lit(loaded_at).cast("timestamp") if loaded_at else F.current_timestamp()
     audit = {name for name, _ in AUDIT_COLUMNS}
     cols = []
@@ -136,8 +137,7 @@ def project_declared(
             if f.name in hashed:
                 c = salted_sha256(c, phi.salt)
         cols.append(c.alias(f.name))
-    required = REQUIRED_FIELDS.get(table, PRIMARY_KEYS[table])
-    df = df.filter(reduce(operator.and_, [F.col(c).isNotNull() for c in required]))
+    df = df.filter(reduce(operator.and_, [F.col(c).isNotNull() for c in PRIMARY_KEYS[table]]))
     return df.select(*cols, *[c for c in df.columns if c == "_line_no"])
 
 

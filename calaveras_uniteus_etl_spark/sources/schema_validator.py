@@ -3,13 +3,13 @@
 
 Compares a file's header columns against the declared table schema:
 
-- a table that is not one of the declared data tables
-  (``EXPECTED_TABLES``, each with a primary key) → critical
-  ``missing_table`` (with a suggested StructType snippet, the
-  DDL-generation analog); the bookkeeping tables ``etl_metadata``,
-  ``data_quality_issues``, ``schema_errors`` and ``sftp_cache`` are
-  declared but never loaded from a file
-- expected column absent from the file → critical
+- a table that is not one of the declared data tables (the ones with a
+  primary key) → critical ``missing_table`` (with a suggested column
+  list, the DDL-generation analog); the bookkeeping tables
+  ``etl_metadata``, ``data_quality_issues``, ``schema_errors``,
+  ``sftp_cache`` and ``automated_sync_config`` are declared but never
+  loaded from a file
+- a key or ``REQ`` column absent from the file → critical
   ``missing_required_column`` (reference core/config.py:325-334)
 - file column absent from the declared schema → critical
   ``missing_column`` (suggested type inferred from name heuristics)
@@ -23,8 +23,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from calaveras_uniteus_etl_spark.config import EXPECTED_TABLES
-from calaveras_uniteus_etl_spark.schema import TABLE_SCHEMAS
+from calaveras_uniteus_etl_spark.schema import REQUIRED_COLUMNS, TABLE_SCHEMAS
 
 # column-name → type heuristics (reference schema_validator.py:285-292)
 _NAME_TYPE_HINTS = (
@@ -69,7 +68,7 @@ class ValidationResult:
 
 def validate_schema(table_name: str, file_columns: list[str]) -> ValidationResult:
     issues: list[SchemaIssue] = []
-    expected = EXPECTED_TABLES.get(table_name)
+    expected = REQUIRED_COLUMNS.get(table_name)
     if expected is None:
         fields = ", ".join(
             f'("{c}", {infer_type_from_name(c)})' for c in file_columns
@@ -82,7 +81,7 @@ def validate_schema(table_name: str, file_columns: list[str]) -> ValidationResul
                 column_name=None,
                 suggestion=(
                     f"{table_name} is not a data table; to load it, declare its "
-                    f"StructType, primary key and expected columns: [{fields}]"
+                    f"columns in schema.py and flag its key KEY: [{fields}]"
                 ),
             )
         )

@@ -26,30 +26,12 @@ from datetime import datetime, timedelta
 
 import pyarrow.dataset as ds
 from pyspark.sql import SparkSession
-from pyspark.sql.types import (
-    BooleanType,
-    IntegerType,
-    StringType,
-    StructField,
-    StructType,
-)
 
 from calaveras_uniteus_etl_spark.config import ETLConfig
+from calaveras_uniteus_etl_spark.schema import TABLE_SCHEMAS
 from calaveras_uniteus_etl_spark.warehouse import Warehouse
 
 SYNC_TABLE = "automated_sync_config"
-
-SYNC_SCHEMA = StructType(
-    [
-        StructField("id", IntegerType()),
-        StructField("enabled", BooleanType()),
-        StructField("interval_minutes", IntegerType()),
-        StructField("last_run", StringType()),
-        StructField("next_run", StringType()),
-        StructField("updated_at", StringType()),
-        StructField("updated_by", StringType()),
-    ]
-)
 
 
 @dataclass(frozen=True)
@@ -66,7 +48,7 @@ class SyncConfig:
 
 
 def load_config(wh: Warehouse) -> SyncConfig:
-    rows = wh.read_rows(SYNC_TABLE, SYNC_SCHEMA, ds.field("id") == 1).to_pylist()
+    rows = wh.read_rows(SYNC_TABLE, TABLE_SCHEMAS[SYNC_TABLE], ds.field("id") == 1).to_pylist()
     if not rows:
         return SyncConfig()
     r = rows[0]
@@ -90,7 +72,7 @@ def _persist(wh: Warehouse, cfg: SyncConfig) -> None:
         cfg.updated_at,
         cfg.updated_by,
     )
-    wh.write_rows(SYNC_TABLE, [row], SYNC_SCHEMA)
+    wh.write_rows(SYNC_TABLE, [row], TABLE_SCHEMAS[SYNC_TABLE])
 
 
 def save_config(

@@ -289,3 +289,12 @@ def test_cli_sync_schedule_with_fake_clock(spark, tmp_path, capsys):
         wh, enabled=False, interval_minutes=30, now=late, username="op"
     )
     assert load_config(wh).next_run is None
+
+    # the config row is a declared table, so `query` reads it as a view
+    rc, out = _run(
+        spark,
+        ["query", "--warehouse", wh_dir, "--sql",
+         "SELECT enabled, interval_minutes FROM automated_sync_config"],
+        capsys,
+    )
+    assert rc == 0 and out["rows"] == [[False, 30]]

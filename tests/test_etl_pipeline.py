@@ -12,16 +12,10 @@ import uuid
 import pytest
 from pyspark.sql import functions as F
 
-from calaveras_uniteus_etl_spark.config import (
-    EXPECTED_TABLES,
-    PRIMARY_KEYS,
-    REQUIRED_FIELDS,
-    ETLConfig,
-    PHIConfig,
-)
+from calaveras_uniteus_etl_spark.config import ETLConfig, PHIConfig
 from calaveras_uniteus_etl_spark.etl import ingest
 from calaveras_uniteus_etl_spark.functions.hashing import salted_sha256
-from calaveras_uniteus_etl_spark.schema import TABLE_SCHEMAS
+from calaveras_uniteus_etl_spark.schema import PHI_COLUMNS, PRIMARY_KEYS, REQUIRED_COLUMNS, TABLE_SCHEMAS
 from calaveras_uniteus_etl_spark.sources.delimited import detect_encoding, read_delimited
 from calaveras_uniteus_etl_spark.sources.discovery import TaskStatus
 from calaveras_uniteus_etl_spark.warehouse import Warehouse
@@ -329,13 +323,15 @@ def test_file_without_key_column_fails(tmp_path, spark, input_dir):
 
 def test_every_data_table_is_declared_and_keyed():
     """Every loadable table has a declared schema and a primary key that
-    its expected columns cover, so a file that passes validation always
-    carries the columns its merge keys on and its rows are filtered by."""
-    assert set(PRIMARY_KEYS) == set(EXPECTED_TABLES)
-    for table, expected in EXPECTED_TABLES.items():
-        assert table in TABLE_SCHEMAS, table
-        assert PRIMARY_KEYS[table] and set(PRIMARY_KEYS[table]) <= set(expected), table
-        assert set(REQUIRED_FIELDS.get(table, ())) <= set(expected), table
+    its required columns cover, so a file that passes validation always
+    carries the columns its merge keys on and its rows are filtered by;
+    its key, required and PHI columns are all declared columns."""
+    assert set(REQUIRED_COLUMNS) == set(PHI_COLUMNS) == set(PRIMARY_KEYS)
+    assert set(PRIMARY_KEYS) < set(TABLE_SCHEMAS)
+    for table, key in PRIMARY_KEYS.items():
+        declared = set(TABLE_SCHEMAS[table].names)
+        assert key and set(key) <= set(REQUIRED_COLUMNS[table]) <= declared, table
+        assert set(PHI_COLUMNS[table]) <= declared, table
 
 
 def test_required_field_rows_dropped(tmp_path, spark, input_dir):

@@ -1,5 +1,5 @@
-"""Every engine module has a caller, and so does every public function
-of the product path.
+"""Every engine module has a caller, every public function of the
+product path has a caller and every public constant of it a reader.
 
 Walks, with ``ast``, the imports reachable from the product's entry
 points (the CLI, the ETL job, the sync ticks, the query registry under
@@ -11,7 +11,9 @@ function, or public method of a top-level class, of a module that the
 CLI, the ETL job or the sync ticks reach fails it too when no non-test
 file names it (the engine, its own module included, ``__spark_entry__.py``,
 ``perfbench/`` or ``tools/``), unless ``AWAITING_CALLER`` names it with
-its reason.
+its reason. So does a public module-level name such a module binds by
+assignment, a constant, that no non-test file reads, unless
+``AWAITING_READER`` names it.
 """
 
 from __future__ import annotations
@@ -44,6 +46,9 @@ AWAITING_CALLER = {
     f"{PKG}.reports.formatters.labels_datasets": "SURVEY.md §3.2 step 4, pivot to {labels, datasets}",
     f"{PKG}.reports.formatters.sankey": "SURVEY.md §3.2 step 4, Sankey node/link indexing",
 }
+
+# Public constants of the product path that no non-test file reads.
+AWAITING_READER: dict[str, str] = {}
 
 
 def _module_files() -> dict[str, Path]:
@@ -110,10 +115,11 @@ def test_awaiting_cli_list_names_only_unreached_modules():
 
 
 def _names(path: Path) -> set[str]:
-    """Every identifier, attribute and string constant ``path`` names."""
+    """Every identifier, attribute and string constant ``path`` names,
+    except the names it only assigns."""
     found = set()
     for node in ast.walk(ast.parse(path.read_text())):
-        if isinstance(node, ast.Name):
+        if isinstance(node, ast.Name) and not isinstance(node.ctx, ast.Store):
             found.add(node.id)
         elif isinstance(node, ast.Attribute):
             found.add(node.attr)
@@ -133,15 +139,36 @@ def _public_functions(path: Path) -> set[str]:
     return {d.name for d in defs if not d.name.startswith("_")}
 
 
-def test_every_public_etl_and_warehouse_function_has_a_caller():
+def _public_constants(path: Path) -> set[str]:
+    """Public names that top-level assignments of ``path`` bind."""
+    tree = ast.parse(path.read_text())
+    targets = [t for n in tree.body if isinstance(n, ast.Assign) for t in n.targets]
+    targets += [n.target for n in tree.body if isinstance(n, ast.AnnAssign)]
+    names = {n.id for t in targets for n in ast.walk(t) if isinstance(n, ast.Name)}
+    return {n for n in names if not n.startswith("_")}
+
+
+def _unnamed(public) -> set[str]:
+    """``module.name`` for each name ``public(path)`` lists of a product-path
+    module that no non-test file names."""
     sources = [*(REPO / PKG).rglob("*.py"), REPO / "__spark_entry__.py", *(REPO / "tools").rglob("*.py")]
     sources += [p for p in (REPO / "perfbench").rglob("*.py") if "tests" not in p.relative_to(REPO).parts]
     named = set().union(*(_names(p) for p in sources))
     modules = _module_files()
-    uncalled = {
+    return {
         f"{module}.{name}"
         for module in _reachable(modules, PRODUCT)
-        for name in _public_functions(modules[module]) - named
+        for name in public(modules[module]) - named
     }
+
+
+def test_every_public_etl_and_warehouse_function_has_a_caller():
+    uncalled = _unnamed(_public_functions)
     # an entry leaves the keep-map once something calls it
     assert uncalled == set(AWAITING_CALLER), f"public functions without a caller: {sorted(uncalled)}"
+
+
+def test_every_public_constant_has_a_reader():
+    unread = _unnamed(_public_constants)
+    # an entry leaves the keep-map once something reads it
+    assert unread == set(AWAITING_READER), f"public constants without a reader: {sorted(unread)}"
