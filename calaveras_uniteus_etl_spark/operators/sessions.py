@@ -1,7 +1,6 @@
 """Batch sessionization: gap-split session numbering as a window op.
 
-The batch twin of the streaming sessionizer (streaming/sessionize.py):
-per-entity event streams split into sessions wherever the inter-event
+Per-entity event streams split into sessions wherever the inter-event
 gap exceeds a threshold. Expressed as the classic two-window
 composition — LAG flags session starts, a running SUM over the same
 (entity, time, tiebreak) order numbers them — so the whole assignment

@@ -5,12 +5,11 @@ the driver's north-star extensions expressed so the SAME logical plans
 serve both execution modes:
 
 - ``s1_tumbling_window`` uses ``F.window`` — the exact operator a
-  ``readStream`` + watermark pipeline runs (streaming/windows.py wires
-  it); in batch it is an ordinary hash aggregate on the bucketed key.
-- ``s2_sessionization`` is the gap-and-island form of the stateful
-  session operator (streaming/sessionize.py holds the
-  ``applyInPandasWithState`` twin); in batch it is two window functions
-  and an aggregate.
+  ``readStream`` + watermark pipeline runs; in batch it is an ordinary
+  hash aggregate on the bucketed key.
+- ``s2_sessionization`` is the gap-and-island form of a stateful
+  session operator; in batch it is two window functions and an
+  aggregate.
 
 Scale notes: the window aggregate shuffles once on (window, type) —
 partial aggregation happens map-side; sessionization shuffles once on
@@ -382,9 +381,7 @@ def s6_windowed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 #
 # Per-user exponentially weighted moving average of purchase value at
 # the user's LATEST purchase, truncated to the trailing 8 events —
-# the metric a streaming anomaly/drift monitor keeps per key. The
-# streaming twin (streaming/ewma.py) maintains the same trailing
-# window in applyInPandasWithState state; parity is pytest-checked.
+# the metric a streaming anomaly/drift monitor keeps per key.
 #
 # Determinism: a float EWMA recursion is reduction-order-poison, so
 # the weights are dyadic (alpha = 1/2, truncated at depth 8 with the

@@ -1,55 +1,15 @@
-"""Watermarked window aggregates over an event stream.
+"""Event-time interval join over an event stream.
 
-The streaming twin of ``plans/queries_streaming.s1_tumbling_window``:
-the grouped plan is IDENTICAL (``F.window`` bucketing + hash
-aggregate); streaming only adds the watermark, which bounds state by
-telling Spark when a window can no longer receive late rows and may be
-finalized/evicted.
-
-Scale notes: state per key is one aggregate row; watermark delay is the
-late-data SLA — at 100 TB of events the knobs that matter are
-shuffle partitions for the (window, key) exchange and the state-store
-backend (RocksDB for large key spaces), both session-level configs, not
-plan changes.
+The registry plans s4, s5 and s8 (plans/queries_streaming.py) and f40
+(plans/queries_lifecycle.py) run ``interval_join`` on batch frames; the
+same plan runs on streams, where watermarks on both sides bound the
+join state.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def windowed_agg(
-    events: DataFrame,
-    window: str = "6 hours",
-    watermark: str = "1 hour",
-    ts_col: str = "ts",
-    key_col: str = "event_type",
-) -> DataFrame:
-    """Tumbling-window count + sum; works on batch and stream alike.
-
-    On a streaming DataFrame the watermark enables append-mode output
-    (a window emits once it is final); on a batch DataFrame the
-    watermark is a no-op and the result equals s1_tumbling_window.
-    """
-    src = events
-    if events.isStreaming:
-        src = events.withWatermark(ts_col, watermark)
-    return (
-        src.groupBy(F.window(ts_col, window).alias("win"), key_col)
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,6)"))
-            .cast("decimal(38,6)")
-            .alias("sum_value"),
-        )
-        .select(
-            F.col("win.start").alias("window_start"),
-            key_col,
-            "n_events",
-            "sum_value",
-        )
-    )
 
 
 def interval_join(
@@ -80,8 +40,6 @@ def interval_join(
     late — the same total rows as the batch twin, proven across
     triggers in tests/test_streaming.py.
     """
-    from pyspark.sql import functions as F
-
     l, r = left, right
     if l.isStreaming:
         l = l.withWatermark(left_ts, watermark)

@@ -1,5 +1,5 @@
-"""Every engine module has a caller, every public function of the
-product path has a caller and every public constant of it a reader.
+"""Every engine module has a caller, and outside ``plans/`` every
+public function of one has a caller and every public constant a reader.
 
 Walks, with ``ast``, the imports reachable from the product's entry
 points (the CLI, the ETL job, the sync ticks, the query registry under
@@ -7,13 +7,15 @@ points (the CLI, the ETL job, the sync ticks, the query registry under
 module outside ``plans/`` that none of them reaches is dead code and
 fails this test, unless it is named in ``AWAITING_CLI`` with the
 SURVEY.md row of the reference feature it ports. A public top-level
-function, or public method of a top-level class, of a module that the
-CLI, the ETL job or the sync ticks reach fails it too when no non-test
-file names it (the engine, its own module included, ``__spark_entry__.py``,
-``perfbench/`` or ``tools/``), unless ``AWAITING_CALLER`` names it with
-its reason. So does a public module-level name such a module binds by
-assignment, a constant, that no non-test file reads, unless
-``AWAITING_READER`` names it.
+function, or public method of a top-level class, of an engine module
+outside ``plans/`` that an entry point reaches fails it too when no
+non-test file names it (the engine, its own module included,
+``__spark_entry__.py``, ``perfbench/`` or ``tools/``), unless
+``AWAITING_CALLER`` names it with its reason. So does a public
+module-level name such a module binds by assignment, a constant, that no
+non-test file reads, unless ``AWAITING_READER`` names it. A package
+``__init__`` that imports a name only re-exports it, so that import is
+not a caller.
 """
 
 from __future__ import annotations
@@ -24,11 +26,9 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent.parent
 PKG = "calaveras_uniteus_etl_spark"
 
-# the product path, whose every public function needs a caller
-PRODUCT = (f"{PKG}.cli", f"{PKG}.etl", f"{PKG}.sync")
 # the entry points (``__main__`` is ``python -m``'s door to the CLI);
 # every module under plans/ is one too
-ROOTS = ("__spark_entry__", f"{PKG}.__main__", *PRODUCT)
+ROOTS = ("__spark_entry__", f"{PKG}.__main__", f"{PKG}.cli", f"{PKG}.etl", f"{PKG}.sync")
 
 # Reference-parity modules that no CLI command exposes yet.
 AWAITING_CLI = {
@@ -38,16 +38,18 @@ AWAITING_CLI = {
     f"{PKG}.reports.document": "SURVEY.md A12, Word/PDF report sink",
 }
 
-# Public functions of the product path that no non-test file calls.
+# Public functions of reached engine modules that no non-test file calls.
 AWAITING_CALLER = {
     f"{PKG}.functions.hashing.duckdb_md5_long_seeded_sql": "the DuckDB twin tests compare md5_long_seeded against",
+    f"{PKG}.operators.multimodal.resize_plan": "Arrow kernels that tests/test_r12_optimizations.py compares the x39/x40 registry plans against",
+    f"{PKG}.operators.multimodal.sample_frames": "Arrow kernels that tests/test_r12_optimizations.py compares the x39/x40 registry plans against",
     f"{PKG}.sources.delimited.detect_encoding": "the encoding probe tests compare read_delimited's charset against",
     f"{PKG}.operators.upsert.undo_load": "SURVEY.md C3, ETL job undo",
     f"{PKG}.reports.formatters.labels_datasets": "SURVEY.md §3.2 step 4, pivot to {labels, datasets}",
     f"{PKG}.reports.formatters.sankey": "SURVEY.md §3.2 step 4, Sankey node/link indexing",
 }
 
-# Public constants of the product path that no non-test file reads.
+# Public constants of reached engine modules that no non-test file reads.
 AWAITING_READER: dict[str, str] = {}
 
 
@@ -81,10 +83,10 @@ def _imports(path: Path) -> set[str]:
     return found
 
 
-def _reachable(modules: dict[str, Path], roots=None) -> set[str]:
-    """Every module reachable from ``roots`` (default: the entry points)."""
+def _reachable(modules: dict[str, Path]) -> set[str]:
+    """Every module reachable from the entry points."""
     files = {**modules, "__spark_entry__": REPO / "__spark_entry__.py"}
-    todo = list(roots or (*ROOTS, *(n for n in modules if n.startswith(f"{PKG}.plans"))))
+    todo = [*ROOTS, *(n for n in modules if n.startswith(f"{PKG}.plans"))]
     seen = set()
     while todo:
         name = todo.pop()
@@ -116,14 +118,15 @@ def test_awaiting_cli_list_names_only_unreached_modules():
 
 def _names(path: Path) -> set[str]:
     """Every identifier, attribute and string constant ``path`` names,
-    except the names it only assigns."""
+    except the names it only assigns and, in a package ``__init__``,
+    the names it only re-exports."""
     found = set()
     for node in ast.walk(ast.parse(path.read_text())):
         if isinstance(node, ast.Name) and not isinstance(node.ctx, ast.Store):
             found.add(node.id)
         elif isinstance(node, ast.Attribute):
             found.add(node.attr)
-        elif isinstance(node, ast.alias):
+        elif isinstance(node, ast.alias) and path.name != "__init__.py":
             found.add(node.name.rsplit(".", 1)[-1])
         elif isinstance(node, ast.Constant) and isinstance(node.value, str):
             found.add(node.value)
@@ -149,15 +152,16 @@ def _public_constants(path: Path) -> set[str]:
 
 
 def _unnamed(public) -> set[str]:
-    """``module.name`` for each name ``public(path)`` lists of a product-path
-    module that no non-test file names."""
+    """``module.name`` for each name ``public(path)`` lists of a reached
+    engine module outside ``plans/`` that no non-test file names."""
     sources = [*(REPO / PKG).rglob("*.py"), REPO / "__spark_entry__.py", *(REPO / "tools").rglob("*.py")]
     sources += [p for p in (REPO / "perfbench").rglob("*.py") if "tests" not in p.relative_to(REPO).parts]
     named = set().union(*(_names(p) for p in sources))
     modules = _module_files()
     return {
         f"{module}.{name}"
-        for module in _reachable(modules, PRODUCT)
+        for module in _reachable(modules) & modules.keys()
+        if not module.startswith(f"{PKG}.plans")
         for name in public(modules[module]) - named
     }
 

@@ -1,11 +1,10 @@
 """Structured Streaming surface tests.
 
 Covers: exactly-once file ingest through the one batch load path
-(``etl.ingest``: (file_name, md5) skip check plus merge upsert),
-watermarked tumbling windows matching the batch plan, built-in session
-windows matching gap-and-island, and the applyInPandasWithState
-sessionizer holding state across separate runs of the same
-checkpointed query.
+(``etl.ingest``: (file_name, md5) skip check plus merge upsert), the
+stream-stream interval join (inner and left outer) matching its batch
+plan, watermarked stream dedup, the s6 foreachBatch leaderboard and the
+s9 incremental sessionization.
 """
 
 from __future__ import annotations
@@ -13,19 +12,12 @@ from __future__ import annotations
 import datetime as dt
 import hashlib
 
-import pytest
-
 from pyspark.sql import functions as F
 
 from calaveras_uniteus_etl_spark.config import ETLConfig, PHIConfig
 from calaveras_uniteus_etl_spark.etl import ingest
 from calaveras_uniteus_etl_spark.schema import TABLE_SCHEMAS
 from calaveras_uniteus_etl_spark.sources.discovery import TaskStatus
-from calaveras_uniteus_etl_spark.streaming import (
-    session_window_agg,
-    sessionize_with_state,
-    windowed_agg,
-)
 from calaveras_uniteus_etl_spark.warehouse import Warehouse
 
 UTC = dt.timezone.utc
@@ -86,118 +78,6 @@ def test_stream_ingest_exactly_once_with_upsert(spark, tmp_path):
         _phi(k): v and _phi(v)
         for k, v in {"p1": "Ann", "p2": "Bea", "p3": "Cal", "p4": None}.items()
     }
-
-
-def _events_df(spark, rows):
-    return spark.createDataFrame(
-        [(i, ts, uid, et, float(v)) for i, (ts, uid, et, v) in enumerate(rows)],
-        "event_id long, ts timestamp, user_id long, event_type string, value double",
-    )
-
-
-@pytest.fixture()
-def small_events(spark):
-    t0 = dt.datetime(2024, 3, 1, 0, 30, tzinfo=UTC)
-    rows = []
-    for h in range(0, 48, 2):  # every 2h over 2 days, 2 users, 2 types
-        ts = t0 + dt.timedelta(hours=h)
-        rows.append((ts, 1, "click", 1.5))
-        rows.append((ts + dt.timedelta(minutes=10), 2, "view", 2.25))
-    return _events_df(spark, rows)
-
-
-def test_windowed_agg_stream_matches_batch(spark, small_events, tmp_path):
-    src = str(tmp_path / "events_parquet")
-    small_events.write.parquet(src)
-
-    batch = {
-        (r["window_start"], r["event_type"]): (r["n_events"], r["sum_value"])
-        for r in windowed_agg(small_events).collect()
-    }
-
-    stream = spark.readStream.schema(small_events.schema).parquet(src)
-    q = (
-        windowed_agg(stream)
-        .writeStream.format("memory")
-        .queryName("win_out")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    streamed = {
-        (r["window_start"], r["event_type"]): (r["n_events"], r["sum_value"])
-        for r in spark.sql("SELECT * FROM win_out").collect()
-    }
-    assert streamed == batch and len(batch) > 0
-
-
-def test_session_window_matches_gap_and_island(spark, small_events):
-    # gap-and-island reference implementation (same as s2_sessionization)
-    from pyspark.sql.window import Window
-
-    order = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap_us = F.unix_micros(F.col("ts")) - F.unix_micros(F.lag("ts").over(order))
-    sess_counts = (
-        small_events.withColumn(
-            "new_s",
-            F.when(gap_us.isNull() | (gap_us > 6 * 3600 * 1_000_000), 1).otherwise(0),
-        )
-        .groupBy("user_id")
-        .agg(F.sum("new_s").alias("n_sessions"))
-    )
-    expect = {r["user_id"]: r["n_sessions"] for r in sess_counts.collect()}
-
-    got_rows = session_window_agg(small_events).collect()
-    got: dict[int, int] = {}
-    for r in got_rows:
-        got[r["user_id"]] = got.get(r["user_id"], 0) + 1
-    assert got == expect
-    # every event accounted for
-    assert sum(r["n_events"] for r in got_rows) == small_events.count()
-
-
-def test_sessionize_with_state_across_runs(spark, tmp_path):
-    src = tmp_path / "stream_src"
-    src.mkdir()
-    sink = str(tmp_path / "sessions_out")
-    ckpt = str(tmp_path / "sess_ckpt")
-    t0 = dt.datetime(2024, 3, 1, 8, 0, tzinfo=UTC)
-
-    def run_once():
-        stream = spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, event_type string, value double"
-        ).parquet(str(src))
-        q = (
-            sessionize_with_state(stream)
-            .writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    # run 1: one user, two events 1h apart — session stays open, nothing emitted
-    _events_df(spark, [(t0, 7, "click", 1.0), (t0 + dt.timedelta(hours=1), 7, "click", 1.0)]) \
-        .coalesce(1).write.mode("append").parquet(str(src))
-    run_once()
-    spark_read = lambda: spark.read.schema(
-        "user_id long, session_start timestamp, session_end timestamp, n_events long"
-    ).parquet(sink)
-    assert spark_read().count() == 0
-
-    # run 2: an event 20h later closes the run-1 session (state survived
-    # the restart via the checkpoint) and is emitted exactly once
-    _events_df(spark, [(t0 + dt.timedelta(hours=21), 7, "click", 1.0)]) \
-        .coalesce(1).write.mode("append").parquet(str(src))
-    run_once()
-    rows = spark_read().collect()
-    assert len(rows) == 1
-    r = rows[0]
-    assert r["user_id"] == 7 and r["n_events"] == 2
-    assert (r["session_end"] - r["session_start"]) == dt.timedelta(hours=1)
 
 
 def test_stream_stream_interval_join_matches_batch(spark, tmp_path):
@@ -311,79 +191,6 @@ def test_interval_join_rejects_ambiguous_extra(spark):
     assert [(x.payload, x.r_payload) for x in out] == [("a", "b")]
 
 
-def test_watermark_drops_late_rows_across_triggers(spark, tmp_path):
-    """Late-data semantics, not just parity: a row arriving in a later
-    trigger with event time older than (max seen - watermark) must be
-    DROPPED from the append-mode windowed aggregate, while a second
-    batch's on-time rows still emit. Two availableNow runs over one
-    checkpoint make the watermark actually advance between arrivals —
-    a single-batch test can never exercise eviction. The sink is a
-    parquet directory (memory sinks cannot recover a checkpoint), so
-    the cumulative output also proves each window emits exactly once.
-    """
-    import datetime as dt
-
-    from calaveras_uniteus_etl_spark.streaming.windows import windowed_agg
-
-    src = tmp_path / "late_src"
-    src.mkdir()
-    ckpt = str(tmp_path / "late_ckpt")
-    out_dir = str(tmp_path / "late_out")
-    schema = "event_id long, ts timestamp, event_type string, value double"
-    t0 = dt.datetime(2024, 5, 1, 0, 0)
-
-    def run_trigger():
-        stream = spark.readStream.schema(schema).parquet(str(src))
-        q = (
-            windowed_agg(stream, window="1 hour", watermark="1 hour")
-            .writeStream.format("parquet")
-            .outputMode("append")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return sorted(
-            (r["window_start"], r["event_type"], r["n_events"])
-            for r in spark.read.parquet(out_dir).collect()
-        )
-
-    # Trigger 1: events up to t0+10h. Watermark after this batch is
-    # 10:00 - 1h = 09:00, so windows ending <= 09:00 are final.
-    spark.createDataFrame(
-        [
-            (1, t0 + dt.timedelta(hours=1), "click", 1.0),
-            (2, t0 + dt.timedelta(hours=1, minutes=30), "click", 1.0),
-            (3, t0 + dt.timedelta(hours=10), "view", 1.0),
-        ],
-        schema,
-    ).write.mode("append").parquet(str(src))
-    out1 = run_trigger()
-    # the 01:00 window is final (ends 02:00 <= 09:00 watermark) → emitted
-    assert (t0 + dt.timedelta(hours=1), "click", 2) in out1
-
-    # Trigger 2: one LATE row into the already-finalized 01:00 window
-    # (event time 01:45 < 09:00 watermark) and one on-time row that
-    # pushes the clock forward so the 10:00 view window finalizes.
-    spark.createDataFrame(
-        [
-            (4, t0 + dt.timedelta(hours=1, minutes=45), "click", 1.0),
-            (5, t0 + dt.timedelta(hours=20), "view", 1.0),
-        ],
-        schema,
-    ).write.mode("append").parquet(str(src))
-    out2 = run_trigger()
-
-    # The late click was dropped: the 01:00 window still shows exactly
-    # one emission with n=2 (no re-emit, no n=1/n=3 sibling)...
-    clicks = [r for r in out2 if r[0] == t0 + dt.timedelta(hours=1)]
-    assert clicks == [(t0 + dt.timedelta(hours=1), "click", 2)]
-    # ...and the on-time 10:00 view emitted exactly once.
-    views10 = [r for r in out2 if r[0] == t0 + dt.timedelta(hours=10)]
-    assert views10 == [(t0 + dt.timedelta(hours=10), "view", 1)]
-
-
 def test_s6_leaderboard_foreachbatch_matches_batch(spark, tmp_path):
     """s6's serving pattern: windowed counts maintained by the stream,
     top-k re-ranked per trigger in foreachBatch. With availableNow over
@@ -449,81 +256,6 @@ def test_s6_leaderboard_foreachbatch_matches_batch(spark, tmp_path):
     )
     q.awaitTermination()
     assert out["rows"] == expect
-
-
-def test_ewma_with_state_matches_batch_twin(spark, tmp_path):
-    """Two-trigger availableNow run of the stateful EWMA operator must
-    end bit-identical to the batch-twin window plan over the union of
-    both batches — including a user who only crosses the depth-8 gate
-    because state carried their first batch's purchases across the
-    restart. Non-purchase events must not perturb the average."""
-    from calaveras_uniteus_etl_spark.plans import REGISTRY
-    from calaveras_uniteus_etl_spark.streaming import ewma_with_state
-
-    t0 = dt.datetime(2024, 6, 1, 12, 0, tzinfo=UTC)
-    rows = []
-    for i in range(12):  # user 1: 12 purchases → emitted
-        rows.append((t0 + dt.timedelta(hours=i), 1, "purchase", 10.07 + 3.5 * i))
-        rows.append((t0 + dt.timedelta(hours=i, minutes=5), 1, "click", 999.99))
-    for i in range(10):  # user 2: 5 purchases in each batch → gate
-        et = "purchase" if i % 2 == 0 else "view"
-        rows.append((t0 + dt.timedelta(hours=i), 2, et, 250.01 + i))
-        rows.append((t0 + dt.timedelta(hours=24 + i), 2, et, 17.5 * (i + 1)))
-    for i in range(3):  # user 3: under the gate forever → never emitted
-        rows.append((t0 + dt.timedelta(hours=i), 3, "purchase", 5.25))
-    all_events = _events_df(spark, rows)
-
-    # batch twin over the full event set, via the registered query
-    batch_dir = tmp_path / "s7_batch"
-    all_events.write.parquet(str(batch_dir / "events.parquet"))
-    twin = {
-        r["user_id"]: (r["n_purchases"], r["last_value"], r["ewma"])
-        for r in REGISTRY["s7_ewma_drift"].fn(spark, str(batch_dir)).collect()
-    }
-    assert set(twin) == {1, 2}
-
-    # streaming: same events split at the 24h mark, two restarts on one
-    # checkpoint so user 2's gate crossing depends on persisted state
-    src = tmp_path / "ewma_src"
-    src.mkdir()
-    sink = str(tmp_path / "ewma_out")
-    ckpt = str(tmp_path / "ewma_ckpt")
-    cut = t0 + dt.timedelta(hours=24)
-
-    def run_once():
-        stream = spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, event_type string, value double"
-        ).parquet(str(src))
-        q = (
-            ewma_with_state(stream)
-            .writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    all_events.filter(F.col("ts") < cut).coalesce(1).write.mode("append").parquet(
-        str(src)
-    )
-    run_once()
-    all_events.filter(F.col("ts") >= cut).coalesce(1).write.mode("append").parquet(
-        str(src)
-    )
-    run_once()
-
-    out = spark.read.schema(
-        "user_id long, n_purchases long, last_value double, ewma double"
-    ).parquet(sink)
-    # last emission per user = the state after all events
-    final = {
-        r["user_id"]: (r["n_purchases"], r["last_value"], r["ewma"])
-        for r in sorted(out.collect(), key=lambda r: r["n_purchases"])
-    }
-    assert 3 not in final  # never crossed the depth gate
-    assert final == twin  # bit-identical doubles, not approx
 
 
 def test_left_outer_interval_join_emits_orphans_after_watermark(spark, tmp_path):
