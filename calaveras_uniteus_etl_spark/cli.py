@@ -2,6 +2,10 @@
 entry points (SURVEY.md §3) without the HTTP app around them:
 
     python -m calaveras_uniteus_etl_spark ingest --input-dir D --warehouse W
+    python -m calaveras_uniteus_etl_spark sync --warehouse W --configure \
+        [--interval-minutes 60] [--disabled]
+    python -m calaveras_uniteus_etl_spark sync --input-dir D --warehouse W \
+        [--once | --max-ticks N] [--poll-seconds 60]
     python -m calaveras_uniteus_etl_spark report --name status_distribution \
         --table referrals --warehouse W [--start-date ...] [--chart]
     python -m calaveras_uniteus_etl_spark query --warehouse W \

@@ -14,8 +14,10 @@ The Spark re-expression of the reference's ETL job lifecycle
 - job/metadata/data-quality bookkeeping are ordinary appended tables,
   but like the reference's row operations they stay on the driver: the
   skip check scans ``etl_metadata`` with pyarrow and each append writes
-  one small parquet file with pyarrow, so neither runs a Spark job; the
-  rows and the merges go live in one warehouse commit (``Warehouse.job``)
+  one small parquet file with pyarrow, so neither runs a Spark job. The
+  skip check, the merges and the rows run under one warehouse job's
+  lock and go live in its one commit (``Warehouse.job``), so a job that
+  waited for another skips the files that one loaded
 
 Per-file pipeline: read (A1) → schema-validate (§1.4, critical → FAIL
 the file) → clean B1-B4 → one projection onto the declared row (cast,
@@ -273,22 +275,21 @@ def ingest(
         selected_files=selected_files,
         mappings=mappings,
     )
-    if config.skip_processed:
-        processed = _processed_subset(wh, [(t.file_name, t.file_hash) for t in tasks])
-        for t in tasks:
-            if (t.file_name, t.file_hash) in processed:
-                t.status = TaskStatus.SKIPPED
-    if config.latest_file_only:
-        tasks = latest_only(tasks)
-
-    report = IngestReport(job_id=job_id, tasks=tasks)
-    by_table: dict[str, list[FileProcessingTask]] = {}
-    for task in sorted(tasks, key=lambda t: (t.file_date, t.file_name)):
-        if task.status != TaskStatus.SKIPPED:
-            by_table.setdefault(task.table_name, []).append(task)
     # one commit: the merges and the three row sets go live together, so
     # a crash before it reloads the files on the next run and logs them once
     with wh.job():
+        if config.skip_processed:
+            processed = _processed_subset(wh, [(t.file_name, t.file_hash) for t in tasks])
+            for t in tasks:
+                if (t.file_name, t.file_hash) in processed:
+                    t.status = TaskStatus.SKIPPED
+        if config.latest_file_only:
+            tasks = latest_only(tasks)
+        report = IngestReport(job_id=job_id, tasks=tasks)
+        by_table: dict[str, list[FileProcessingTask]] = {}
+        for task in sorted(tasks, key=lambda t: (t.file_date, t.file_name)):
+            if task.status != TaskStatus.SKIPPED:
+                by_table.setdefault(task.table_name, []).append(task)
         if by_table:
             with ThreadPoolExecutor(min(INGEST_WORKERS, len(by_table))) as pool:
                 # each worker starts from this thread's job group, description and tags

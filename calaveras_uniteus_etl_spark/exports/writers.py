@@ -28,17 +28,21 @@ def _iter_capped(df: DataFrame, cap: int):
         n += 1
 
 
+def _write_csv(df: DataFrame, f, cap: int) -> int:
+    """Write ``df``'s header and its first ``cap`` rows as CSV to ``f``."""
+    w = csv.writer(f)
+    w.writerow(df.columns)
+    n = 0
+    for row in _iter_capped(df, cap):
+        w.writerow([row[c] for c in df.columns])
+        n += 1
+    return n
+
+
 def export_single_csv(df: DataFrame, path: str, cap: int = SINGLE_FILE_ROW_CAP) -> int:
     """One local CSV file (reference per-table export, app.py:2283-2324)."""
-    cols = df.columns
     with open(path, "w", newline="", encoding="utf-8") as f:
-        w = csv.writer(f)
-        w.writerow(cols)
-        n = 0
-        for row in _iter_capped(df, cap):
-            w.writerow([row[c] for c in cols])
-            n += 1
-    return n
+        return _write_csv(df, f, cap)
 
 
 def export_zip(tables: dict[str, DataFrame], path: str, cap: int = SINGLE_FILE_ROW_CAP) -> dict[str, int]:
@@ -47,14 +51,8 @@ def export_zip(tables: dict[str, DataFrame], path: str, cap: int = SINGLE_FILE_R
     with zipfile.ZipFile(path, "w", zipfile.ZIP_DEFLATED) as z:
         for name, df in tables.items():
             buf = io.StringIO()
-            w = csv.writer(buf)
-            w.writerow(df.columns)
-            n = 0
-            for row in _iter_capped(df, cap):
-                w.writerow([row[c] for c in df.columns])
-                n += 1
+            counts[name] = _write_csv(df, buf, cap)
             z.writestr(f"{name}.csv", buf.getvalue())
-            counts[name] = n
     return counts
 
 

@@ -1,10 +1,10 @@
-"""SparkSession factory tuned for the analytics engine.
+"""SparkSession factory for the analytics engine.
 
-Defaults target local[N] testing but every knob is chosen for a large
-cluster: AQE on (runtime re-planning, skew-join splitting, partition
-coalescing), broadcast threshold generous enough for dimension tables,
-Arrow enabled for the few Pandas-UDF paths, and shuffle partitions
-sized by environment rather than hard-coded.
+It sets only confs that differ from Spark's defaults: shuffle
+partitions sized by environment rather than hard-coded, a broadcast
+threshold generous enough for dimension tables, Arrow for the few
+Pandas-UDF paths, nanosecond parquet timestamps, UTC, driver memory,
+no UI and no call-site capture.
 """
 
 from __future__ import annotations
@@ -74,7 +74,7 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or reuse) a SparkSession with scale-ready defaults.
+    """Build (or reuse) a SparkSession with the engine's confs.
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (or ``local[*]``)
     so the same code runs unchanged on a real cluster where ``master``
@@ -88,27 +88,17 @@ def get_spark(
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        # Adaptive execution: runtime partition coalescing, skew-join
-        # splitting, and dynamic join-strategy switching — the core of
-        # the 100 TB posture.
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # Dimension tables (region/nation/supplier/part/customer) are
         # broadcast-sized; let Catalyst pick broadcast-hash joins.
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
         # Arrow for the Pandas-UDF extension operators.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         # Parquet TIMESTAMP(NANOS) (events.ts) is otherwise unreadable:
         # ingest as epoch-nanos long, converted to a µs timestamp in the
         # table loader (plans/tables.py).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.parquet.enableVectorizedReader", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        # Keep partition files readable at scale without tiny-file storms.
-        .config("spark.sql.files.maxPartitionBytes", "128m")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         # PySpark 4 wraps every DataFrame/Column API call to capture

@@ -6,12 +6,15 @@ passed ``next_run`` — stamps ``last_run``/``next_run`` BEFORE syncing
 (so hours of downtime produce exactly ONE catch-up run) and then pulls
 files + runs the ETL (/root/reference/core/app.py:221-310; the config
 endpoints at core/app.py:1569-1648). In this engine the same contract
-is a CLI loop: ``cli.py sync --loop`` polls the identical single-row
-warehouse table and each due tick drives ``etl.ingest``, whose
+is a CLI loop: ``cli sync`` without ``--once`` polls the identical
+single-row warehouse table, for at most ``--max-ticks`` ticks when
+given, and each due tick drives ``etl.ingest``, whose
 (file_name, md5) skip check in ``etl_metadata`` makes re-runs
 idempotent. The config row is read and written on the driver with
 pyarrow (``Warehouse.read_rows``/``write_rows``), so a tick runs Spark
-jobs only for the table merges of the files it loads.
+jobs only for the table merges of the files it loads. A tick stamps the
+row before its ingest job, on its own thread, so it never waits for
+that job's warehouse lock.
 
 The clock is injectable everywhere — ticks take ``now`` and the loop
 takes ``clock``/``sleep`` — so scheduling decisions are deterministic

@@ -3,18 +3,20 @@ reference's SQLite data DB (reference core/database.py).
 
 Table files live in immutable versions ``_versions/<table>/<id>/``. A
 commit ``_commits/c<N>/`` links every table to one version, and one
-atomic replace of the ``_head`` link makes it live, under a ``flock`` on
-``_lock`` that writers in every process take. ``<table>`` is a fixed
-link ``_head/<table>``, so ``<table>/*.parquet`` names the live files. A
-request reads every table ``at`` one ``head()``, so it never mixes two
-loads, as under the reference's WAL mode. Writes in ``job()`` stage
-versions that its reads see and commit once at its end, or not at all;
-other writes commit at once. A commit keeps the versions the last
-RETAINED_VERSIONS + 1 commits name and those still staged (each holds a
-shared ``flock`` until its commit), and deletes the rest. A version is
-flat, with no partition directories, and each of its data files stores
-its Spark schema in the footer. Before the first commit every table is
-absent; no layout from before commits is read or adopted.
+atomic replace of the ``_head`` link makes it live. ``<table>`` is a
+fixed link ``_head/<table>``, so ``<table>/*.parquet`` names the live
+files. A request reads every table ``at`` one ``head()``, so it never
+mixes two loads, as under the reference's WAL mode: one writer at a
+time, and readers take no lock. A writer holds a ``flock`` on ``_lock``,
+which writers in every process take, from its first read to its
+commit: ``job()`` holds it for its block, stages the versions its reads
+see and commits them once at its end, or not at all; a write outside a
+job is a job of one write. So a one-off commit waits while a job runs.
+A commit keeps the versions the last RETAINED_VERSIONS + 1 commits name
+and deletes the rest. A version is flat, with no partition
+directories, and each of its data files stores its Spark schema in the
+footer. Before the first commit every table is absent; no layout from
+before commits is read or adopted.
 
 ``write`` fills a version by a Spark job (data tables); ``write_rows``
 writes driver-held rows (bookkeeping, sync config, SFTP listings) as one
@@ -143,12 +145,11 @@ class Warehouse:
         data = pa.Table.from_arrays(
             [pa.array(c, type=f.type) for c, f in zip(columns, arrow)], schema=arrow
         )
-        if mode == "append":
-            data = pa.concat_tables([self.read_rows(table, schema), data])
-        data = data.replace_schema_metadata({_SPARK_SCHEMA_KEY: schema.json()})
 
         def fill(version: str) -> None:
-            pq.write_table(data, os.path.join(version, f"part-{uuid.uuid4().hex}.parquet"))
+            out = pa.concat_tables([self.read_rows(table, schema), data]) if mode == "append" else data
+            out = out.replace_schema_metadata({_SPARK_SCHEMA_KEY: schema.json()})
+            pq.write_table(out, os.path.join(version, f"part-{uuid.uuid4().hex}.parquet"))
 
         self._stage(table, fill)
 
@@ -163,17 +164,24 @@ class Warehouse:
 
     @contextmanager
     def job(self):
-        """Stage every write of the block and commit them together at its
-        end; an exception commits none of them."""
-        self._staged, self._locks = {}, {}
-        try:
+        """Hold ``_lock`` for the block, stage its writes and commit them
+        together at its end; an exception commits none of them. One
+        writer at a time: a job, or a write outside one (a job of one
+        write), waits while another Warehouse runs a job; readers take no
+        lock. A job opened on this Warehouse while its job runs, from any
+        thread, joins that job."""
+        if self._staged is not None:
             yield
-            if self._staged:
-                self._commit(self._staged)
-        finally:
-            for lock in self._locks.values():
-                os.close(lock)
-            self._staged = None
+            return
+        with open(os.path.join(self.root, "_lock"), "a") as lock:
+            fcntl.flock(lock, fcntl.LOCK_EX)
+            self._staged = {}
+            try:
+                yield
+                if self._staged:
+                    self._commit(self._staged)
+            finally:
+                self._staged = None
 
     def _version(self, table: str, at: str | None = None) -> str | None:
         """The directory ``table`` reads from: the version this job staged,
@@ -185,56 +193,38 @@ class Warehouse:
         path = commit and os.path.join(commit, table)
         return os.path.realpath(path) if path and os.path.isdir(path) else None
 
-    @contextmanager
-    def _locked(self):
-        with open(os.path.join(self.root, "_lock"), "a") as lock:
-            fcntl.flock(lock, fcntl.LOCK_EX)
-            yield
-
     def _stage(self, table: str, fill) -> None:
-        """Fill a new version of ``table``; stage it inside a job, else commit it."""
-        version = os.path.join(self.root, "_versions", table, uuid.uuid4().hex)
-        with self._locked():  # so no prune sees it unlocked
+        """Fill a new version of ``table`` and stage it in the running job,
+        or in a job of its own; a version it supersedes goes at the prune."""
+        with self.job():
+            version = os.path.join(self.root, "_versions", table, uuid.uuid4().hex)
             os.makedirs(version)
-            lock = os.open(version, os.O_RDONLY)
-            fcntl.flock(lock, fcntl.LOCK_SH)
-        if self._staged is not None:
-            self._locks[version] = lock  # released after the job's commit
             fill(version)
-            superseded = self._staged.get(table)
             self._staged[table] = version
-            if superseded:  # no commit will name it: the job's own prune may delete it
-                os.close(self._locks.pop(superseded))
-            return
-        try:
-            fill(version)
-            self._commit({table: version})
-        finally:
-            os.close(lock)
 
     def _commit(self, versions: dict[str, str]) -> None:
         """Make ``versions`` (table -> version directory) live beside the
         head's other tables by one replace of ``_head``, then prune. A crash
-        leaves its temporary links in the commit, which the next one deletes."""
-        with self._locked():
-            head = self.head()
-            n = int(os.path.basename(head)[1:]) + 1 if head else 0
-            tables = {**(_links(head) if head else {}), **versions}
-            commit = os.path.join(self.root, "_commits", f"c{n}")
-            shutil.rmtree(commit, ignore_errors=True)  # left by a crash before its head replace
-            os.makedirs(commit)
-            for table, version in tables.items():
-                os.symlink(os.path.relpath(version, commit), os.path.join(commit, table))
-            os.symlink(os.path.relpath(commit, self.root), os.path.join(commit, "._head"))
-            os.replace(os.path.join(commit, "._head"), os.path.join(self.root, "_head"))
-            for table in tables:  # the fixed links; replacing one changes nothing a reader sees
-                os.symlink(os.path.join("_head", table), os.path.join(commit, "." + table))
-                os.replace(os.path.join(commit, "." + table), os.path.join(self.root, table))
-            self._prune(n)
+        leaves its temporary links in the commit, which the next one deletes.
+        The caller holds ``_lock``."""
+        head = self.head()
+        n = int(os.path.basename(head)[1:]) + 1 if head else 0
+        tables = {**(_links(head) if head else {}), **versions}
+        commit = os.path.join(self.root, "_commits", f"c{n}")
+        shutil.rmtree(commit, ignore_errors=True)  # left by a crash before its head replace
+        os.makedirs(commit)
+        for table, version in tables.items():
+            os.symlink(os.path.relpath(version, commit), os.path.join(commit, table))
+        os.symlink(os.path.relpath(commit, self.root), os.path.join(commit, "._head"))
+        os.replace(os.path.join(commit, "._head"), os.path.join(self.root, "_head"))
+        for table in tables:  # the fixed links; replacing one changes nothing a reader sees
+            os.symlink(os.path.join("_head", table), os.path.join(commit, "." + table))
+            os.replace(os.path.join(commit, "." + table), os.path.join(self.root, table))
+        self._prune(n)
 
     def _prune(self, n: int) -> None:
         """Delete the commits before the last RETAINED_VERSIONS + 1 up to
-        ``c<n>``, and every version none of those names and no writer stages."""
+        ``c<n>``, and every version none of those names."""
         keep = set()
         for commit in glob.glob(os.path.join(self.root, "_commits", "c*")):
             if int(os.path.basename(commit)[1:]) < n - RETAINED_VERSIONS:
@@ -242,11 +232,4 @@ class Warehouse:
             else:
                 keep |= set(_links(commit).values())
         for version in set(glob.glob(os.path.join(self.root, "_versions", "*", "*"))) - keep:
-            lock = os.open(version, os.O_RDONLY)
-            try:
-                fcntl.flock(lock, fcntl.LOCK_EX | fcntl.LOCK_NB)  # fails while a writer stages it
-                shutil.rmtree(version)
-            except BlockingIOError:
-                pass
-            finally:
-                os.close(lock)
+            shutil.rmtree(version)

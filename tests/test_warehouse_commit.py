@@ -18,8 +18,10 @@ from __future__ import annotations
 
 import glob
 import os
+import subprocess
 import sys
 import threading
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -28,9 +30,11 @@ from pyspark.sql.types import LongType, StructField, StructType
 from calaveras_uniteus_etl_spark import cli, etl
 from calaveras_uniteus_etl_spark import warehouse as W
 from calaveras_uniteus_etl_spark.config import ETLConfig, PHIConfig
+from calaveras_uniteus_etl_spark.schema import TABLE_SCHEMAS
 from calaveras_uniteus_etl_spark.warehouse import RETAINED_VERSIONS, Warehouse
 
 N = StructType([StructField("n", LongType())])
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _rows(df) -> list[tuple]:
@@ -211,24 +215,102 @@ def test_two_warehouses_commit_different_tables_at_once(tmp_path):
     assert os.path.basename(wh.head()) == f"c{2 * rounds - 1}"  # no two commits took one number
 
 
-def test_a_job_commits_once_beside_a_concurrent_commit(spark, tmp_path):
-    """A job's staged versions survive the prunes of other writers'
-    commits, and its one commit keeps the tables they committed. The
-    version its second write superseded is pruned with that commit."""
+def test_a_job_commits_once_beside_a_concurrent_commit(tmp_path):
+    """A writer that commits while a job runs, on another thread with its
+    own Warehouse, waits for the job's one commit and commits on top of
+    it, so every one of its commits keeps the job's rows. The version
+    the job's second write superseded is pruned with the job's commit."""
     root = str(tmp_path / "wh")
-    wh, other = Warehouse(spark, root), Warehouse(spark, root)
+    wh, other = Warehouse(None, root), Warehouse(None, root)
     wh.write_rows("a", [(0,)], N)
+    errors: list[str] = []
+
+    def writer() -> None:
+        try:
+            for n in range(RETAINED_VERSIONS + 2):
+                other.write_rows("b", [(n,)], N)
+        except Exception as e:  # noqa: BLE001 - every error fails the test
+            errors.append(f"{type(e).__name__}: {e}")
+
+    second = threading.Thread(target=writer, daemon=True)
     with wh.job():
         wh.write_rows("a", [(1,)], N, mode="append")
+        superseded = wh.path("a")
         wh.write_rows("a", [(2,)], N, mode="append")  # reads its own staged version
-        for n in range(RETAINED_VERSIONS + 2):
-            other.write_rows("b", [(n,)], N)
+        staged = wh.path("a")
+        second.start()
+        second.join(timeout=1)
+        assert second.is_alive()  # waits for the job's lock
         assert other.read_rows("a", N)["n"].to_pylist() == [0]  # not live yet
-        head = wh.head()
-    assert int(os.path.basename(wh.head())[1:]) == int(os.path.basename(head)[1:]) + 1
+        assert os.path.basename(wh.head()) == "c0"
+    second.join(timeout=60)
+    assert not second.is_alive() and not errors, errors
+    # c1 is the job's commit; the writer's commits follow it, each on top of it
+    assert os.path.basename(wh.head()) == f"c{RETAINED_VERSIONS + 3}"
+    assert {W._links(c)["a"] for c in _commits(root)} == {staged}
     assert wh.read_rows("a", N)["n"].to_pylist() == [0, 1, 2]
     assert wh.read_rows("b", N)["n"].to_pylist() == [RETAINED_VERSIONS + 1]
-    assert len(_on_disk(root, "a")) == 2  # the pre-job version, still retained, and the job's
+    assert not os.path.exists(superseded)
+    assert _on_disk(root, "a") == [os.path.basename(staged)]
+
+
+# One job in its own process: append ``n`` to table ``t`` of the warehouse
+# at ``root``, touching ``entered`` before the job opens and ``appended``
+# once its append is staged. With ``wait_for`` it holds the job open until
+# that file exists, for at most two seconds.
+_JOB = """
+import os, sys, time
+from pyspark.sql.types import LongType, StructField, StructType
+from calaveras_uniteus_etl_spark.warehouse import Warehouse
+
+root, n, entered, appended, wait_for = sys.argv[1:]
+wh = Warehouse(None, root)
+open(entered, "w").close()
+with wh.job():
+    wh.write_rows("t", [(int(n),)], StructType([StructField("n", LongType())]), mode="append")
+    open(appended, "w").close()
+    deadline = time.monotonic() + 2
+    while wait_for != "-" and not os.path.exists(wait_for) and time.monotonic() < deadline:
+        time.sleep(0.01)
+"""
+
+
+def _wait_for(path: str, proc) -> None:
+    deadline = time.monotonic() + 60
+    while not os.path.exists(path):
+        assert proc.poll() is None and time.monotonic() < deadline, proc.communicate()
+        time.sleep(0.01)
+
+
+def test_overlapping_jobs_in_two_processes_keep_both_appends(tmp_path):
+    """Two processes each append one row to one table in a job, the
+    second job opened while the first is open. The second waits for the
+    first job's commit and appends on top of it, so both rows are live;
+    a second job that read the head before that commit would drop the
+    first job's row from its own."""
+    root, flag = str(tmp_path / "wh"), str(tmp_path / "flag")
+    Warehouse(None, root).write_rows("t", [(0,)], N)
+    env = {**os.environ, "PYTHONPATH": os.pathsep.join(filter(None, [_REPO, os.environ.get("PYTHONPATH")]))}
+
+    def job(n: int, wait_for: str):
+        args = [root, str(n), f"{flag}.entered{n}", f"{flag}.appended{n}", wait_for]
+        return subprocess.Popen([sys.executable, "-c", _JOB, *args], env=env, stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True)
+
+    first = job(1, f"{flag}.appended2")
+    try:
+        _wait_for(f"{flag}.appended1", first)
+        second = job(2, "-")
+        try:
+            _wait_for(f"{flag}.entered2", second)
+            outs = [p.communicate(timeout=120) for p in (first, second)]
+        finally:
+            second.kill()
+    finally:
+        first.kill()
+    assert [p.returncode for p in (first, second)] == [0, 0], outs
+    wh = Warehouse(None, root)
+    assert sorted(wh.read_rows("t", N)["n"].to_pylist()) == [0, 1, 2]
+    assert os.path.basename(wh.head()) == "c2"
 
 
 PEOPLE = "person_id|first_name|people_created_at\n{}"
@@ -304,3 +386,68 @@ def test_reports_during_a_tick_see_pre_or_post_tick_counts(spark, tmp_path):
     bad = [s for s in seen if set(s.values()) not in ({4}, {7})]
     assert seen and not bad, bad[:5]
     assert request(requests[0]) == [[7, 7, 7, 7]]
+
+
+def test_overlapping_ingests_of_different_tables_keep_both_load_records(spark, tmp_path, monkeypatch):
+    """A second ingest, of a file of another table, starts while the first
+    holds its job open with its load record staged. It runs its skip check
+    after the first job's commit and merges onto it, so both files keep a
+    completed load record and both tables their rows, and a third ingest
+    over both inputs skips both files."""
+    input_dir = tmp_path / "input"
+    input_dir.mkdir()
+    _delivery(input_dir, "20240101", 0, 3)
+    cfg = ETLConfig(input_dir=str(input_dir), warehouse_dir=str(tmp_path / "wh"), phi=PHIConfig(enabled=False))
+    files = {"people": "people_20240101.txt", "cases": "cases_20240101.txt"}
+    first_appended, second_appended = threading.Event(), threading.Event()
+    second_locking, second_locked = threading.Event(), threading.Event()
+    append_metadata, flock = etl._append_metadata, W.fcntl.flock
+
+    def watched_flock(fd, op):
+        second = threading.current_thread().name == "second"
+        if second:
+            second_locking.set()
+        flock(fd, op)
+        if second:
+            second_locked.set()
+
+    def held_append_metadata(wh, report, *args):
+        append_metadata(wh, report, *args)
+        if threading.current_thread().name == "second":
+            second_appended.set()
+            return
+        first_appended.set()
+        # hold the job open until the second has staged its own load
+        # record, or has waited half a second for the warehouse lock
+        deadline = time.monotonic() + 120
+        while not second_appended.wait(0.05):
+            if second_locking.is_set() and not second_locked.wait(0.5):
+                break
+            assert time.monotonic() < deadline
+
+    monkeypatch.setattr(W.fcntl, "flock", watched_flock)
+    monkeypatch.setattr(etl, "_append_metadata", held_append_metadata)
+    reports, errors = {}, []
+
+    def ingest(table: str) -> None:
+        try:
+            reports[table] = etl.ingest(spark, cfg, selected_files={files[table]})
+        except Exception as e:  # noqa: BLE001 - every error fails the test
+            errors.append(f"{table}: {type(e).__name__}: {e}")
+            first_appended.set()
+
+    threads = [threading.Thread(target=ingest, args=(t,), name=n, daemon=True) for t, n in (("people", "first"), ("cases", "second"))]
+    threads[0].start()
+    assert first_appended.wait(300)
+    threads[1].start()
+    for t in threads:
+        t.join(timeout=300)
+    assert not any(t.is_alive() for t in threads) and not errors, errors
+    assert [len(reports[t].completed) for t in files] == [1, 1]
+
+    wh = Warehouse(spark, cfg.warehouse_dir)
+    log = wh.read_rows("etl_metadata", TABLE_SCHEMAS["etl_metadata"]).to_pylist()
+    assert sorted((r["file_name"], r["status"]) for r in log) == sorted((f, "completed") for f in files.values())
+    assert [wh.read(t).count() for t in files] == [3, 3]
+    again = etl.ingest(spark, cfg, selected_files=set(files.values()))
+    assert len(again.skipped) == 2 and not again.completed
